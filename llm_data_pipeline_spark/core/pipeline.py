@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from llm_data_pipeline_spark.core.config import PipelineConfig, step_output_dir
-from llm_data_pipeline_spark.core.stage import Stage
+from llm_data_pipeline_spark.core.stage import EXCEPTION_KEY, Stage
 from llm_data_pipeline_spark.functions.checkpoint import cut_lineage
 from llm_data_pipeline_spark.functions.localframe import local_df
 
@@ -251,6 +251,7 @@ def run_pipeline(
 
     for stage in selected:
         st = stage.run(spark, config)
+        cause = st.pop(EXCEPTION_KEY, None)
         all_stats[stage.name] = st
         ordered = {
             name: all_stats[name]
@@ -260,5 +261,7 @@ def run_pipeline(
         with open(stats_path, "w") as f:
             json.dump(ordered, f, indent=2, default=str)
         if st["status"] != "success":
-            raise RuntimeError(f"step {stage.name} failed: {st.get('error')}")
+            raise RuntimeError(
+                f"step {stage.name} failed: {st.get('error')}"
+            ) from cause
     return all_stats

@@ -6,14 +6,20 @@ transform, write parquet output, and emit the same stats-dict shape
 (input_count / output_count / duration_seconds / status).
 
 Spark-specific improvement (SURVEY.md §4.2(2)): the reference executed the
-dataset twice per step (count() then write). Here the row counts ride the
-write job itself via ``DataFrame.observe`` — one action per materialized
-output, zero extra passes.
+dataset twice per step (count() then write). Here the output row count rides
+the write job itself via ``DataFrame.observe``. The input count is still one
+extra Spark job per step: ``df_in.count()``, answered from parquet footer
+statistics without a data scan.
+
+A failed step records its error string and full traceback in its stats and
+hands the exception itself to ``run_pipeline`` under ``EXCEPTION_KEY``, which
+the runner pops (it is not JSON) and chains as the cause of its error.
 """
 
 from __future__ import annotations
 
 import time
+import traceback
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -21,6 +27,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from llm_data_pipeline_spark.core.config import PipelineConfig, step_output_dir
+
+EXCEPTION_KEY = "_exception"
 
 
 def write_parquet_counted(
@@ -99,5 +107,7 @@ class Stage:
         except Exception as e:  # noqa: BLE001 - stats must record failures
             stats["status"] = "failed"
             stats["error"] = f"{type(e).__name__}: {e}"
+            stats["traceback"] = traceback.format_exc()
+            stats[EXCEPTION_KEY] = e
         stats["duration_seconds"] = round(time.time() - t0, 3)
         return stats

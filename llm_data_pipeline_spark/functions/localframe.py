@@ -23,7 +23,13 @@ def local_df(
     spark: SparkSession, rows, schema, rows_per_slice: int = 50_000
 ) -> DataFrame:
     """``spark.createDataFrame(rows, schema)`` with a bounded slice count
-    (ceil(len/rows_per_slice), min 1) instead of defaultParallelism."""
+    (ceil(len/rows_per_slice), min 1) instead of defaultParallelism.
+
+    ``rows`` must hold plain Python scalars (int / float / str / bool /
+    None, or lists of them). The rows travel as an RDD, which skips the
+    driver-side type coercion ``createDataFrame(list)`` applies, so a
+    Decimal, datetime or numpy scalar fails at executor deserialization
+    instead of at creation. Convert such values before calling."""
     rows = rows if isinstance(rows, list) else list(rows)
     if not rows:
         return spark.createDataFrame([], schema)

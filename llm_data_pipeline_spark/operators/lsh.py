@@ -250,7 +250,6 @@ def _propagation_components(
     edges: DataFrame,
     max_iterations: int,
     stats: dict | None = None,
-    pointer_jump: bool = True,
 ) -> DataFrame:
     """Min-label propagation with pointer jumping.
 
@@ -296,28 +295,21 @@ def _propagation_components(
                 F.col("component"), F.coalesce("nbr_component", "component")
             ).alias("component"),
         )
-        if pointer_jump:
-            # pointer jump: component := label(component). Labels are node
-            # ids, so the lookup is a self-join; a miss (root) keeps its
-            # own. (pointer_jump=False exists only for the bench's
-            # rounds-taken comparison — production always jumps.)
-            jump_src = stepped.select(
-                F.col("id").alias("jid"), F.col("component").alias("jcomp")
+        # pointer jump: component := label(component). Labels are node ids,
+        # so the lookup is a self-join; a miss (root) keeps its own.
+        jump_src = stepped.select(
+            F.col("id").alias("jid"), F.col("component").alias("jcomp")
+        )
+        updated = (
+            stepped.join(jump_src, stepped.component == jump_src.jid, "left")
+            .select(
+                "id",
+                F.least(
+                    F.col("component"), F.coalesce("jcomp", "component")
+                ).alias("component"),
             )
-            updated = (
-                stepped.join(
-                    jump_src, stepped.component == jump_src.jid, "left"
-                )
-                .select(
-                    "id",
-                    F.least(
-                        F.col("component"), F.coalesce("jcomp", "component")
-                    ).alias("component"),
-                )
-                .transform(cut_lineage, eager=False)
-            )
-        else:
-            updated = stepped.transform(cut_lineage, eager=False)
+            .transform(cut_lineage, eager=False)
+        )
         # convergence: any label lowered this round? (join against the
         # previous labels; both frames are checkpointed, so this is one
         # cheap job, not a lineage replay)
@@ -575,8 +567,8 @@ def band_index_counts(index_bands: DataFrame) -> DataFrame:
     """Per-bucket size table (bh, base_n) computed ONCE at index-build
     time — the companion artifact that keeps the DAILY cap decision
     increment-bounded (without it the incremental run re-counts every
-    base band row each day, which the bench's index_scale_check measured
-    as erasing the index's advantage)."""
+    base band row each day, which measurably erased the index's
+    advantage)."""
     return index_bands.groupBy("bh").agg(F.count("*").alias("base_n"))
 
 

@@ -306,6 +306,14 @@ def semantic_dedup_incremental(
     cluster partitions — the base is never re-scored, never re-shuffled
     beyond the cluster-keyed join (same contract as
     lsh.py:minhash_incremental_dedup's banded index).
+
+    Size assumption: the increment side of the pair join is always
+    broadcast (``F.broadcast``), because its lineage cut hides the size
+    statistics the planner would use. The increment's assigned rows, with
+    their embeddings, must therefore fit in driver and executor memory
+    under the broadcast limit — a daily increment, not a backfill. An
+    increment larger than that fails with a broadcast OOM instead of
+    falling back to a shuffle join; split it into several runs.
     """
     from llm_data_pipeline_spark.functions.checkpoint import cut_lineage
 

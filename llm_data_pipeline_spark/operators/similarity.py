@@ -269,8 +269,9 @@ def ann_geometry(n: int) -> dict:
 
     At 100 TB the codebooks are retrained per corpus snapshot on a
     deterministic sample (train_*_codebook) with exactly these shapes and
-    shipped as broadcast literals; bench.py asserts recall floors so a
-    geometry/corpus mismatch fails loudly instead of silently degrading.
+    shipped as broadcast literals; tests/test_quality_gates.py asserts
+    recall floors so a geometry/corpus mismatch fails loudly instead of
+    silently degrading.
     """
     import math
 

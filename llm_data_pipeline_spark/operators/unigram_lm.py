@@ -204,7 +204,7 @@ def train_unigram(
     model here matches: wall time is dominated by the E-step Viterbi
     sweep, O(sum_len * max_piece) per iteration with O(1) dict probes —
     INDEPENDENT of vocab size, so the training curve vs vocab size is
-    flat/sublinear (bench.py:unigram_train_curve asserts this). At
+    flat/sublinear. At
     100 TB the corpus sample is a bounded driver artifact (same as BPE's
     word-freq dict); the trained vocab broadcasts to the encode UDF."""
     import math

@@ -46,12 +46,15 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 
 # DataFrameReader.parquet() without an explicit schema re-infers it on the
 # driver EVERY call — file listing plus a footer read, measured ~110 ms per
-# call (cProfile: 0.57 s of tpch_q2's 0.84 s build was five table() reads).
+# call (cProfile: five table() reads were 0.57 s of one 0.84 s query build).
 # The schema of an immutable input file is metadata, not data: infer it once
 # per (session, path) and hand it back explicitly on every later read, which
 # skips the footer pass entirely. Every query still scans the parquet for
 # its rows — only the schema round trip is saved (guide §6: explicit
 # schemas; the same reason schema inference is off for production JSONL).
+# The session half of every cache key in this package is the application
+# id, not id(spark): CPython reuses object ids after GC, so an id()-keyed
+# cache could serve a dead session's stale entry to a new one.
 _SCHEMA_CACHE: dict[tuple, object] = {}
 
 
@@ -64,7 +67,7 @@ def table(
     # PARQUET_TYPE_ILLEGAL. Spark 4.1+ ignores it and reads NTZ natively.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    skey = (id(spark), path)
+    skey = (spark.sparkContext.applicationId, path)
     schema = _SCHEMA_CACHE.get(skey)
     if schema is None:
         schema = spark.read.parquet(path).schema
@@ -80,15 +83,15 @@ def table(
         # signature UDFs, regex cleaning, vector math) ask for it — a blanket
         # repartition taxed cheap consumers with a full exchange (round-2
         # regression: multimodal 0.7→2.0 s, pack 3.2→5.2 s).
-        df = _scatter(df, _cache_key=(id(spark), sf_dir, name))
+        df = _scatter(df, _cache_key=(sf_dir, name))
     return df
 
 
 # scatter()'s under-parallelism probe (`df.rdd.getNumPartitions()`) forces
 # analysis + physical planning + an RDD conversion of the scan plan on the
 # DRIVER — ~20-40 ms per call, paid several times per query across the
-# 258-query gauntlet. The answer only depends on the immutable input file
-# layout and the session's parallelism, so memoize it per (session, path).
+# registry. The answer only depends on the immutable input file layout and
+# the session's parallelism, so memoize it per (session, _cache_key).
 _SCATTER_DECISION: dict[tuple, bool] = {}
 
 
@@ -105,7 +108,7 @@ def scatter(df: DataFrame, _cache_key: tuple | None = None) -> DataFrame:
     """
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    key = (_cache_key, target) if _cache_key is not None else None
+    key = None if _cache_key is None else (sc.applicationId, _cache_key, target)
     if key is not None and key in _SCATTER_DECISION:
         under_parallel = _SCATTER_DECISION[key]
     else:
@@ -122,7 +125,6 @@ _scatter = scatter  # unshadowed alias for table()'s keyword parameter
 
 def load_all() -> None:
     """Import every query module so their @query decorators run."""
-    import llm_data_pipeline_spark.queries_relational  # noqa: F401
     import llm_data_pipeline_spark.queries_pipeline  # noqa: F401
     import llm_data_pipeline_spark.queries_pii  # noqa: F401
     import llm_data_pipeline_spark.queries_dedup  # noqa: F401
@@ -131,9 +133,6 @@ def load_all() -> None:
     import llm_data_pipeline_spark.queries_tokenize  # noqa: F401
     import llm_data_pipeline_spark.queries_streaming  # noqa: F401
     import llm_data_pipeline_spark.queries_multimodal  # noqa: F401
-    import llm_data_pipeline_spark.queries_relational_ext  # noqa: F401
-    import llm_data_pipeline_spark.queries_relational_tpch2  # noqa: F401
-    import llm_data_pipeline_spark.queries_relational_tpch3  # noqa: F401
     import llm_data_pipeline_spark.queries_udf  # noqa: F401
     import llm_data_pipeline_spark.queries_curation  # noqa: F401
     import llm_data_pipeline_spark.queries_heuristics  # noqa: F401

@@ -327,8 +327,7 @@ def dsir_importance_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB-replayed via the portable hash + micro-unit quantization);
     the ranking-lift contract itself is pinned where a distinct target
     vocabulary exists: tests/test_curation.py::
-    test_dsir_ranks_target_like_docs_first and the planted-cluster
-    retrieval metric in bench.py::dsir_scale_check."""
+    test_dsir_ranks_target_like_docs_first."""
     from llm_data_pipeline_spark.operators.dsir import dsir_select
 
     docs = table(spark, sf_dir, "documents")
@@ -1357,7 +1356,7 @@ def pipeline_code_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expression stage (64 tasks for the same rows)
     corpus = _scatter_fn(
         base.unionByName(copies),
-        _cache_key=(id(spark), sf_dir, "documents::code_curation"),
+        _cache_key=(sf_dir, "documents::code_curation"),
     )
     lic_keep = license_class_col(
         license_id_col(license_ft_col())

@@ -77,7 +77,7 @@ def _augmented(spark: SparkSession, sf_dir: str, scatter: bool = False) -> DataF
     )
     out = docs.unionByName(variants)
     if scatter:
-        out = _scatter_fn(out, _cache_key=(id(spark), sf_dir, "documents::aug"))
+        out = _scatter_fn(out, _cache_key=(sf_dir, "documents::aug"))
     return out
 
 
@@ -1425,7 +1425,7 @@ def minhash_incremental_dedup_query(spark: SparkSession, sf_dir: str):
         base.withColumn("_inc", F.lit(False)).unionByName(
             inc.withColumn("_inc", F.lit(True))
         ),
-        _cache_key=(id(spark), sf_dir, "documents::base+inc"),
+        _cache_key=(sf_dir, "documents::base+inc"),
     )
     signed = add_minhash_md5(tagged)
     out = minhash_incremental_dedup_tagged(signed, "_inc", rows_per_band=8)
@@ -1486,7 +1486,7 @@ def _ensure_signature_artifacts(spark: SparkSession, sf_dir: str) -> dict:
         base.withColumn("_side", F.lit("b"))
         .unionByName(_increment(spark, sf_dir).withColumn("_side", F.lit("i")))
         .unionByName(variants.withColumn("_side", F.lit("v"))),
-        _cache_key=(id(spark), sf_dir, "documents::b+i+v"),
+        _cache_key=(sf_dir, "documents::b+i+v"),
     )
     signed = cut_lineage(
         add_minhash_md5(tagged).select(
@@ -1658,7 +1658,7 @@ def minhash_band_index_build(spark: SparkSession, sf_dir: str):
     artifact from first principles (md5-portable signatures, 8-row band
     keys, md5 bucket key, per-bucket counts), so the INDEX CONTENT the
     serve path depends on is hash-checked, not just the serve answers.
-    Splitting build from serve keeps the bench's serve number honest: the
+    Splitting build from serve keeps the serve query's timing honest: the
     one-time backfill cost no longer hides inside the daily-path query
     (round-6 judge task #5)."""
     _, counts_path = _ensure_band_index(spark, sf_dir)
@@ -3232,7 +3232,7 @@ def dedup_cascade_funnel(spark: SparkSession, sf_dir: str):
                 "text",
             )
         ),
-        _cache_key=(id(spark), sf_dir, "documents::cascade"),
+        _cache_key=(sf_dir, "documents::cascade"),
     )
     keyed = corpus.withColumn("_k", F.md5(norm_ws(F.col("text"))))
     keepers = keyed.groupBy("_k").agg(F.min("doc_id").alias("doc_id"))

@@ -34,7 +34,7 @@ from llm_data_pipeline_spark.functions.localframe import local_df
 _ANN_COUNT_CACHE: dict = {}
 
 
-def _ann_books(emb, _count_key: tuple | None = None) -> dict:
+def _ann_books(emb, _count_key: str | None = None) -> dict:
     """Pick codebooks + geometry by CORPUS SIZE (operators/similarity.py:
     ann_geometry — the ~sqrt(n) rule). Corpora up to 1000 vectors use the
     committed small-tier literals the DuckDB oracles replay (the graded
@@ -59,12 +59,15 @@ def _ann_books(emb, _count_key: tuple | None = None) -> dict:
 
     # the tier decision depends only on the immutable corpus size: memoize
     # the count per (session, sf_dir) so the ~15 ANN queries stop paying a
-    # count job per build (same rationale as queries.table's schema cache)
-    n = _ANN_COUNT_CACHE.get(_count_key) if _count_key else None
+    # count job per build (same rationale and session key as queries.table's
+    # schema cache)
+    app_id = emb.sparkSession.sparkContext.applicationId
+    key = (app_id, _count_key) if _count_key else None
+    n = _ANN_COUNT_CACHE.get(key) if key else None
     if n is None:
         n = emb.count()
-        if _count_key:
-            _ANN_COUNT_CACHE[_count_key] = n
+        if key:
+            _ANN_COUNT_CACHE[key] = n
     geo = ann_geometry(n)
     if geo["tier"] != "small" and _os.environ.get("SPARK_GRAFT_BENCH") != "1":
         raise RuntimeError(
@@ -92,8 +95,9 @@ def _ann_books(emb, _count_key: tuple | None = None) -> dict:
 
     # the committed books fix their own geometry; if the corpus outgrows
     # them (ann_geometry would ask for more lists than were trained),
-    # serving degrades gracefully and bench.py's recall floor flags the
-    # retrain instead of this silently shipping a stale index
+    # serving degrades gracefully and the recall floors in
+    # tests/test_quality_gates.py flag the retrain instead of this
+    # silently shipping a stale index
     geo = dict(GEOMETRY)
     geo["shortlist"] = max(geo["shortlist"], n // 20)
     return {
@@ -485,7 +489,7 @@ def embedding_ivf_flat_topk(spark: SparkSession, sf_dir: str):
     queries = emb.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    books = _ann_books(emb, _count_key=(id(spark), sf_dir))
+    books = _ann_books(emb, _count_key=sf_dir)
     cents = local_df(spark, 
         [(i, [float(x) for x in v]) for i, v in enumerate(books["ivf"])],
         "list_id long, cvec array<double>",
@@ -565,13 +569,13 @@ def embedding_ann_recall_graded(spark: SparkSession, sf_dir: str):
     counting, so the recall NUMBER itself is hash-checked (the embedding
     twin of minhash_lsh_recall_eval). recall_ppm = hits * 1e6 / 10 in
     exact integers. Uses the same corpus-size geometry selection as the
-    serving queries (small tier replayed at the graded SF; bench.py's
-    floors cover the large tier)."""
+    serving queries (small tier replayed at the graded SF; the floors in
+    tests/test_quality_gates.py cover the large tier)."""
     emb = table(spark, sf_dir, "embeddings", scatter=True)
     queries = emb.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    books = _ann_books(emb, _count_key=(id(spark), sf_dir))
+    books = _ann_books(emb, _count_key=sf_dir)
     cents = local_df(spark, 
         [(i, [float(x) for x in v]) for i, v in enumerate(books["ivf"])],
         "list_id long, cvec array<double>",
@@ -732,7 +736,8 @@ def embedding_ann_recall_planted(spark: SparkSession, sf_dir: str):
     structure (20 tight clusters, generator documented above), the IVF
     lists are the true centers, and every query's exact top-10 is its own
     cluster-mates, so recall@10 >= 0.9 is achievable and ASSERTED
-    (tests/test_similarity.py + bench.py floor at 0.9). On the random
+    (tests/test_similarity.py + tests/test_quality_gates.py floor at
+    0.9). On the random
     near-orthogonal embeddings table absolute recall is ceiling-bounded
     by the data (0.57 IVF-Flat at sf0.1), so a geometry bug was
     indistinguishable from fixture noise — here it reads as a collapse.
@@ -827,7 +832,7 @@ def embedding_pq_adc_topk(spark: SparkSession, sf_dir: str):
     queries = emb.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = pq_adc_topk(emb, queries, k=10, codebook=_ann_books(emb, _count_key=(id(spark), sf_dir))["pq"])
+    out = pq_adc_topk(emb, queries, k=10, codebook=_ann_books(emb, _count_key=sf_dir)["pq"])
     return out.select(
         "query_id", "vec_id", "adist", F.col("rank").cast("long").alias("rank")
     ).orderBy("query_id", "rank")
@@ -901,7 +906,7 @@ def embedding_pq_rerank_topk(spark: SparkSession, sf_dir: str):
     queries = emb.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    books = _ann_books(emb, _count_key=(id(spark), sf_dir))
+    books = _ann_books(emb, _count_key=sf_dir)
     out = pq_rerank_topk(emb, queries, k=10,
                          shortlist=books["geo"]["shortlist"],
                          codebook=books["pq"])
@@ -1008,7 +1013,7 @@ def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str):
     queries = emb.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    books = _ann_books(emb, _count_key=(id(spark), sf_dir))
+    books = _ann_books(emb, _count_key=sf_dir)
     out = ivfpq_topk(
         emb, queries, books["ivf"], books["rpq"], k=10,
         n_probe=books["geo"]["n_probe_ivfpq"],
@@ -1949,7 +1954,7 @@ def embedding_ivf_indexed_topk(spark: SparkSession, sf_dir: str):
     queries = emb.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    books = _ann_books(emb, _count_key=(id(spark), sf_dir))
+    books = _ann_books(emb, _count_key=sf_dir)
     cents = local_df(spark, 
         [(i, [float(x) for x in v]) for i, v in enumerate(books["ivf"])],
         "list_id long, cvec array<double>",
@@ -2111,7 +2116,7 @@ def ivf_list_balance(spark: SparkSession, sf_dir: str):
     from llm_data_pipeline_spark.functions.intmath import rounded_div_col
 
     emb = table(spark, sf_dir, "embeddings", scatter=True)
-    books = _ann_books(emb, _count_key=(id(spark), sf_dir))
+    books = _ann_books(emb, _count_key=sf_dir)
     t = _ensure_ivf_index(spark, sf_dir, books)
     ls = spark.table(t).groupBy("list_id").agg(
         F.count(F.lit(1)).alias("n_vecs")
@@ -2177,9 +2182,10 @@ def pq_reconstruction_error(spark: SparkSession, sf_dir: str):
     error of the encoded corpus, in exact integer micro-units — the
     leading indicator a 100-TB serving stack watches between retrains (a
     codebook drifting away from the corpus shows rising err_micro long
-    before recall visibly collapses; bench.py's recall floors are the
-    lagging alarm). The winning encode distance IS the subspace's squared
-    reconstruction error, so this reuses the exact encode chain
+    before recall visibly collapses; the recall floors in
+    tests/test_quality_gates.py are the lagging alarm). The winning
+    encode distance IS the subspace's squared reconstruction error, so
+    this reuses the exact encode chain
     (operators/similarity.py: pq_encode_errors — fold identity, HALF_UP
     micro rounding, (d, code) ties) and the oracle replays it from the
     committed codebook literals."""
@@ -2187,7 +2193,7 @@ def pq_reconstruction_error(spark: SparkSession, sf_dir: str):
     from llm_data_pipeline_spark.operators.similarity import pq_encode_errors
 
     emb = table(spark, sf_dir, "embeddings", scatter=True)
-    errs = pq_encode_errors(emb, _ann_books(emb, _count_key=(id(spark), sf_dir))["pq"])
+    errs = pq_encode_errors(emb, _ann_books(emb, _count_key=sf_dir)["pq"])
     return (
         errs.groupBy("m")
         .agg(
@@ -2285,7 +2291,7 @@ def embedding_ivf_index_append(spark: SparkSession, sf_dir: str):
             F.slice("embedding", 2, 63), F.slice("embedding", 1, 1)
         ).alias("embedding"),
     )
-    books = _ann_books(emb, _count_key=(id(spark), sf_dir))
+    books = _ann_books(emb, _count_key=sf_dir)
     cents = local_df(spark, 
         [(i, [float(x) for x in v]) for i, v in enumerate(books["ivf"])],
         "list_id long, cvec array<double>",
@@ -2428,7 +2434,7 @@ def ivf_probe_recall_sweep(spark: SparkSession, sf_dir: str):
     from llm_data_pipeline_spark.functions.vectors import cosine_arrow
 
     emb = table(spark, sf_dir, "embeddings", scatter=True)
-    books = _ann_books(emb, _count_key=(id(spark), sf_dir))
+    books = _ann_books(emb, _count_key=sf_dir)
     t = _ensure_ivf_index(spark, sf_dir, books)
     assign = spark.table(t).select("vec_id", "list_id")
     queries = emb.where(F.col("vec_id") % 100 == 0).select(

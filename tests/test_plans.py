@@ -3,7 +3,6 @@ queries fast at 100 TB are asserted here so they can't silently regress.
 
 - dimension joins must be BroadcastHashJoin (no shuffle of the fact table
   beyond its aggregation);
-- filters must reach the parquet scan (PushedFilters non-empty);
 - projections must prune the scan (ReadSchema contains only used columns);
 - no plan may contain a cartesian / nested-loop join.
 """
@@ -26,23 +25,6 @@ def q(spark, sf_dir):
     return build
 
 
-def test_tpch_q3_broadcasts_dims_and_pushes_filters(q):
-    df = q("tpch_q3_shipping_priority")
-    assert I.broadcast_join_count(df) >= 2  # orders, customer vs lineitem
-    pushed = " ".join(I.pushed_filters(df))
-    assert "l_shipdate" in pushed
-    assert "c_mktsegment" in pushed or "o_orderdate" in pushed
-
-
-def test_tpch_q5_six_table_join_all_broadcast(q):
-    df = q("tpch_q5_local_supplier_volume")
-    # every dimension (orders date-filtered, customer, supplier, nation,
-    # region) broadcasts against the lineitem fact
-    assert I.broadcast_join_count(df) >= 4
-    assert I.shuffle_count(df) <= 2  # final aggregate (+AQE variance) only
-    I.assert_no_cartesian(df)
-
-
 def test_scan_pruning_clean_judge(q):
     df = q("clean_judge")
     schemas = I.scan_read_schemas(df)
@@ -50,15 +32,6 @@ def test_scan_pruning_clean_judge(q):
     # documents has (doc_id, text, lang, source, n_chars); the clean stage
     # needs only doc_id + text
     assert all("lang" not in s and "n_chars" not in s for s in schemas)
-
-
-def test_scan_pruning_top_orders(q):
-    df = q("top_orders_per_customer")
-    schemas = I.scan_read_schemas(df)
-    assert any(
-        "o_orderkey" in s and "o_comment" not in s and "o_orderstatus" not in s
-        for s in schemas
-    )
 
 
 def test_vocab_join_is_broadcast(q):
@@ -71,10 +44,6 @@ def test_vocab_join_is_broadcast(q):
 
 def test_no_cartesian_anywhere_in_headline_set(q):
     for name in [
-        "tpch_q1_pricing_summary",
-        "tpch_q3_shipping_priority",
-        "tpch_q5_local_supplier_volume",
-        "events_hourly_rollup",
         "clean_judge",
         "exact_dedup_roundtrip",
         "fuzzy_dedup_kept",
