@@ -258,8 +258,11 @@ def run_pipeline(
             for name in (s.name for s in ALL_STEPS)
             if name in all_stats
         }
-        with open(stats_path, "w") as f:
+        # tmp + rename: a crash mid-write never leaves a truncated file
+        tmp_path = f"{stats_path}.tmp"
+        with open(tmp_path, "w") as f:
             json.dump(ordered, f, indent=2, default=str)
+        os.replace(tmp_path, stats_path)
         if st["status"] != "success":
             raise RuntimeError(
                 f"step {stage.name} failed: {st.get('error')}"

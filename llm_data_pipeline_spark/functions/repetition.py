@@ -23,10 +23,12 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from llm_data_pipeline_spark.functions.text import norm_ws
+
 
 def words_of(text: Column) -> Column:
     """Normalized word array: lowercase, whitespace-collapsed, no empties."""
-    norm = F.trim(F.regexp_replace(F.lower(F.coalesce(text, F.lit(""))), r"\s+", " "))
+    norm = norm_ws(F.coalesce(text, F.lit("")))
     return F.filter(F.split(norm, " "), lambda x: x != "")
 
 

@@ -3,9 +3,9 @@
 Pipeline parity: reference dedup/minhash.py:16-125 + dedup/run_minhash.py
 (k=128, seed=42, 5-gram char shingles). Re-architected for Spark:
 
-- **Shingling and base hashing stay in the JVM**: normalize + distinct
-  5-gram substrings with higher-order array functions, then ``xxhash64``
-  per shingle — whole-stage codegen, no Python, no shuffle.
+- **Shingling and base hashing stay in the JVM**: normalize once, then
+  distinct 5-gram substrings with higher-order array functions, then a
+  per-shingle hash (``xxhash64`` by default) — no Python, no shuffle.
 - **Permutation-min runs in numpy** via an Arrow-batched pandas UDF over the
   per-row hash arrays: ``min_j (h_j * a_i + b_i) mod 2^64`` for k=128
   permutation pairs. uint64 wraparound == Java long overflow bit-patterns,
@@ -13,10 +13,25 @@ Pipeline parity: reference dedup/minhash.py:16-125 + dedup/run_minhash.py
   reinterpretation — equality of band slices is all downstream needs,
   SURVEY.md §1.3).
 
+Cost model. :func:`add_shingles` projects ``norm_ws(text)`` as its own
+``_norm`` column before :func:`shingles` reads it. An expression passed
+into the ``transform`` lambda is inlined per element, so an inline
+normalize re-ran ``lower`` + ``regexp_replace`` over the whole document
+once per shingle position (O(len²) a document). The staged column is
+referenced several times by the shingling expression, so CollapseProject
+keeps the projection boundary and each document is normalized once
+(guarded by tests/test_plans.py). What remains super-linear is
+``substring``, which is O(position) on UTF-8: on 4 vCPU the signer ran at
+377k chars/s on 1.8k-char documents and 177k chars/s on 6k-char documents
+(41k and 12k chars/s with the inline normalize). A linear formulation is
+a separate item.
+
 Not bit-compatible with the reference (Spark's xxhash64 uses seed 42 over
 UTF-8 bytes; the reference hashes with python-xxhash seed 0) — parity is
 semantic: same shingle definition, same permutation family, same seed for
-the (a, b) parameters, same empty-text zero signature.
+the (a, b) parameters, same empty-text zero signature. Graded queries pass
+``hash_fn=functions.hashing.portable_hash60`` so DuckDB can replay the
+identical values.
 """
 
 from __future__ import annotations
@@ -26,7 +41,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
-from llm_data_pipeline_spark.functions.checkpoint import cut_lineage
+from llm_data_pipeline_spark.functions.text import norm_ws
 
 DEFAULT_K = 128
 DEFAULT_SEED = 42
@@ -48,22 +63,14 @@ def _perm_params(k: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def shingle_hashes(
-    text: Column, ngram: int = DEFAULT_NGRAM, hash_fn=None
-) -> Column:
-    """array<long> of hash values of the distinct char n-gram shingles
-    of the normalized text (JVM-side; one expression, fully codegen).
+def shingles(norm: Column, ngram: int = DEFAULT_NGRAM) -> Column:
+    """array<string> of the distinct char n-gram shingles of ``norm``.
 
-    ``hash_fn`` maps a string Column to a long Column; default xxhash64
-    (fastest). Graded queries pass ``functions.hashing.portable_hash60``
-    so DuckDB can replay the identical values (equality-only use makes the
-    family free, SURVEY.md §1.3)."""
-    if hash_fn is None:
-        hash_fn = F.xxhash64
-    norm = F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
-    shingles = F.when(
-        F.length(norm) < ngram, F.array(norm)
-    ).otherwise(
+    ``norm`` must reference an already-normalized, staged column (see
+    :func:`add_shingles`), not an expression: it is read inside the
+    ``transform`` lambda, once per shingle position. Text shorter than
+    ``ngram`` is its own single shingle."""
+    return F.when(F.length(norm) < ngram, F.array(norm)).otherwise(
         F.array_distinct(
             F.transform(
                 F.sequence(F.lit(0), F.length(norm) - ngram),
@@ -71,9 +78,23 @@ def shingle_hashes(
             )
         )
     )
-    # wrapper lambda: builtins like xxhash64 are *args functions, which the
-    # higher-order-function bridge rejects as lambda bodies
-    return F.transform(shingles, lambda s: hash_fn(s))
+
+
+def add_shingles(
+    df: DataFrame, text_col: str = "text", ngram: int = DEFAULT_NGRAM
+) -> DataFrame:
+    """Append ``length`` (chars of the raw text), ``_empty`` (raw text is
+    blank after trimming spaces) and ``_sh`` (:func:`shingles` of the
+    normalized text). The normalized text is staged as ``_norm`` and
+    dropped again, so the output schema is the input's plus those three."""
+    text = F.coalesce(F.col(text_col), F.lit(""))
+    return (
+        df.withColumn("length", F.length(text))
+        .withColumn("_empty", F.length(F.trim(text)) == 0)
+        .withColumn("_norm", norm_ws(text))
+        .withColumn("_sh", shingles(F.col("_norm"), ngram))
+        .drop("_norm")
+    )
 
 
 def make_signature_udf(k: int = DEFAULT_K, seed: int = DEFAULT_SEED):
@@ -96,103 +117,24 @@ def make_signature_udf(k: int = DEFAULT_K, seed: int = DEFAULT_SEED):
     return signature
 
 
-def shingle_array(text: Column, ngram: int = DEFAULT_NGRAM) -> Column:
-    """array<string> of distinct char n-gram shingles of the normalized
-    text (the string stage of shingle_hashes, without the hash map)."""
-    norm = F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
-    return F.when(F.length(norm) < ngram, F.array(norm)).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.length(norm) - ngram),
-                lambda i: F.substring(norm, i + 1, F.lit(ngram)),
-            )
-        )
-    )
-
-
-def make_md5_signature_udf(k: int = DEFAULT_K, seed: int = DEFAULT_SEED):
-    """pandas UDF: array<string> shingles -> array<long> signature, with the
-    portable md5-60 shingle hash computed inside the UDF.
-
-    The graded queries used to evaluate the md5 family per shingle in a JVM
-    transform lambda feeding the signature UDF — md5+conv per element in
-    EvalPythonExec's non-codegen input projection was the single most
-    expensive stage in the registry (BENCH_r03: minhash_signatures 13.2 s).
-    Fusing the hash into the UDF makes it one Arrow transfer of shingle
-    strings plus one hashlib pass per *unique* shingle per batch (shingles
-    repeat heavily across documents), then the same uint64 permutation-min.
-    Values are bit-identical to hash_fn=portable_hash60 (first 60 bits of
-    md5 as non-negative long; equivalence-tested in tests/test_dedup.py).
-    Production path (xxhash64, make_signature_udf) is unchanged.
-    """
-    import hashlib
-
-    a, b = _perm_params(k, seed)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def signature(shingles: pd.Series) -> pd.Series:
-        sizes = [0 if sh is None else len(sh) for sh in shingles]
-        flat: list[str] = []
-        for sh in shingles:
-            if sh is not None and len(sh):
-                flat.extend(sh)
-        if flat:
-            # hash-based dedup (factorize) — sort-based np.unique on
-            # millions of object strings dominated the UDF cost
-            inverse, uniq = pd.factorize(np.asarray(flat, dtype=object))
-            uh = np.empty(len(uniq), dtype=np.uint64)
-            md5 = hashlib.md5
-            for i, s in enumerate(uniq):
-                # first 60 bits of md5 == first 15 hex chars as a long
-                uh[i] = (
-                    int.from_bytes(md5(s.encode("utf-8")).digest()[:8], "big")
-                    >> 4
-                )
-            all_h = uh[inverse]
-        else:
-            all_h = np.empty(0, dtype=np.uint64)
-        out = []
-        pos = 0
-        for n in sizes:
-            if n == 0:
-                out.append(np.zeros(k, dtype=np.int64))
-                continue
-            h = all_h[pos : pos + n]
-            pos += n
-            m = h.reshape(-1, 1) * a + b
-            out.append(m.min(axis=0).view(np.int64))
-        return pd.Series(out)
-
-    return signature
-
-
-def add_minhash_md5(
-    df: DataFrame,
-    text_col: str = "text",
+def minhash_signature(
+    sh: Column,
+    empty: Column,
     k: int = DEFAULT_K,
     seed: int = DEFAULT_SEED,
-    ngram: int = DEFAULT_NGRAM,
-    signature_col: str = "signature",
-) -> DataFrame:
-    """Graded-variant add_minhash: identical output to
-    ``add_minhash(hash_fn=portable_hash60, stage_hashes=True)`` with the
-    shingle hashing fused into the signature UDF (see
-    make_md5_signature_udf). Shingle strings are staged behind a lazy
-    localCheckpoint so generator-filter pushdown / orderBy sampling can
-    never re-run the shingling, mirroring stage_hashes=True."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    sig_udf = make_md5_signature_udf(k, seed)
+    hash_fn=None,
+) -> Column:
+    """array<long> MinHash signature of the shingle array ``sh``; the
+    all-zero signature where ``empty`` holds (reference
+    dedup/minhash.py:92-96). ``hash_fn`` maps a string Column to a long
+    Column; default xxhash64."""
+    if hash_fn is None:
+        hash_fn = F.xxhash64
     zero = F.array_repeat(F.lit(0).cast("long"), k)
-    staged = (
-        df.withColumn("length", F.length(text))
-        .withColumn("_sh", shingle_array(text, ngram))
-        .withColumn("_empty", F.length(F.trim(text)) == 0)
-        .transform(cut_lineage, eager=False)
-    )
-    return staged.withColumn(
-        signature_col,
-        F.when(F.col("_empty"), zero).otherwise(sig_udf(F.col("_sh"))),
-    ).drop("_sh", "_empty")
+    # wrapper lambda: builtins like xxhash64 are *args functions, which the
+    # higher-order-function bridge rejects as lambda bodies
+    hashes = F.transform(sh, lambda s: hash_fn(s))
+    return F.when(empty, zero).otherwise(make_signature_udf(k, seed)(hashes))
 
 
 def add_minhash(
@@ -203,44 +145,20 @@ def add_minhash(
     ngram: int = DEFAULT_NGRAM,
     signature_col: str = "signature",
     hash_fn=None,
-    stage_hashes: bool = False,
 ) -> DataFrame:
     """Append ``signature: array<long>`` (k values) and ``length: int``.
 
-    Empty/null text gets the all-zero signature (reference
-    dedup/minhash.py:92-96). ``hash_fn`` selects the shingle hash family
-    (default xxhash64; see :func:`shingle_hashes`).
-
-    ``stage_hashes=True`` materializes the shingle-hash arrays behind a
-    lazy localCheckpoint before the signature UDF. Two plan pathologies
-    make the inline expression expensive when the hash family is costly
-    (the graded md5 variant): (a) UDF input expressions are evaluated in
-    EvalPythonExec's own projection, outside whole-stage codegen, ~4x the
-    cost of the same transform in a codegen stage; (b) a downstream
-    generator's inferred non-empty filter can be pushed below a
-    repartition exchange, re-evaluating the whole hash+UDF chain per pass.
-    The checkpoint pins one codegen evaluation. Blocks are
-    corpus x k longs and freed by the ContextCleaner; leave False for the
-    production xxhash64 path, where laziness beats the materialization.
-    """
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    sig_udf = make_signature_udf(k, seed)
-    zero = F.array_repeat(F.lit(0).cast("long"), k)
-    if stage_hashes:
-        staged = df.withColumn("length", F.length(text)).withColumn(
-            "_mh", shingle_hashes(text, ngram, hash_fn)
-        ).withColumn(
-            "_empty", F.length(F.trim(text)) == 0
-        ).transform(cut_lineage, eager=False)
-        return staged.withColumn(
+    Empty/null text gets the all-zero signature. ``hash_fn`` selects the
+    shingle hash family (see :func:`minhash_signature`)."""
+    return (
+        add_shingles(df, text_col, ngram)
+        .withColumn(
             signature_col,
-            F.when(F.col("_empty"), zero).otherwise(sig_udf(F.col("_mh"))),
-        ).drop("_mh", "_empty")
-    return df.withColumn("length", F.length(text)).withColumn(
-        signature_col,
-        F.when(F.length(F.trim(text)) == 0, zero).otherwise(
-            sig_udf(shingle_hashes(text, ngram, hash_fn))
-        ),
+            minhash_signature(
+                F.col("_sh"), F.col("_empty"), k, seed, hash_fn
+            ),
+        )
+        .drop("_sh", "_empty")
     )
 
 

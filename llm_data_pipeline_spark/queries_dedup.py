@@ -33,11 +33,16 @@ from llm_data_pipeline_spark.operators.lsh import (
     minhash_incremental_dedup,
     minhash_incremental_dedup_tagged,
 )
-from llm_data_pipeline_spark.operators.minhash import add_minhash, add_minhash_md5
+from llm_data_pipeline_spark.operators.minhash import (
+    add_minhash,
+    add_shingles,
+    minhash_signature,
+)
 from llm_data_pipeline_spark.functions.intmath import rounded_div_sql
 from llm_data_pipeline_spark.queries import query, table
 from llm_data_pipeline_spark.functions.checkpoint import cut_lineage
 from llm_data_pipeline_spark.functions.localframe import local_df
+from llm_data_pipeline_spark.functions.text import norm_ws
 
 VARIANT_OFFSET = 100_000
 
@@ -62,10 +67,7 @@ def _augmented(spark: SparkSession, sf_dir: str, scatter: bool = False) -> DataF
     from llm_data_pipeline_spark.queries import scatter as _scatter_fn
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(
-        F.trim(F.regexp_replace(F.lower(F.coalesce(F.col("text"), F.lit(""))), r"\s+", " ")),
-        " ",
-    )
+    toks = F.split(norm_ws(F.coalesce(F.col("text"), F.lit(""))), " ")
     variants = (
         docs.where(F.col("doc_id") < 50)
         .select(
@@ -153,7 +155,6 @@ def exact_dedup_roundtrip(spark: SparkSession, sf_dir: str):
     doubled = docs.unionByName(
         docs.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
     )
-    from llm_data_pipeline_spark.functions.text import norm_ws
 
     keyed = doubled.withColumn("text_key", F.md5(norm_ws(F.col("text"))))
     return (
@@ -371,7 +372,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str):
     rows — scalar columns only, so the driver's canonicalizer can sort and
     hash them (an array<long> column is unhashable in pandas)."""
     docs = table(spark, sf_dir, "documents", scatter=True).select("doc_id", "text")
-    sig = add_minhash_md5(docs)
+    sig = add_minhash(docs, hash_fn=portable_hash60)
     # Checkpoint the computed signatures BEFORE the final sort: the global
     # orderBy's range-sampling pass re-executes its child plan, and without
     # the boundary that means a second full signature-UDF run. With it the
@@ -446,7 +447,7 @@ def minhash_dedup_kept(spark: SparkSession, sf_dir: str):
     sha1 preimage), the 500-doc bucket cap, recursive-CTE components, and
     the (length desc, doc_id desc) canonical tie-break."""
     aug = _augmented(spark, sf_dir, scatter=True)
-    sig = add_minhash_md5(aug)
+    sig = add_minhash(aug, hash_fn=portable_hash60)
     kept, _ = minhash_dedup(sig, rows_per_band=8)
     # single-column presentation sort: coalesce(1)+sortWithinPartitions
     # instead of a global orderBy, whose range-partitioner sampling pass
@@ -497,7 +498,6 @@ def prefix_truncation_dedup(spark: SparkSession, sf_dir: str):
     first 16 normalized chars (a block key — never an n^2 scan), verified
     by one startswith per block candidate. The oracle replays planting,
     normalization, blocking, and verification."""
-    from llm_data_pipeline_spark.functions.text import norm_ws
     from llm_data_pipeline_spark.operators.dedup import prefix_dup_pairs
 
     docs = table(spark, sf_dir, "documents", scatter=True).select(
@@ -579,7 +579,7 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str):
     document. All counts are exact integers; the oracle replays the full
     signature -> banding -> components -> histogram chain."""
     aug = _augmented(spark, sf_dir, scatter=True)
-    sig = add_minhash_md5(aug)
+    sig = add_minhash(aug, hash_fn=portable_hash60)
     bands = band_rows(sig, rows_per_band=8).transform(cut_lineage, eager=False)
     edges = candidate_pairs(bands, bucket_cap=500)
     # comps feeds two consumers (size histogram + singleton anti-join);
@@ -678,7 +678,7 @@ def lsh_band_stats(spark: SparkSession, sf_dir: str):
         (F.col("id") + _MEGA_OFFSET).alias("doc_id"),
         F.lit(_MEGA_TEXT).alias("text"),
     )
-    sig = add_minhash_md5(aug.unionByName(mega))
+    sig = add_minhash(aug.unionByName(mega), hash_fn=portable_hash60)
     bands = band_rows(sig, rows_per_band=8)
     # 16-row result: presentation sort via coalesce(1) so the global
     # orderBy's range-sampling pass cannot re-execute the signature chain
@@ -914,19 +914,12 @@ def minhash_jaccard_estimate_error(spark: SparkSession, sf_dir: str):
     through the PERMS ladder and the shingle sets from first principles."""
     from llm_data_pipeline_spark.functions.intmath import rounded_div_col
     from llm_data_pipeline_spark.operators.minhash import (
-        make_md5_signature_udf,
-        shingle_array,
+        make_signature_udf,
+        shingles,
     )
 
     docs = table(spark, sf_dir, "documents").where(F.col("doc_id") < 50)
-    toks = F.split(
-        F.trim(
-            F.regexp_replace(
-                F.lower(F.coalesce(F.col("text"), F.lit(""))), r"\s+", " "
-            )
-        ),
-        " ",
-    )
+    toks = F.split(norm_ws(F.coalesce(F.col("text"), F.lit(""))), " ")
     pair = docs.select(
         F.col("doc_id").alias("u"),
         F.coalesce(F.col("text"), F.lit("")).alias("t_u"),
@@ -937,12 +930,17 @@ def minhash_jaccard_estimate_error(spark: SparkSession, sf_dir: str):
         (F.length(F.trim(F.col("t_u"))) > 0)
         & (F.length(F.trim(F.col("t_v"))) > 0)
     )
-    sig_udf = make_md5_signature_udf()
-    staged = pair.select(
+    # normalized texts staged as columns: shingles() reads its input once
+    # per shingle position
+    normed = pair.select(
+        "u", norm_ws(F.col("t_u")).alias("n_u"), norm_ws(F.col("t_v")).alias("n_v")
+    )
+    staged = normed.select(
         "u",
-        shingle_array(F.col("t_u")).alias("sh_u"),
-        shingle_array(F.col("t_v")).alias("sh_v"),
+        shingles(F.col("n_u")).alias("sh_u"),
+        shingles(F.col("n_v")).alias("sh_v"),
     ).transform(cut_lineage, eager=False)
+    sig_udf = make_signature_udf()
     est = staged.select(
         "u",
         F.size("sh_u").cast("long").alias("n_su"),
@@ -953,8 +951,8 @@ def minhash_jaccard_estimate_error(spark: SparkSession, sf_dir: str):
         F.size(
             F.filter(
                 F.zip_with(
-                    sig_udf(F.col("sh_u")),
-                    sig_udf(F.col("sh_v")),
+                    sig_udf(F.transform("sh_u", portable_hash60)),
+                    sig_udf(F.transform("sh_v", portable_hash60)),
                     lambda a, b: a == b,
                 ),
                 lambda x: x,
@@ -1110,7 +1108,6 @@ def bloom_incremental_exact_dedup(spark: SparkSession, sf_dir: str):
     removes false positives — so the result is bit-identical to the
     plain semi-join the oracle runs, while at scale only an fp-sized
     slice of the increment ever shuffles."""
-    from llm_data_pipeline_spark.functions.text import norm_ws
     from llm_data_pipeline_spark.operators.bloom import incremental_exact_dedup
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1414,11 +1411,10 @@ def minhash_incremental_dedup_query(spark: SparkSession, sf_dir: str):
 
     # Sign base ∪ increment in ONE pass (r10, guide §4): the two sides
     # used to run separate shingle+signature pipelines (two staged shingle
-    # checkpoints, two Arrow stages); a side tag lets one add_minhash_md5
-    # serve both — its internal staged-shingle checkpoint is shared, and
-    # the _inc filter (independent of the UDF output) pushes below the
-    # signature UDF so each side still signs exactly its own rows. Scatter
-    # once above the union, same as _augmented's r9 rule.
+    # checkpoints, two Arrow stages); a side tag lets one add_minhash
+    # serve both, and the _inc filter (independent of the UDF output)
+    # pushes below the signature UDF so each side still signs exactly its
+    # own rows. Scatter once above the union, same as _augmented's r9 rule.
     base = table(spark, sf_dir, "documents").select("doc_id", "text")
     inc = _increment(spark, sf_dir)
     tagged = _scatter_fn(
@@ -1427,7 +1423,7 @@ def minhash_incremental_dedup_query(spark: SparkSession, sf_dir: str):
         ),
         _cache_key=(sf_dir, "documents::base+inc"),
     )
-    signed = add_minhash_md5(tagged)
+    signed = add_minhash(tagged, hash_fn=portable_hash60)
     out = minhash_incremental_dedup_tagged(signed, "_inc", rows_per_band=8)
     return out.select("doc_id", "kept").coalesce(1).sortWithinPartitions(
         "doc_id"
@@ -1489,7 +1485,7 @@ def _ensure_signature_artifacts(spark: SparkSession, sf_dir: str) -> dict:
         _cache_key=(sf_dir, "documents::b+i+v"),
     )
     signed = cut_lineage(
-        add_minhash_md5(tagged).select(
+        add_minhash(tagged, hash_fn=portable_hash60).select(
             "_side", "doc_id",
             F.col("length").cast("long").alias("length"), "signature",
         ),
@@ -2204,33 +2200,22 @@ def minhash_lsh_recall_eval(spark: SparkSession, sf_dir: str):
     oracle-checked, not self-reported."""
     from llm_data_pipeline_spark.functions.intmath import rounded_div_col
     from llm_data_pipeline_spark.operators.lsh import band_rows, candidate_pairs
-    from llm_data_pipeline_spark.operators.minhash import (
-        make_md5_signature_udf,
-        shingle_array,
-    )
 
     aug = _augmented(spark, sf_dir, scatter=True)
     # ONE shingling pass shared by both evaluation sides: the LSH chain
-    # (signature UDF over the shingles) and the exact-Jaccard truth (the
-    # same shingle arrays) used to shingle the corpus independently —
-    # staging the arrays once behind a lazy checkpoint removes a full
-    # normalize+shingle pass per execution (same content as
-    # add_minhash_md5's internal staging, shared instead of private).
-    text = F.coalesce(F.col("text"), F.lit(""))
-    staged = aug.select(
-        "doc_id",
-        F.length(text).alias("length"),
-        shingle_array(text).alias("_sh"),
-        (F.length(F.trim(text)) == 0).alias("_empty"),
-    ).transform(cut_lineage, eager=False)
-    sig_udf = make_md5_signature_udf()
-    zero = F.array_repeat(F.lit(0).cast("long"), 128)
+    # (signatures over the shingles) and the exact-Jaccard truth (the
+    # same shingle arrays), staged once behind a lazy checkpoint.
+    staged = (
+        add_shingles(aug)
+        .select("doc_id", "length", "_sh", "_empty")
+        .transform(cut_lineage, eager=False)
+    )
     sigs = staged.select(
         "doc_id",
         "length",
-        F.when(F.col("_empty"), zero)
-        .otherwise(sig_udf(F.col("_sh")))
-        .alias("signature"),
+        minhash_signature(
+            F.col("_sh"), F.col("_empty"), hash_fn=portable_hash60
+        ).alias("signature"),
     )
     cands = candidate_pairs(band_rows(sigs, rows_per_band=8))
     planted = (
@@ -2388,13 +2373,11 @@ def bbit_minhash_similarity(spark: SparkSession, sf_dir: str):
     masking, estimators, truth) replays in DuckDB; two's-complement low
     bits agree across engines."""
     from llm_data_pipeline_spark.functions.intmath import rounded_div_col
-    from llm_data_pipeline_spark.operators.minhash import (
-        add_minhash_md5,
-        shingle_array,
-    )
 
     aug = _augmented(spark, sf_dir, scatter=True)
-    sigs = add_minhash_md5(aug).select("doc_id", "signature")
+    sigs = add_minhash(aug, hash_fn=portable_hash60).select(
+        "doc_id", "signature"
+    )
     planted = (
         table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 50)
@@ -2426,9 +2409,8 @@ def bbit_minhash_similarity(spark: SparkSession, sf_dir: str):
             lambda x: x == 1,
         )
     ).cast("long")
-    text = F.coalesce(F.col("text"), F.lit(""))
-    sets = aug.where(F.length(F.trim(text)) > 0).select(
-        "doc_id", shingle_array(text).alias("sh")
+    sets = add_shingles(aug).where(~F.col("_empty")).select(
+        "doc_id", F.col("_sh").alias("sh")
     )
     shu = sets.select(F.col("doc_id").alias("u"), F.col("sh").alias("sh_u"))
     shv = sets.select(F.col("doc_id").alias("v"), F.col("sh").alias("sh_v"))
@@ -3215,7 +3197,6 @@ def dedup_cascade_funnel(spark: SparkSession, sf_dir: str):
     exact dups too). Exact stage: keep min doc_id per normalized digest;
     fuzzy stage: the fuzzy_dedup_kept chain (trigram Jaccard >= 0.5,
     components, (length desc, doc_id desc) canonical)."""
-    from llm_data_pipeline_spark.functions.text import norm_ws
 
     from llm_data_pipeline_spark.queries import scatter as _scatter_fn
 
@@ -3401,30 +3382,22 @@ def lsh_scurve_calibration(spark: SparkSession, sf_dir: str):
     the LSH chain, the truth, and the comparison all hash-checked."""
     from llm_data_pipeline_spark.functions.intmath import rounded_div_col
     from llm_data_pipeline_spark.operators.lsh import band_rows
-    from llm_data_pipeline_spark.operators.minhash import (
-        make_md5_signature_udf,
-        shingle_array,
-    )
 
     aug = _augmented(spark, sf_dir, scatter=True)
     # ONE shingling pass shared by the banding chain and the exact-Jaccard
-    # truth (same staged-share as minhash_lsh_recall_eval): the signature
-    # UDF and the `sets` side both read the staged shingle arrays.
-    text0 = F.coalesce(F.col("text"), F.lit(""))
-    staged = aug.select(
-        "doc_id",
-        F.length(text0).alias("length"),
-        shingle_array(text0).alias("_sh"),
-        (F.length(F.trim(text0)) == 0).alias("_empty"),
-    ).transform(cut_lineage, eager=False)
-    sig_udf = make_md5_signature_udf()
-    zero = F.array_repeat(F.lit(0).cast("long"), 128)
+    # truth (same staged-share as minhash_lsh_recall_eval): the signatures
+    # and the `sets` side both read the staged shingle arrays.
+    staged = (
+        add_shingles(aug)
+        .select("doc_id", "length", "_sh", "_empty")
+        .transform(cut_lineage, eager=False)
+    )
     sigs = staged.select(
         "doc_id",
         "length",
-        F.when(F.col("_empty"), zero)
-        .otherwise(sig_udf(F.col("_sh")))
-        .alias("signature"),
+        minhash_signature(
+            F.col("_sh"), F.col("_empty"), hash_fn=portable_hash60
+        ).alias("signature"),
     )
     # capture membership for the 50 PLANTED pairs only: a pair is caught
     # iff some band bucket holds both sides AND that bucket survives the

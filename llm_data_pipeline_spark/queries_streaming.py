@@ -623,9 +623,8 @@ def streaming_band_index_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id") >= VARIANT_OFFSET
         ).coalesce(1).write.mode("overwrite").parquet(inc_path)
     sdf = read_parquet_stream(spark, inc_path, ts_col=None)
-    # add_minhash with the portable hash family and NO staging checkpoint
-    # (localCheckpoint is a batch-only op): bit-identical signatures to
-    # add_minhash_md5 (its docstring contract), streaming-safe
+    # add_minhash holds no checkpoint (localCheckpoint is a batch-only op),
+    # so the portable-hash signer runs unchanged on the stream
     inc_bands = band_index_rows(
         add_minhash(sdf, hash_fn=portable_hash60), rows_per_band=8
     ).select(

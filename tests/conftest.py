@@ -21,3 +21,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    """Say how many `full`-tier tests the default `-m "not full"` dropped."""
+    if config.option.markexpr != "not full":
+        return
+    n = sum(
+        1
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("full")
+    )
+    if n:
+        terminalreporter.write_line(
+            f'{n} full-tier tests deselected; run -m "full or not full"'
+        )

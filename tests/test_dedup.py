@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import Row
 
 from llm_data_pipeline_spark.operators.dedup import (
@@ -197,21 +200,33 @@ def test_ngram_jaccard_positional_filter_lossless(spark):
             assert abs(got[k] - want[k]) < 1e-12
 
 
-def test_md5_fused_signature_equivalent(spark, sf_dir):
-    """add_minhash_md5 (hash fused into the UDF) must produce signatures
-    bit-identical to add_minhash(hash_fn=portable_hash60) — including the
-    empty-text zero signature and sub-ngram short texts."""
-    from pyspark.sql import Row
+# sha1 over the sorted "doc_id<TAB>length<TAB>sig,..." lines of the golden
+# input below, one digest per hash family. Any change to normalization,
+# shingling, hashing, the permutations or the empty-text rule moves them.
+GOLDEN_SIGNATURE_SHA1 = {
+    "xxhash64": "f0030ab3e80fa5128f4b3195e222e49136d96190",
+    "portable_hash60": "bb10e24fb30c247af2cd4764b840e11846cb6843",
+}
+
+
+@pytest.mark.parametrize("family", sorted(GOLDEN_SIGNATURE_SHA1))
+def test_minhash_golden_signatures(spark, sf_dir, family):
+    """(doc_id, length, signature) of the first 100 documents plus edge
+    texts — empty, blank, null, sub-ngram, tab/newline-only (not empty:
+    it signs the single shingle "") and ragged whitespace — are pinned
+    bit for bit for both hash families."""
+    import hashlib
 
     from llm_data_pipeline_spark.functions.hashing import portable_hash60
-    from llm_data_pipeline_spark.operators.minhash import (
-        add_minhash,
-        add_minhash_md5,
-    )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    ).limit(100)
+    if os.path.basename(sf_dir.rstrip("/")) != "sf0.001":
+        pytest.skip("the golden digests are taken over sf0.001")
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "text")
+        .orderBy("doc_id")
+        .limit(100)
+    )
     extra = spark.createDataFrame(
         [
             Row(doc_id=900001, text=""),
@@ -219,21 +234,21 @@ def test_md5_fused_signature_equivalent(spark, sf_dir):
             Row(doc_id=900003, text=None),
             Row(doc_id=900004, text="ab"),
             Row(doc_id=900005, text="abcd"),
+            Row(doc_id=900006, text="\t\n"),
+            Row(doc_id=900007, text="  A  b C "),
         ],
         "doc_id bigint, text string",
     )
-    docs = docs.unionByName(extra)
-    ref = {
-        r.doc_id: (r.length, r.signature)
-        for r in add_minhash(
-            docs, hash_fn=portable_hash60, stage_hashes=True
-        ).collect()
-    }
-    fused = {
-        r.doc_id: (r.length, r.signature)
-        for r in add_minhash_md5(docs).collect()
-    }
-    assert ref == fused and len(ref) == 105
+    hash_fn = portable_hash60 if family == "portable_hash60" else None
+    signed = add_minhash(docs.unionByName(extra), hash_fn=hash_fn)
+    rows = sorted(
+        (r.doc_id, r.length, tuple(r.signature)) for r in signed.collect()
+    )
+    assert len(rows) == 107
+    h = hashlib.sha1()
+    for doc_id, length, sig in rows:
+        h.update(f"{doc_id}\t{length}\t{','.join(map(str, sig))}\n".encode())
+    assert h.hexdigest() == GOLDEN_SIGNATURE_SHA1[family]
 
 
 def test_remove_duplicated_chunks_strips_boilerplate(spark):
@@ -762,7 +777,7 @@ def test_reliable_checkpoint_mode_identical(spark, tmp_path):
     checkpoint dir — survives executor loss at cluster scale) must produce
     the exact rows local mode does on a full dedup run; only block
     placement/recoverability differ (functions/checkpoint.py)."""
-    sig = add_minhash(_corpus(spark), stage_hashes=True)
+    sig = add_minhash(_corpus(spark))
 
     def run():
         kept, comps = minhash_dedup(sig, rows_per_band=8)

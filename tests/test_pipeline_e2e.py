@@ -151,3 +151,30 @@ def test_failed_step_keeps_traceback_and_cause(spark, tmp_path):
     assert ingest["error"] == f"ValueError: {cause}"
     assert "_ingest" in ingest["traceback"]
     assert "Traceback (most recent call last)" in ingest["traceback"]
+
+
+def test_stats_file_survives_failed_write(spark, sf_dir, tmp_path, monkeypatch):
+    """A crash while pipeline_stats.json is rewritten leaves the previous
+    version on disk, not a truncated file."""
+    base = str(tmp_path / "crash")
+    config = PipelineConfig(
+        output_base=base, input=f"{sf_dir}/documents.parquet"
+    )
+    real_dump = json.dump
+    calls = []
+
+    def dump_then_crash(obj, f, **kw):
+        calls.append(sorted(obj))
+        if len(calls) == 2:
+            f.write('{"ingest": ')
+            raise OSError("disk full")
+        real_dump(obj, f, **kw)
+
+    monkeypatch.setattr(json, "dump", dump_then_crash)
+    with pytest.raises(OSError, match="disk full"):
+        run_pipeline(spark, config, steps=["ingest", "clean"])
+    assert calls == [["ingest"], ["clean", "ingest"]]
+    with open(os.path.join(base, "pipeline_stats.json")) as f:
+        on_disk = json.load(f)
+    assert list(on_disk) == ["ingest"]
+    assert on_disk["ingest"]["status"] == "success"

@@ -81,6 +81,22 @@ def test_lsh_candidate_pairs_has_bucket_cap_and_equi_join(spark, sf_dir):
     I.assert_no_cartesian(edges_j)
 
 
+@pytest.mark.parametrize("family", ["xxhash64", "portable_hash60"])
+def test_minhash_normalizes_outside_shingle_lambda(spark, sf_dir, family):
+    # the normalized text must be a staged column: an inline normalize is
+    # re-run over the whole document once per shingle position
+    from llm_data_pipeline_spark.functions.hashing import portable_hash60
+    from llm_data_pipeline_spark.operators.minhash import add_minhash
+
+    hash_fn = portable_hash60 if family == "portable_hash60" else None
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    plan = add_minhash(docs, hash_fn=hash_fn)._jdf.queryExecution()
+    lines = plan.optimizedPlan().toString().splitlines()
+    assert any("lambdafunction" in ln for ln in lines)
+    bad = [ln for ln in lines if "lambdafunction" in ln and "regexp_replace" in ln]
+    assert not bad, bad
+
+
 def test_fuzzy_dedup_kept_shape(q):
     df = q("fuzzy_dedup_kept")
     I.assert_no_cartesian(df)

@@ -113,7 +113,8 @@ def test_band_index_join_keeps_index_unshuffled(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from llm_data_pipeline_spark.operators.lsh import band_index_rows
-    from llm_data_pipeline_spark.operators.minhash import add_minhash_md5
+    from llm_data_pipeline_spark.functions.hashing import portable_hash60
+    from llm_data_pipeline_spark.operators.minhash import add_minhash
     from llm_data_pipeline_spark.operators.skew import write_bucketed
     from llm_data_pipeline_spark.plans import inspect as I
     from llm_data_pipeline_spark.queries import table
@@ -123,12 +124,20 @@ def test_band_index_join_keeps_index_unshuffled(spark, sf_dir):
     base = table(spark, sf_dir, "documents").select("doc_id", "text")
     t = f"bkt_band_index_test_{os.getpid()}"
     write_bucketed(
-        band_index_rows(add_minhash_md5(base.where(F.col("doc_id") < 100)),
-                        rows_per_band=8),
+        band_index_rows(
+            add_minhash(
+                base.where(F.col("doc_id") < 100), hash_fn=portable_hash60
+            ),
+            rows_per_band=8,
+        ),
         t, "bh", 8, path=f"{SINK_BASE}/{t}",
     )
-    inc = base.where(F.col("doc_id") >= 100).limit(50)
-    bn = band_index_rows(add_minhash_md5(inc), rows_per_band=8)
+    # a range, not limit(50): limit's SinglePartition exchange is not the
+    # band join's and would count here
+    inc = base.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 150))
+    bn = band_index_rows(
+        add_minhash(inc, hash_fn=portable_hash60), rows_per_band=8
+    )
     joined = spark.table(t).hint("merge").join(bn, "bh")
     plan = I.formatted_plan(joined)
     assert "SortMergeJoin" in plan
