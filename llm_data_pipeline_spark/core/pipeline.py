@@ -20,8 +20,11 @@ only. Differences from the reference worth knowing:
   operators/tokenizer.py); `train_tokenizer` persists the vocab as parquet
   (the "model"), `tokenize` broadcast-joins against it;
 - quality LID is the deterministic heuristic scorer (fastText is optional);
-- clustering is fully distributed LSH + iterative connected components —
-  no driver union-find, no driver keep-set (SURVEY.md §4.2(1,3)).
+- clustering is distributed LSH banding and pairing; its connected
+  components run as union-find on the driver when the edge list has at
+  most ``operators.lsh.DRIVER_MAX_ROWS`` rows, else as distributed label
+  propagation, and the keep set is a distributed anti-join
+  (SURVEY.md §4.2(1,3)).
 """
 
 from __future__ import annotations

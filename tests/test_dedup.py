@@ -353,6 +353,79 @@ def test_minhash_incremental_dedup_semantics(spark):
     assert out.count() == 5
 
 
+def test_indexed_screen_driver_path_matches_distributed(spark, monkeypatch):
+    """The indexed screen's driver path (two bounded probes + driver DSU)
+    and its distributed fallback give the same (doc_id, kept) and schema.
+    One band per signature value (rows_per_band=1), so every bucket is
+    chosen by hand; bucket_cap=3."""
+    from pyspark.sql import functions as F
+
+    from llm_data_pipeline_spark.operators import lsh
+    from llm_data_pipeline_spark.plans import inspect as I
+
+    schema = "doc_id long, ts long, length long, signature array<long>"
+    base = spark.createDataFrame(
+        [
+            (1, 0, 10, [100, 1001]),
+            (2, 0, 10, [200, 1002]),
+            (3, 0, 10, [200, 1003]),
+            (4, 0, 10, [300, 1004]),
+            (5, 0, 10, [1005, 400]),
+            *[(d, 0, 10, [600, 1000 + d]) for d in (6, 7, 8, 9)],
+        ],
+        schema,
+    )
+    index = lsh.band_index_rows(base, rows_per_band=1)
+    counts = lsh.band_index_counts(index)
+    new = spark.createDataFrame(
+        [
+            (101, 1, 5, [100, 2001]),  # bucket 100: n == cap, honoured
+            (102, 1, 5, [100, 2002]),
+            (103, 1, 5, [200, 2003]),  # bucket 200: n == cap + 1, dropped
+            (104, 1, 5, [200, 2004]),
+            (105, 1, 5, [300, 400]),  # links base docs 4 and 5
+            (107, 5, 10, [500, 2007]),  # all-new: (ts, length) tie with 108
+            (108, 5, 10, [500, 2008]),
+            (110, 4, 99, [500, 2010]),  # loses on ts despite its length
+            (109, 1, 5, [2009, 2109]),  # isolated
+            (111, 1, 5, [600, 2011]),  # base-only mega bucket (4 > cap)
+        ],
+        schema,
+    )
+
+    def screen(inc):
+        out = lsh.minhash_incremental_dedup_indexed(
+            index, inc, counts, rows_per_band=1, bucket_cap=3
+        )
+        kept = {r.doc_id: r.kept for r in out.select("doc_id", "kept").collect()}
+        return out, kept
+
+    increments = [
+        new,
+        new.where(F.col("doc_id").isin(107, 108, 109, 110)),  # no index bh
+        new.where(F.lit(False)),  # empty
+    ]
+    driver = [screen(inc) for inc in increments]
+    # at a bound of 0 every non-empty increment overflows Q1; the empty
+    # one has 0 band rows and takes the driver path on both sides
+    monkeypatch.setattr(lsh, "DRIVER_MAX_ROWS", 0)
+    distributed = [screen(inc) for inc in increments]
+
+    for (d_out, d_kept), (x_out, x_kept) in zip(driver, distributed):
+        assert d_kept == x_kept
+        assert d_out.schema == x_out.schema
+    assert driver[0][1] == {
+        101: False, 102: False, 103: True, 104: True, 105: False,
+        107: False, 108: True, 110: False, 109: True, 111: True,
+    }
+    assert driver[1][1] == {107: False, 108: True, 109: True, 110: False}
+    assert driver[2][1] == {}
+    # both paths really ran; the driver path's result is one partition
+    assert I.shuffle_count(driver[0][0]) == 0
+    assert driver[0][0].rdd.getNumPartitions() == 1
+    assert all(I.shuffle_count(out) > 0 for out, _ in distributed[:2])
+
+
 class TestRemoveDuplicatedSpans:
     def test_strips_misaligned_boilerplate(self, spark):
         from llm_data_pipeline_spark.operators.dedup import (

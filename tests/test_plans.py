@@ -797,3 +797,23 @@ def test_compaction_execute_audits_artifact_only(q):
     assert "frag_sink_" not in plan
     assert "documents.parquet" not in plan
     I.assert_no_cartesian(df)
+
+
+def test_indexed_screen_driver_path_has_no_exchange(spark):
+    """A small increment is screened by two bounded probes and driver
+    work: the frame returned joins ``kept`` back through a broadcast, so
+    its plan has no shuffle, and it is one partition (one output file)."""
+    from llm_data_pipeline_spark.operators import lsh
+
+    sig = spark.createDataFrame(
+        [(1, 10, [100])], "doc_id long, length long, signature array<long>"
+    )
+    index = lsh.band_index_rows(sig, rows_per_band=1)
+    df = lsh.minhash_incremental_dedup_indexed(
+        index,
+        sig,
+        index_counts=lsh.band_index_counts(index),
+        rows_per_band=1,
+    )
+    assert I.shuffle_count(df) == 0
+    assert df.rdd.getNumPartitions() == 1
