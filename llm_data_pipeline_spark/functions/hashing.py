@@ -13,9 +13,6 @@ variants swap in an md5-prefix family both engines compute bit-identically:
   signed long (two's complement).
   DuckDB replay: ``hi::HUGEINT * 4294967296 + lo`` then signed-convert,
   with ``hi = ('0x'||substr(md5(s),1,8))::BIGINT`` etc.
-
-This mirrors the literal-plane SQL replay that made hyperplane-LSH ANN
-fully hash-checkable (queries_similarity.py).
 """
 
 from __future__ import annotations

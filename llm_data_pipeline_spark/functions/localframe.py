@@ -6,7 +6,7 @@ frame then costs one Python-worker round trip PER PARTITION (~0.15-0.2 s
 each of pure handshake at local[32]), and a downstream ``coalesce(1)``
 drains all of them SEQUENTIALLY inside one task — measured 5.5-7.5 s to
 write a 5-row request frame, ~25x the data's cost. The frames built from
-driver-local literals here (codebooks, request ids, DSU component maps,
+driver-local literals here (request ids, DSU component maps,
 probe fixtures) are small by construction, so slice them to
 ``len(rows) / rows_per_slice`` partitions (usually ONE): one Python round
 trip per evaluation, and a single-partition frame also broadcasts and

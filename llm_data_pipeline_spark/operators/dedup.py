@@ -510,7 +510,7 @@ def containment_pairs_incremental(
     base + increment exploded fully, keyed by shingle. The base is never
     self-joined and never prefix-exploded: at 100 TB yesterday's corpus
     contributes only its shingle inverted index to the band join, the
-    same asymmetry as minhash_incremental_dedup. Returns the same
+    same asymmetry as lsh.minhash_incremental_dedup_indexed. Returns the same
     (inner_id, outer_id, n_common, n_inner, containment) contract as
     containment_pairs restricted to inner ∈ increment.
     """
@@ -914,13 +914,13 @@ def remove_duplicated_spans_incremental(
     occurrence there suffices) or more than ``max_occurrences`` times
     within the increment itself.
 
-    Scale contract (mirrors minhash_incremental_dedup's banded-index
-    shape): the base participates ONLY through its distinct window-value
-    set — at 100 TB that set is a precomputed, value-bucketed index that
-    the daily run semi-joins against; the base corpus itself is never
+    Scale contract (mirrors lsh.minhash_incremental_dedup_indexed's band-index
+    shape): the base participates ONLY through its distinct window-value set
+    — at 100 TB that set is a precomputed, value-bucketed index that the
+    daily run semi-joins against; the base corpus itself is never
     re-tokenized, re-shuffled, or rewritten here. The increment pays the
-    same stride-1 window cost as the full operator, but only over the
-    day's data.
+    same stride-1 window cost as the full operator, but only over the day's
+    data.
     """
     w = int(window_words)
     toked_new = _span_tokenize(new, text_col, id_col)

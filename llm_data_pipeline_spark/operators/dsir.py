@@ -20,7 +20,7 @@ Scale shape (the part that matters at 100 TB):
 - selection is a global top-k (orderBy + limit; at extreme k swap for an
   approximate threshold from a sampled quantile, same plan otherwise).
 
-Determinism contract (same as lm_score / pq_adc_topk): the per-bucket
+Determinism contract (same as lm_score): the per-bucket
 log-ratio is quantized to integer micro-units (round(ln(r)*1e6) as int64)
 BEFORE aggregation; the per-doc score is then an exact int64 sum —
 order-independent — and the division back to a float happens once at the

@@ -178,14 +178,14 @@ def frequent_ngrams_incremental(
     < min_count in the union — the merged candidate set is a provable
     superset, and the confirm pass counts it exactly over the union.
 
-    At 100 TB the base's candidate summary is a precomputed per-shard
-    artifact (same contract as the banded index of
-    minhash_incremental_dedup): the daily run re-summarizes ONLY the
-    increment, unions candidate sets, and re-counts just the candidates —
-    the base is never re-summarized, only re-scanned for the bounded
+    At 100 TB the base's candidate summary is a precomputed per-shard artifact
+    (same contract as the band index of
+    lsh.minhash_incremental_dedup_indexed): the daily run re-summarizes ONLY
+    the increment, unions candidate sets, and re-counts just the candidates
+    — the base is never re-summarized, only re-scanned for the bounded
     confirm aggregate. Here, with both corpora as live frames, the two
-    summaries are fused into ONE tagged pass (per-src MG dicts — same
-    math, half the scans); swapping the base side for a stored summary
+    summaries are fused into ONE tagged pass (per-src MG dicts — same math,
+    half the scans); swapping the base side for a stored summary
     is a drop-in change to the `cand` input.
     """
     if min_count < 2:

@@ -1,10 +1,9 @@
 """Distributed Lloyd k-means over embeddings — integer-exact, so the
 ENTIRE training trajectory replays bit-for-bit in SQL.
 
-The repo's ANN/SemDeDup family already trains k-means codebooks but
-grades them as committed literals (data/codebooks.py — the oracle replays
-scoring, not training). This operator closes that gap the same way
-lr_quality closes it for classifier training: make every arithmetic step
+A k-means codebook graded as committed literals would let an oracle
+replay scoring but not training. This operator grades training the same
+way lr_quality does for classifier training: make every arithmetic step
 exact so an unrolled-CTE DuckDB oracle re-derives every centroid of every
 iteration from the raw parquet.
 

@@ -19,7 +19,7 @@ Scoring: log P(w2|w1) = ln((c(w1,w2) + k) / (c(w1) + k*V)), with V the
 unigram vocabulary size; unseen bigrams fall back to the same smoothed
 formula with c=0 (k/(c(w1)+kV)), and unseen left-words to ln(1/V).
 Mean over a doc's bigrams; single-word/empty docs score 0.0 by
-convention. Determinism contract (same as pq_adc_topk's): each bigram's
+convention. Determinism contract: each bigram's
 log-prob is quantized to INTEGER MICRO-UNITS (round(lp*1e6) as int64)
 before aggregation, the per-doc sum is an exact int64 (order-independent
 — F.avg over doubles is not, since partial-aggregation order varies),

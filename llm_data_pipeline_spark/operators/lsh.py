@@ -47,18 +47,15 @@ def band_rows(
     id_col: str = "doc_id",
     signature_col: str = "signature",
     hash_fn=None,
-    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Explode each document into one row per band:
-    (band_id, band_hash, doc_id, ts, length[, carry...]).
+    (band_id, band_hash, doc_id, ts, length).
 
     band_hash = sha1 of the comma-joined signature slice (reference
     dedup/dedup.py:18-24 — signed-long string rendering here, equality-only
     use makes the representation irrelevant). ``hash_fn`` overrides the
     digest (band_index_rows passes F.md5 so the PERSISTED index key is
     DuckDB-replayable); semantics are unchanged under any injective digest.
-    ``carry`` passes extra columns of ``df_sig`` through unchanged (the
-    tagged-union incremental path keeps its side flag on the band rows).
     """
     hash_fn = hash_fn or F.sha1
     ts = F.col("ts") if "ts" in df_sig.columns else F.lit(0).cast("long")
@@ -71,7 +68,6 @@ def band_rows(
     return (
         df_sig.select(
             F.col(id_col).alias("doc_id"),
-            *carry,
             ts.alias("ts"),
             length.cast("long").alias("length"),
             F.posexplode(
@@ -221,7 +217,6 @@ def band_bucket_stats(
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 25,
-    driver_dsu_threshold: int = DRIVER_MAX_ROWS,
 ) -> DataFrame:
     """Connected components over an undirected edge list, size-gated.
 
@@ -229,7 +224,7 @@ def connected_components(
 
     Two physical strategies behind one semantic:
 
-    - **Small graphs** (≤ ``driver_dsu_threshold`` edges, counted after a
+    - **Small graphs** (≤ ``DRIVER_MAX_ROWS`` edges, counted after a
       persist so the upstream pair-generation runs once): collect the edge
       list and run path-compressed union-find with union-by-min on the
       driver — one job instead of one-per-propagation-round. This is the
@@ -255,7 +250,7 @@ def connected_components(
     # lineage so every later action plans a trivial RDD scan. Blocks are
     # freed by the ContextCleaner once the frame is garbage collected.
     edges = edges.transform(cut_lineage, eager=True)
-    if edges.count() <= driver_dsu_threshold:
+    if edges.count() <= DRIVER_MAX_ROWS:
         return _driver_dsu_components(edges)
     return _propagation_components(edges, max_iterations)
 
@@ -387,137 +382,15 @@ def _driver_dsu_components(edges: DataFrame) -> DataFrame:
     )
 
 
-def minhash_incremental_dedup(
-    base_sig: DataFrame,
-    new_sig: DataFrame,
-    rows_per_band: int = DEFAULT_ROWS_PER_BAND,
-    bucket_cap: int = DEFAULT_BUCKET_CAP,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Incremental fuzzy dedup: screen a signature-bearing increment
-    against an already-deduped base corpus — the operator a continuous-
-    ingest pipeline runs daily (the fuzzy twin of
-    operators/bloom.py:incremental_exact_dedup).
-
-    Returns the increment rows with ``kept: boolean`` appended.
-
-    Edges considered:
-      (a) new x base same-LSH-bucket pairs — the ONLY place the base is
-          touched. At 100 TB the base band rows are a precomputed index
-          bucketed/stored by (band_id, band_hash), so the equi-join
-          shuffles the (small) increment to the index, never re-shuffles
-          or re-signs the base corpus, and NO base x base pairs are ever
-          generated (that would re-dedup the whole corpus every day).
-      (b) new x new pairs — the increment dedups against itself.
-
-    Keep rule on the connected components of (a) ∪ (b): a component that
-    contains ANY base doc keeps none of its increment members (the base
-    representative is canonical by construction — the base is already
-    deduped); an all-new component keeps its (ts, length, doc_id)-desc
-    canonical, matching minhash_dedup. Increment docs touching no edge
-    are kept. Doc ids must be disjoint across the two inputs.
-
-    Bucket caps are applied to the UNION of both sides' band rows, so a
-    degenerate bucket (e.g. the all-zero empty-text signature) is dropped
-    consistently regardless of which side its members came from.
-    """
-    bb = band_rows(base_sig, rows_per_band, id_col=id_col).transform(cut_lineage, 
-        eager=False
-    )
-    bn = band_rows(new_sig, rows_per_band, id_col=id_col).transform(cut_lineage, 
-        eager=False
-    )
-    keys = ["band_id", "band_hash"]
-    sizes = (
-        bb.select(*keys)
-        .unionByName(bn.select(*keys))
-        .groupBy(*keys)
-        .agg(F.count("*").alias("n"))
-        .where((F.col("n") >= 2) & (F.col("n") <= bucket_cap))
-        .select(*keys)
-    )
-    bbs = bb.join(sizes, keys, "left_semi")
-    bns = bn.join(sizes, keys, "left_semi")
-    nb = (
-        bns.select(*keys, F.col("doc_id").alias("u"))
-        .join(bbs.select(*keys, F.col("doc_id").alias("v")), keys)
-        .select("u", "v")
-        .dropDuplicates(["u", "v"])
-    )
-    nn = (
-        bns.select(*keys, F.col("doc_id").alias("u"))
-        .join(bns.select(*keys, F.col("doc_id").alias("v")), keys)
-        .where(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .dropDuplicates(["u", "v"])
-    )
-    return _incremental_keep(
-        base_sig.select(F.col(id_col)), new_sig, nb.unionByName(nn), id_col
-    )
-
-
-def minhash_incremental_dedup_tagged(
-    sig: DataFrame,
-    new_col: str,
-    rows_per_band: int = DEFAULT_ROWS_PER_BAND,
-    bucket_cap: int = DEFAULT_BUCKET_CAP,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """:func:`minhash_incremental_dedup` over ONE signed frame carrying a
-    boolean side flag (``new_col``) — the shape that lets base ∪ increment
-    be signed in a single Arrow pass (r10, guide §4). The two-frame
-    variant banded each filtered side separately, so the bucket-size union
-    was a 2 x parallelism-task Python stage re-running the signature UDF
-    on both branches (measured: the dominant stage of
-    minhash_incremental_dedup, ~0.8 s/task of fixed Arrow overhead x 64
-    tasks). Here the band rows are exploded ONCE over the whole frame
-    (side flag carried through), pinned behind one lazy checkpoint, and
-    every later consumer — the cap union, both semi-join sides, the edge
-    joins — filters the checkpointed band rows instead of re-deriving
-    them. Identical edges, caps and keep rule; same oracle."""
-    bands = band_rows(
-        sig, rows_per_band, id_col=id_col, carry=(new_col,)
-    ).transform(cut_lineage, eager=False)
-    bb = bands.where(~F.col(new_col))
-    bn = bands.where(F.col(new_col))
-    keys = ["band_id", "band_hash"]
-    sizes = (
-        bands.groupBy(*keys)
-        .agg(F.count("*").alias("n"))
-        .where((F.col("n") >= 2) & (F.col("n") <= bucket_cap))
-        .select(*keys)
-    )
-    bbs = bb.join(sizes, keys, "left_semi")
-    bns = bn.join(sizes, keys, "left_semi")
-    nb = (
-        bns.select(*keys, F.col("doc_id").alias("u"))
-        .join(bbs.select(*keys, F.col("doc_id").alias("v")), keys)
-        .select("u", "v")
-        .dropDuplicates(["u", "v"])
-    )
-    nn = (
-        bns.select(*keys, F.col("doc_id").alias("u"))
-        .join(bns.select(*keys, F.col("doc_id").alias("v")), keys)
-        .where(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .dropDuplicates(["u", "v"])
-    )
-    return _incremental_keep(
-        sig.where(~F.col(new_col)).select(F.col(id_col)),
-        sig.where(F.col(new_col)).drop(new_col),
-        nb.unionByName(nn),
-        id_col,
-    )
-
-
 def _incremental_keep(
     base_ids: DataFrame, new_sig: DataFrame, edges: DataFrame, id_col: str
 ) -> DataFrame:
-    """Shared keep-rule tail of the incremental dedup variants: components
-    over the (new x base) ∪ (new x new) edges, drop every increment member
-    of a component containing ANY base doc, keep the (ts, length, doc_id)-
-    desc canonical of all-new components. ``base_ids`` needs only the id
-    column (the base is already deduped — no metadata enters the rule)."""
+    """Keep-rule tail of minhash_incremental_dedup_indexed's distributed path:
+    components over the (new x base) ∪ (new x new) edges, drop every
+    increment member of a component containing ANY base doc, keep the (ts,
+    length, doc_id)-desc canonical of all-new components. ``base_ids`` needs
+    only the id column (the base is already deduped — no metadata enters the
+    rule)."""
     comps = connected_components(edges)
 
     base_meta = base_ids.select(
@@ -611,21 +484,36 @@ def minhash_incremental_dedup_indexed(
     bucket_cap: int = DEFAULT_BUCKET_CAP,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Incremental fuzzy dedup against a PERSISTED band index — the
-    physical deployment of minhash_incremental_dedup at 100 TB.
+    """Incremental fuzzy dedup: screen a signature-bearing increment
+    against an already-deduped base corpus through the base's band index —
+    the operator a continuous-ingest pipeline runs daily (the fuzzy twin
+    of operators/bloom.py:incremental_exact_dedup). Returns the increment
+    rows with ``kept: boolean`` appended.
+
+    Edges are the new x base and new x new same-bucket pairs; no base x
+    base pair is ever generated. A bucket is capped on its combined size
+    over both sides, so a degenerate bucket (e.g. the all-zero empty-text
+    signature) is dropped whichever side its members came from. Keep rule
+    on the connected components of those edges: a component holding ANY
+    base doc keeps none of its increment members (the base is already
+    deduped, so its member is canonical); an all-new component keeps its
+    (ts, length, doc_id)-desc canonical, matching minhash_dedup. Increment
+    docs touching no edge are kept. Doc ids must be disjoint across base
+    and increment.
 
     ``index_bands`` is the base corpus's (bh, doc_id) band-index table,
     written ONCE bucketed (and sorted) by ``bh`` (see band_index_rows /
     skew.write_bucketed), and ``index_counts`` its band_index_counts
-    table (bh, base_n). The daily run never re-reads base text, never
-    recomputes base signatures and never re-aggregates the base band rows:
-    only buckets the increment touches can form an edge, so their
-    combined size base_n + new_n is all the cap needs. Semantics are
-    identical to minhash_incremental_dedup with the same cap/keep rules
-    (``bh`` is a bijection of (band_id, band_hash), so per-bh caps equal
-    per-(band_id, band_hash) caps); the graded query reuses the same
-    oracle. ``new_sig`` is read more than once, so pass a materialized frame
-    (both callers read it from parquet).
+    table (bh, base_n). A caller holding base signatures instead builds
+    both with band_index_rows + band_index_counts. The daily run never
+    re-reads base text, never recomputes base signatures and never
+    re-aggregates the base band rows: only buckets the increment touches
+    can form an edge, so their combined size base_n + new_n is all the cap
+    needs (``bh`` is a bijection of (band_id, band_hash), so per-bh caps
+    equal per-(band_id, band_hash) caps). The graded queries
+    minhash_incremental_dedup and minhash_bucketed_index_dedup share one
+    oracle, a full dedup of base ∪ increment. ``new_sig`` is read more
+    than once, so pass a materialized frame (parquet or a lineage cut).
 
     Size gate. When the increment has at most DRIVER_MAX_ROWS band rows
     and Q2 below would return at most DRIVER_MAX_ROWS base rows, the

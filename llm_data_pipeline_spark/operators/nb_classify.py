@@ -25,7 +25,7 @@ fits, shuffle join at trillion-token vocab, same plan otherwise), and
 the per-document gram count G_d folds the smoothing denominator in with
 one multiplication.
 
-Determinism contract (same as lm_score/pq_adc): every ln is quantized
+Determinism contract (same as lm_score): every ln is quantized
 to INTEGER MICRO-UNITS (round(ln(x)*1e6) as int64) before any
 aggregation; per-(doc, lang) totals are exact int64 sums, so partial-
 aggregation order cannot change the result; argmax ties break on the

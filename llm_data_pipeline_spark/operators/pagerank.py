@@ -5,7 +5,7 @@ prior web-curation pipelines attach to documents (Common Crawl publishes
 exactly this as its domain-level ranking; RefinedWeb/C4-class pipelines
 use such rankings as quality signals). Implemented as a fixed-iteration
 power method in pure integer micro-units so a SQL oracle replays the whole
-trajectory bit-identically (same convention as the in-engine k-means):
+trajectory bit-identically:
 
 - ranks are BIGINT micro-units, init 1_000_000 per node (per-node mass 1);
 - an edge (s, d, w) carries ``(rank_s * w) div out_w_s`` to ``d`` — integer

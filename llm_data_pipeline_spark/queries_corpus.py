@@ -682,9 +682,9 @@ def _km_oracle(k: int = _KM_K, iters: int = _KM_ITERS, dim: int = _KM_DIM) -> st
 def embedding_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Lloyd k-means trained IN-ENGINE over the embeddings
     table (k=8, 3 iterations, smallest-id init) and graded on the final
-    per-cluster sizes + inertia (operators/kmeans.py). Unlike the ANN
-    family's committed-literal codebooks, the oracle re-derives EVERY
-    centroid of EVERY iteration from raw parquet via unrolled CTEs —
+    per-cluster sizes + inertia (operators/kmeans.py). The oracle
+    re-derives EVERY centroid of EVERY iteration from raw parquet via
+    unrolled CTEs —
     possible because the trajectory is integer-exact: micro-quantized
     vectors, associative int64 distances, tie-to-smallest-id assignment,
     pure-integer rounded-division centroid updates."""
@@ -2409,8 +2409,7 @@ def quality_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties stay integral (no 0.5 ever touches the value; auc_ppm by rounded
     integer division at the end). The oracle replays the ENTIRE chain —
     the classifier's 3-iteration GD trajectory (shared _qcls_ctes) AND
-    the rank-sum — so the AUC number itself is hash-checked, the
-    eval-side twin of the hash-checked recall numbers in the ANN family.
+    the rank-sum — so the AUC number itself is hash-checked.
     At 100 TB the window runs over the distinct-margin table (bounded by
     score resolution, not corpus rows); a range-partitioned two-pass
     prefix sum is the drop-in if that table ever outgrows one executor

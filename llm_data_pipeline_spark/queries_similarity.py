@@ -1,153 +1,23 @@
-"""Similarity-search queries over the embeddings table.
+"""Exact similarity queries over the embeddings table.
 
-The exact paths (brute-force top-k, near-dup pairs, label centroids, kNN
-label vote) are oracle-checked: Spark's sequential-fold dot product in
+Every path here is oracle-checked: Spark's sequential-fold dot product in
 double is bit-identical to DuckDB's list_dot_product, and scores are
-rounded to 6 dp before ranking on both sides. The hyperplane-LSH path is
-approximate and registered rows-only.
+rounded to 6 dp before ranking on both sides. The integer-exact training
+passes (k-center selection, common-direction removal, margin mining)
+quantize to micro-units so DuckDB replays their whole trajectory.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from llm_data_pipeline_spark.data.codebooks import (
-    IVF_CODEBOOK,
-    ivf_codebook_df,
-    PQ_CODEBOOK,
-    PQ_RESIDUAL_CODEBOOK,
-)
 from llm_data_pipeline_spark.operators.similarity import (
     brute_force_topk,
-    hyperplane_lsh_topk,
-    ivf_flat_topk,
-    near_dup_pairs,
     near_dup_pairs_blocked,
 )
 from llm_data_pipeline_spark.queries import query, table
-from llm_data_pipeline_spark.functions.checkpoint import cut_lineage
-from llm_data_pipeline_spark.functions.localframe import local_df
 
-
-_ANN_COUNT_CACHE: dict = {}
-
-
-def _ann_books(emb, _count_key: str | None = None) -> dict:
-    """Pick codebooks + geometry by CORPUS SIZE (operators/similarity.py:
-    ann_geometry — the ~sqrt(n) rule). Corpora up to 1000 vectors use the
-    committed small-tier literals the DuckDB oracles replay (the graded
-    path, sf0.01); larger corpora load the large-tier literals trained on
-    the bench corpus (data/codebooks_large.py), so recall survives corpus
-    growth instead of collapsing with a frozen nlist (measured: 0.07 ->
-    0.51 recall@10 for IVF-PQ at sf0.1). The count is one parquet
-    metadata-only job.
-
-    The DuckDB oracles of the _ann_books-backed graded queries embed the
-    SMALL-tier constants (n_probe 4, the committed 16-list/4x16 books) as
-    literals — they can only replay a small-tier corpus. Grading any
-    corpus that routes to the large tier would mismatch BY CONSTRUCTION,
-    so that path fails loudly here instead: bench runs (which legitimately
-    serve the large tier at sf0.1) declare themselves via
-    SPARK_GRAFT_BENCH=1 / ANN large-tier unit tests via the same flag;
-    anything else reaching the large tier is an SF/testdata change that
-    must be accompanied by re-derived oracle literals."""
-    import os as _os
-
-    from llm_data_pipeline_spark.operators.similarity import ann_geometry
-
-    # the tier decision depends only on the immutable corpus size: memoize
-    # the count per (session, sf_dir) so the ~15 ANN queries stop paying a
-    # count job per build (same rationale and session key as queries.table's
-    # schema cache)
-    app_id = emb.sparkSession.sparkContext.applicationId
-    key = (app_id, _count_key) if _count_key else None
-    n = _ANN_COUNT_CACHE.get(key) if key else None
-    if n is None:
-        n = emb.count()
-        if key:
-            _ANN_COUNT_CACHE[key] = n
-    geo = ann_geometry(n)
-    if geo["tier"] != "small" and _os.environ.get("SPARK_GRAFT_BENCH") != "1":
-        raise RuntimeError(
-            f"ANN corpus has {n} vectors (large tier) but the graded "
-            "oracles replay small-tier literals (n_probe 4, committed "
-            "small codebooks). If this is a bench/serving run set "
-            "SPARK_GRAFT_BENCH=1; if the GRADED corpus really grew, "
-            "retrain/commit small-tier oracle literals to match "
-            "(scripts/gen_codebooks.py) and update the oracle n_probe "
-            "from ann_geometry(n)."
-        )
-    if geo["tier"] == "small":
-        return {
-            "geo": geo,
-            "pq": PQ_CODEBOOK,
-            "ivf": IVF_CODEBOOK,
-            "rpq": PQ_RESIDUAL_CODEBOOK,
-        }
-    from llm_data_pipeline_spark.data.codebooks_large import (
-        GEOMETRY,
-        IVF_CODEBOOK_L,
-        PQ_CODEBOOK_L,
-        PQ_RESIDUAL_CODEBOOK_L,
-    )
-
-    # the committed books fix their own geometry; if the corpus outgrows
-    # them (ann_geometry would ask for more lists than were trained),
-    # serving degrades gracefully and the recall floors in
-    # tests/test_quality_gates.py flag the retrain instead of this
-    # silently shipping a stale index
-    geo = dict(GEOMETRY)
-    geo["shortlist"] = max(geo["shortlist"], n // 20)
-    return {
-        "geo": geo,
-        "pq": PQ_CODEBOOK_L,
-        "ivf": IVF_CODEBOOK_L,
-        "rpq": PQ_RESIDUAL_CODEBOOK_L,
-    }
-
-
-def _sql_dlist(vec) -> str:
-    """A DOUBLE[] literal whose decimal reprs parse to the exact same
-    binary doubles in DuckDB as the Python floats do on the Spark side
-    (repr is shortest-round-trip; both parsers are correctly rounded)."""
-    return "[" + ", ".join(repr(float(x)) for x in vec) + "]::DOUBLE[]"
-
-
-# cb(code, m, cv): the committed per-subspace k-means PQ codebook
-_PQ_CB_VALUES = ",\n      ".join(
-    f"({c}, {m}, {_sql_dlist(vec)})"
-    for m, book in enumerate(PQ_CODEBOOK)
-    for c, vec in enumerate(book)
-)
-_PQ_CB_SQL = f"""
-    cb AS (
-      SELECT * FROM (VALUES
-      {_PQ_CB_VALUES}
-      ) AS t(code, m, cv)
-    )"""
-
-# rcb(code, m, cv): residual PQ books for IVF-PQ
-_RPQ_CB_SQL = f"""
-    rcb AS (
-      SELECT * FROM (VALUES
-      {",{nl}      ".format(nl=chr(10)).join(
-          f"({c}, {m}, {_sql_dlist(vec)})"
-          for m, book in enumerate(PQ_RESIDUAL_CODEBOOK)
-          for c, vec in enumerate(book)
-      )}
-      ) AS t(code, m, cv)
-    )"""
-
-# cents(list_id, cvec): the committed full-dimension IVF codebook
-_IVF_CB_SQL = (
-    "cents AS (\n      SELECT * FROM (VALUES\n      "
-    + ",\n      ".join(
-        f"({i}, {_sql_dlist(vec)})" for i, vec in enumerate(IVF_CODEBOOK)
-    )
-    + "\n      ) AS t(list_id, cvec)\n    )"
-)
 
 def cos_sql(a: str, b: str) -> str:
     """Rounded cosine-similarity SQL between two DOUBLE[] expressions."""
@@ -296,1099 +166,6 @@ def embedding_knn_label_vote(spark: SparkSession, sf_dir: str):
     )
 
 
-def _sig_cte_sql(nbits: int, n_tables: int, dim: int, seed: int) -> str:
-    """WITH-body producing the ``sig`` CTE: DuckDB replay of the seeded
-    hyperplane signatures.
-
-    The Spark side applies seeded numpy hyperplanes as literal arrays, so
-    the bucketing is a pure function of the data: emit the SAME planes as
-    SQL literals (repr round-trips doubles exactly) and recompute
-    bucket = sum of sign bits with list_dot_product. Sequential-fold dot
-    products are bit-identical across the engines, so every sign — and
-    therefore every bucket and candidate set — matches.
-    """
-    from llm_data_pipeline_spark.operators.similarity import _hyperplanes
-
-    planes = _hyperplanes(nbits, dim, seed, n_tables)
-    bcols = []
-    for t in range(n_tables):
-        bits = []
-        for j in range(nbits):
-            lit = "[" + ", ".join(repr(float(x)) for x in planes[t, j]) + "]"
-            bits.append(
-                f"CASE WHEN list_dot_product(v, {lit}) >= 0 "
-                f"THEN {1 << j} ELSE 0 END"
-            )
-        bcols.append("(" + " + ".join(bits) + f") AS b{t}")
-    structs = ", ".join(
-        f"struct_pack(table_id := {t}, bucket := b{t})" for t in range(n_tables)
-    )
-    return f"""
-    e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    buckets AS (SELECT vec_id, v, {", ".join(bcols)} FROM e),
-    sig AS (
-      SELECT vec_id, v, u.table_id AS table_id, u.bucket AS bucket
-      FROM (SELECT vec_id, v, unnest([{structs}]) AS u FROM buckets)
-    )"""
-
-
-def _lsh_oracle_sql(nbits: int, n_tables: int, dim: int, seed: int, k: int) -> str:
-    """DuckDB replay of the hyperplane-LSH top-k path (see _sig_cte_sql)."""
-    return f"""
-    WITH {_sig_cte_sql(nbits, n_tables, dim, seed)},
-    q AS (SELECT vec_id AS query_id, table_id, bucket FROM sig
-          WHERE vec_id % 100 = 0),
-    cand_ids AS (
-      SELECT DISTINCT q.query_id, s.vec_id
-      FROM sig s JOIN q ON s.table_id = q.table_id AND s.bucket = q.bucket
-      WHERE s.vec_id <> q.query_id
-    ),
-    scored AS (
-      SELECT c.query_id, c.vec_id, {cos_sql('eq.v', 'ec.v')} AS score
-      FROM cand_ids c
-      JOIN e eq ON eq.vec_id = c.query_id
-      JOIN e ec ON ec.vec_id = c.vec_id
-    )
-    SELECT query_id, vec_id, score, rank FROM (
-      SELECT query_id, vec_id, score,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY score DESC, vec_id) AS rank
-      FROM scored
-    ) WHERE rank <= {k}
-    ORDER BY query_id, rank
-    """
-
-
-@query(
-    "embedding_ann_lsh_topk",
-    oracle=_lsh_oracle_sql(nbits=4, n_tables=16, dim=64, seed=42, k=10),
-    tags=("similarity", "ann", "approximate"),
-)
-def embedding_ann_lsh_topk(spark: SparkSession, sf_dir: str):
-    """Approximate top-k via random-hyperplane LSH buckets + exact re-rank
-    (the 100 TB path: bucket join instead of cross product). The seeded
-    hyperplanes make the approximation deterministic, so even this
-    approximate path is hash-checked against a DuckDB replay; recall vs
-    brute force is additionally asserted in unit tests."""
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    # nbits=4/n_tables=16 tuned for this corpus's near-orthogonal neighbors
-    # (top-10 cosine ~0.3); tighter clusters at scale warrant more bits.
-    return hyperplane_lsh_topk(emb, queries, dim=64, k=10, nbits=4, n_tables=16).select(
-        "query_id", "vec_id", "score", "rank"
-    ).orderBy("query_id", "rank")
-
-
-_ND_LSH_NBITS, _ND_LSH_TABLES, _ND_LSH_CAP = 6, 8, 20000
-
-
-@query(
-    "embedding_near_dup_lsh",
-    oracle=f"""
-    WITH {_sig_cte_sql(_ND_LSH_NBITS, _ND_LSH_TABLES, 64, 42)},
-    capped AS (
-      SELECT vec_id, table_id, bucket FROM (
-        SELECT vec_id, table_id, bucket,
-               row_number() OVER (PARTITION BY table_id, bucket
-                                  ORDER BY vec_id) AS rn
-        FROM sig
-      ) WHERE rn <= {_ND_LSH_CAP}
-    ),
-    pairs AS (
-      SELECT DISTINCT a.vec_id AS u, b.vec_id AS v
-      FROM capped a JOIN capped b
-        ON a.table_id = b.table_id AND a.bucket = b.bucket
-       AND a.vec_id < b.vec_id
-    )
-    SELECT p.u, p.v, {cos_sql('ea.v', 'eb.v')} AS score
-    FROM pairs p
-    JOIN e ea ON ea.vec_id = p.u
-    JOIN e eb ON eb.vec_id = p.v
-    WHERE {cos_sql('ea.v', 'eb.v')} >= 0.3
-    ORDER BY 1, 2
-    """,
-    tags=("similarity", "dedup", "lsh", "approximate"),
-)
-def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str):
-    """Subquadratic near-dup pairs: sign-LSH pre-bucketing bounds the
-    candidate set to same-bucket co-occurrences (sum of squared bucket
-    sizes, not n^2); survivors re-scored with the exact fold. The seeded
-    planes make even this approximate path fully oracle-replayable."""
-    from llm_data_pipeline_spark.operators.similarity import near_dup_pairs_lsh
-
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    return near_dup_pairs_lsh(
-        emb,
-        dim=64,
-        threshold=0.3,
-        nbits=_ND_LSH_NBITS,
-        n_tables=_ND_LSH_TABLES,
-        bucket_cap=_ND_LSH_CAP,
-    ).orderBy("u", "v")
-
-
-# shared by embedding_ivf_flat_topk and its persisted-index twin
-# (identical semantics, different physical plan — the ANN analog of
-# minhash_incremental_dedup vs minhash_bucketed_index_dedup)
-_IVF_FLAT_ORACLE = f"""
-    WITH {_PAIR_BASE.strip()},
-    {_IVF_CB_SQL.strip()},
-    assign AS (
-      SELECT vec_id, list_id FROM (
-        SELECT e.vec_id, c.list_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {cos_sql('e.v', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM e CROSS JOIN cents c
-      ) WHERE rn = 1
-    ),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 100 = 0),
-    probes AS (
-      SELECT query_id, list_id FROM (
-        SELECT q.query_id, c.list_id,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {cos_sql('q.qv', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM q CROSS JOIN cents c
-      ) WHERE rn <= 4
-    ),
-    cands AS (
-      SELECT p.query_id, a.vec_id, {cos_sql('q.qv', 'e.v')} AS score
-      FROM probes p
-      JOIN q ON q.query_id = p.query_id
-      JOIN assign a ON a.list_id = p.list_id
-      JOIN e ON e.vec_id = a.vec_id
-      WHERE a.vec_id <> p.query_id
-    )
-    SELECT query_id, vec_id, score, rank FROM (
-      SELECT query_id, vec_id, score,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY score DESC, vec_id) AS rank
-      FROM cands
-    ) WHERE rank <= 10
-    ORDER BY query_id, rank
-    """
-
-
-@query(
-    "embedding_ivf_flat_topk",
-    oracle=_IVF_FLAT_ORACLE,
-    tags=("similarity", "ann", "ivf"),
-)
-def embedding_ivf_flat_topk(spark: SparkSession, sf_dir: str):
-    """IVF-Flat ANN (inverted lists + probing) with the TRAINED k-means
-    codebook (committed literals, data/codebooks.py — deterministic Lloyd
-    recipe, scripts/gen_codebooks.py); the oracle replays the identical
-    build+probe relationally from the same literals, so the approximation
-    itself is hash-checked, not just row counts. Codebook + probe width
-    scale with corpus size (_ann_books): the small tier is the graded
-    oracle replay; larger corpora route through the large-tier books."""
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    books = _ann_books(emb, _count_key=sf_dir)
-    cents = local_df(spark, 
-        [(i, [float(x) for x in v]) for i, v in enumerate(books["ivf"])],
-        "list_id long, cvec array<double>",
-    )
-    return (
-        ivf_flat_topk(emb, queries, k=10,
-                      n_probe=books["geo"]["n_probe_flat"], centroids=cents)
-        .select("query_id", "vec_id", "score", "rank")
-        .orderBy("query_id", "rank")
-    )
-
-
-@query(
-    "embedding_ann_recall_graded",
-    oracle=f"""
-    WITH {_PAIR_BASE.strip()},
-    {_IVF_CB_SQL.strip()},
-    q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 100 = 0),
-    exact AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.query_id, e.vec_id,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {cos_sql('qv', 'e.v')} DESC,
-                                           e.vec_id) AS rank
-        FROM e CROSS JOIN q
-        WHERE e.vec_id <> q.query_id
-      ) WHERE rank <= 10
-    ),
-    assign AS (
-      SELECT vec_id, list_id FROM (
-        SELECT e.vec_id, c.list_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {cos_sql('e.v', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM e CROSS JOIN cents c
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT query_id, list_id FROM (
-        SELECT q.query_id, c.list_id,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {cos_sql('q.qv', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM q CROSS JOIN cents c
-      ) WHERE rn <= 4
-    ),
-    approx AS (
-      SELECT query_id, vec_id FROM (
-        SELECT p.query_id, a.vec_id,
-               row_number() OVER (PARTITION BY p.query_id
-                                  ORDER BY {cos_sql('q.qv', 'e.v')} DESC,
-                                           a.vec_id) AS rank
-        FROM probes p
-        JOIN q ON q.query_id = p.query_id
-        JOIN assign a ON a.list_id = p.list_id
-        JOIN e ON e.vec_id = a.vec_id
-        WHERE a.vec_id <> p.query_id
-      ) WHERE rank <= 10
-    )
-    SELECT x.query_id,
-           CAST(coalesce(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 END), 0)
-                AS BIGINT) AS n_hits,
-           CAST(coalesce(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 END), 0)
-                * 100000 AS BIGINT) AS recall_ppm
-    FROM exact x
-    LEFT JOIN approx a ON a.query_id = x.query_id AND a.vec_id = x.vec_id
-    GROUP BY x.query_id
-    ORDER BY x.query_id
-    """,
-    tags=("similarity", "ann", "recall", "audit"),
-)
-def embedding_ann_recall_graded(spark: SparkSession, sf_dir: str):
-    """ANN quality as a GRADED fact, not a bench side-note: recall@10 of
-    the IVF-Flat index against the exact brute-force top-10, computed
-    in-engine per query point — the oracle replays BOTH retrieval chains
-    (exact scoring + the trained-codebook build/probe) and the hit
-    counting, so the recall NUMBER itself is hash-checked (the embedding
-    twin of minhash_lsh_recall_eval). recall_ppm = hits * 1e6 / 10 in
-    exact integers. Uses the same corpus-size geometry selection as the
-    serving queries (small tier replayed at the graded SF; the floors in
-    tests/test_quality_gates.py cover the large tier)."""
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    books = _ann_books(emb, _count_key=sf_dir)
-    cents = local_df(spark, 
-        [(i, [float(x) for x in v]) for i, v in enumerate(books["ivf"])],
-        "list_id long, cvec array<double>",
-    )
-    exact = brute_force_topk(emb, queries, k=10).select(
-        "query_id", "vec_id"
-    )
-    approx = ivf_flat_topk(
-        emb, queries, k=10, n_probe=books["geo"]["n_probe_flat"],
-        centroids=cents,
-    ).select("query_id", F.col("vec_id").alias("a_vec_id"))
-    hits = exact.join(
-        approx,
-        (exact.query_id == approx.query_id)
-        & (F.col("vec_id") == F.col("a_vec_id")),
-        "left",
-    ).select(exact.query_id, F.col("a_vec_id").isNotNull().alias("hit"))
-    return (
-        hits.groupBy("query_id")
-        .agg(
-            F.coalesce(F.sum(F.when(F.col("hit"), 1)), F.lit(0))
-            .cast("long")
-            .alias("n_hits")
-        )
-        .select(
-            "query_id",
-            "n_hits",
-            (F.col("n_hits") * 100_000).cast("long").alias("recall_ppm"),
-        )
-        .orderBy("query_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# planted-cluster recall fixture (round-6 judge task #6): the synthetic
-# embeddings table is near-orthogonal random soup, which CEILING-BOUNDS
-# absolute ANN recall (IVF-Flat 0.57 at sf0.1) — a geometry bug and fixture
-# noise were indistinguishable. This fixture has real cluster structure, so
-# recall@10 >= 0.9 is achievable and asserted; a future assignment/probe/
-# slicing bug now reads as a recall collapse, not "the data is like that".
-# Deterministic modular generator (documented here, no RNG): 500 vectors in
-# 20 clusters of 25; vector i = center(i % 20) + noise(i), with
-#   center_c[j] = ((c*7 + j*13) % 37) / 37.0 - 0.5        (cluster geometry)
-#   noise_i[j]  = (((i*31 + j*17) % 11) - 5) / 200.0      (±0.025, tiny)
-# Integer modulars + one exact int/double division per term — bit-identical
-# across Spark and DuckDB. Queries are vec_id < 20 (one per cluster); the
-# IVF centroids are the TRUE centers (the fixture documents its own
-# codebook), n_probe=2.
-# ---------------------------------------------------------------------------
-
-_PLANTED_N, _PLANTED_C, _PLANTED_D = 500, 20, 16
-
-_PLANTED_FX_SQL = f"""
-    fx AS (
-      SELECT i AS vec_id,
-             list_transform(range({_PLANTED_D}), j ->
-               (((i % {_PLANTED_C}) * 7 + j * 13) % 37)::DOUBLE / 37.0 - 0.5
-               + (((i * 31 + j * 17) % 11) - 5)::DOUBLE / 200.0
-             ) AS v
-      FROM (SELECT unnest(range({_PLANTED_N})) AS i)
-    ),
-    pcents AS (
-      SELECT c AS list_id,
-             list_transform(range({_PLANTED_D}), j ->
-               ((c * 7 + j * 13) % 37)::DOUBLE / 37.0 - 0.5) AS cvec
-      FROM (SELECT unnest(range({_PLANTED_C})) AS c)
-    )"""
-
-
-def _planted_embeddings(spark: SparkSession):
-    c = F.col("vec_id") % _PLANTED_C
-    v = F.transform(
-        F.sequence(F.lit(0), F.lit(_PLANTED_D - 1)),
-        lambda j: ((c * 7 + j * 13) % 37).cast("double") / F.lit(37.0)
-        - F.lit(0.5)
-        + ((F.col("vec_id") * 31 + j * 17) % 11 - 5).cast("double")
-        / F.lit(200.0),
-    )
-    return spark.range(_PLANTED_N).select(
-        F.col("id").alias("vec_id"), v.alias("embedding")
-    )
-
-
-def _planted_centroids(spark: SparkSession):
-    return spark.range(_PLANTED_C).select(
-        F.col("id").alias("list_id"),
-        F.transform(
-            F.sequence(F.lit(0), F.lit(_PLANTED_D - 1)),
-            lambda j: ((F.col("id") * 7 + j * 13) % 37).cast("double")
-            / F.lit(37.0)
-            - F.lit(0.5),
-        ).alias("cvec"),
-    )
-
-
-@query(
-    "embedding_ann_recall_planted",
-    oracle=f"""
-    WITH {_PLANTED_FX_SQL.strip()},
-    q AS (SELECT vec_id AS query_id, v AS qv FROM fx
-          WHERE vec_id < {_PLANTED_C}),
-    exact AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.query_id, fx.vec_id,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {cos_sql('qv', 'fx.v')} DESC,
-                                           fx.vec_id) AS rank
-        FROM fx CROSS JOIN q
-        WHERE fx.vec_id <> q.query_id
-      ) WHERE rank <= 10
-    ),
-    assign AS (
-      SELECT vec_id, list_id FROM (
-        SELECT fx.vec_id, c.list_id,
-               row_number() OVER (PARTITION BY fx.vec_id
-                                  ORDER BY {cos_sql('fx.v', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM fx CROSS JOIN pcents c
-      ) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT query_id, list_id FROM (
-        SELECT q.query_id, c.list_id,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {cos_sql('q.qv', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM q CROSS JOIN pcents c
-      ) WHERE rn <= 2
-    ),
-    approx AS (
-      SELECT query_id, vec_id FROM (
-        SELECT p.query_id, a.vec_id,
-               row_number() OVER (PARTITION BY p.query_id
-                                  ORDER BY {cos_sql('q.qv', 'fx.v')} DESC,
-                                           a.vec_id) AS rank
-        FROM probes p
-        JOIN q ON q.query_id = p.query_id
-        JOIN assign a ON a.list_id = p.list_id
-        JOIN fx ON fx.vec_id = a.vec_id
-        WHERE a.vec_id <> p.query_id
-      ) WHERE rank <= 10
-    )
-    SELECT x.query_id,
-           CAST(coalesce(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 END), 0)
-                AS BIGINT) AS n_hits,
-           CAST(coalesce(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 END), 0)
-                * 100000 AS BIGINT) AS recall_ppm
-    FROM exact x
-    LEFT JOIN approx a ON a.query_id = x.query_id AND a.vec_id = x.vec_id
-    GROUP BY x.query_id
-    ORDER BY x.query_id
-    """,
-    tags=("similarity", "ann", "recall", "audit", "fixture"),
-)
-def embedding_ann_recall_planted(spark: SparkSession, sf_dir: str):
-    """IVF-Flat recall@10 on the PLANTED-CLUSTER fixture — the recall
-    number a healthy index must saturate: the corpus has genuine cluster
-    structure (20 tight clusters, generator documented above), the IVF
-    lists are the true centers, and every query's exact top-10 is its own
-    cluster-mates, so recall@10 >= 0.9 is achievable and ASSERTED
-    (tests/test_similarity.py + tests/test_quality_gates.py floor at
-    0.9). On the random
-    near-orthogonal embeddings table absolute recall is ceiling-bounded
-    by the data (0.57 IVF-Flat at sf0.1), so a geometry bug was
-    indistinguishable from fixture noise — here it reads as a collapse.
-    The oracle replays generation, exact ranking, assignment, probing,
-    and hit counting, so the recall NUMBER is hash-checked. sf_dir is
-    unused (self-contained fixture) — kept for the uniform signature."""
-    fx = _planted_embeddings(spark)
-    queries = fx.where(F.col("vec_id") < _PLANTED_C).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = brute_force_topk(fx, queries, k=10).select("query_id", "vec_id")
-    approx = ivf_flat_topk(
-        fx, queries, k=10, n_probe=2, centroids=_planted_centroids(spark)
-    ).select("query_id", F.col("vec_id").alias("a_vec_id"))
-    hits = exact.join(
-        approx,
-        (exact.query_id == approx.query_id)
-        & (F.col("vec_id") == F.col("a_vec_id")),
-        "left",
-    ).select(exact.query_id, F.col("a_vec_id").isNotNull().alias("hit"))
-    return (
-        hits.groupBy("query_id")
-        .agg(
-            F.coalesce(F.sum(F.when(F.col("hit"), 1)), F.lit(0))
-            .cast("long")
-            .alias("n_hits")
-        )
-        .select(
-            "query_id",
-            "n_hits",
-            (F.col("n_hits") * 100_000).cast("long").alias("recall_ppm"),
-        )
-        .orderBy("query_id")
-    )
-
-
-@query(
-    "embedding_pq_adc_topk",
-    oracle=f"""
-    WITH {_PAIR_BASE.strip()},
-    subs AS (
-      SELECT vec_id, m, v[m*16+1 : m*16+16] AS sv
-      FROM e, unnest(range(4)) t(m)
-    ),
-    {_PQ_CB_SQL.strip()},
-    enc AS (
-      SELECT s.vec_id, s.m, cb.code,
-             CAST(round((list_dot_product(s.sv, s.sv)
-                         - 2 * list_dot_product(s.sv, cb.cv)
-                         + list_dot_product(cb.cv, cb.cv)) * 1000000)
-                  AS BIGINT) AS d
-      FROM subs s JOIN cb ON cb.m = s.m
-    ),
-    codes AS (
-      SELECT vec_id, m, code FROM (
-        SELECT vec_id, m, code,
-               row_number() OVER (PARTITION BY vec_id, m
-                                  ORDER BY d, code) AS rn
-        FROM enc
-      ) WHERE rn = 1
-    ),
-    lut AS (
-      SELECT vec_id AS query_id, m, code, d AS dq
-      FROM enc WHERE vec_id % 100 = 0
-    ),
-    adist AS (
-      SELECT l.query_id, c.vec_id, CAST(sum(l.dq) AS BIGINT) AS adist
-      FROM codes c JOIN lut l ON l.m = c.m AND l.code = c.code
-      WHERE c.vec_id <> l.query_id
-      GROUP BY l.query_id, c.vec_id
-    )
-    SELECT query_id, vec_id, adist, CAST(rank AS BIGINT) AS rank FROM (
-      SELECT query_id, vec_id, adist,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY adist, vec_id) AS rank
-      FROM adist
-    ) WHERE rank <= 10
-    ORDER BY query_id, rank
-    """,
-    tags=("similarity", "ann", "pq"),
-)
-def embedding_pq_adc_topk(spark: SparkSession, sf_dir: str):
-    """Product-quantization ANN (operators/similarity.py:pq_adc_topk):
-    4x16-dim subspaces, TRAINED per-subspace k-means sub-centroids
-    (committed literals, data/codebooks.py), integer micro-unit ADC
-    sums — the memory-compressed scale path where search touches codes
-    and a per-query lookup table, never the vectors. The oracle replays
-    encode and ADC end to end from the identical centroid literals."""
-    from llm_data_pipeline_spark.operators.similarity import pq_adc_topk
-
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = pq_adc_topk(emb, queries, k=10, codebook=_ann_books(emb, _count_key=sf_dir)["pq"])
-    return out.select(
-        "query_id", "vec_id", "adist", F.col("rank").cast("long").alias("rank")
-    ).orderBy("query_id", "rank")
-
-
-@query(
-    "embedding_pq_rerank_topk",
-    oracle=f"""
-    WITH {_PAIR_BASE.strip()},
-    subs AS (
-      SELECT vec_id, m, v[m*16+1 : m*16+16] AS sv
-      FROM e, unnest(range(4)) t(m)
-    ),
-    {_PQ_CB_SQL.strip()},
-    enc AS (
-      SELECT s.vec_id, s.m, cb.code,
-             CAST(round((list_dot_product(s.sv, s.sv)
-                         - 2 * list_dot_product(s.sv, cb.cv)
-                         + list_dot_product(cb.cv, cb.cv)) * 1000000)
-                  AS BIGINT) AS d
-      FROM subs s JOIN cb ON cb.m = s.m
-    ),
-    codes AS (
-      SELECT vec_id, m, code FROM (
-        SELECT vec_id, m, code,
-               row_number() OVER (PARTITION BY vec_id, m
-                                  ORDER BY d, code) AS rn
-        FROM enc
-      ) WHERE rn = 1
-    ),
-    lut AS (
-      SELECT vec_id AS query_id, m, code, d AS dq
-      FROM enc WHERE vec_id % 100 = 0
-    ),
-    shortlist AS (
-      SELECT query_id, vec_id FROM (
-        SELECT l.query_id, c.vec_id,
-               row_number() OVER (PARTITION BY l.query_id
-                                  ORDER BY sum(l.dq), c.vec_id) AS rn
-        FROM codes c JOIN lut l ON l.m = c.m AND l.code = c.code
-        WHERE c.vec_id <> l.query_id
-        GROUP BY l.query_id, c.vec_id
-      ) WHERE rn <= 50
-    ),
-    rescored AS (
-      SELECT s.query_id, s.vec_id,
-             {cos_sql('q.v', 'c.v')} AS score
-      FROM shortlist s
-      JOIN e q ON q.vec_id = s.query_id
-      JOIN e c ON c.vec_id = s.vec_id
-    )
-    SELECT query_id, vec_id, score, CAST(rank AS BIGINT) AS rank FROM (
-      SELECT query_id, vec_id, score,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY score DESC, vec_id) AS rank
-      FROM rescored
-    ) WHERE rank <= 10
-    ORDER BY query_id, rank
-    """,
-    tags=("similarity", "ann", "pq", "rerank"),
-)
-def embedding_pq_rerank_topk(spark: SparkSession, sf_dir: str):
-    """Two-stage ANN (operators/similarity.py:pq_rerank_topk): the
-    compressed PQ index shortlists 50 candidates per query, then only
-    those fetch full vectors for an exact cosine re-rank to top-10 — the
-    standard recall-recovery recipe, with the expensive exact math on
-    shortlist x queries rows instead of corpus x queries."""
-    from llm_data_pipeline_spark.operators.similarity import pq_rerank_topk
-
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    books = _ann_books(emb, _count_key=sf_dir)
-    out = pq_rerank_topk(emb, queries, k=10,
-                         shortlist=books["geo"]["shortlist"],
-                         codebook=books["pq"])
-    return out.select(
-        "query_id", "vec_id", "score", F.col("rank").cast("long").alias("rank")
-    ).orderBy("query_id", "rank")
-
-
-@query(
-    "embedding_ivfpq_topk",
-    oracle=f"""
-    WITH {_PAIR_BASE.strip()},
-    {_IVF_CB_SQL.strip()},
-    {_RPQ_CB_SQL.strip()},
-    assign AS (
-      SELECT vec_id, list_id FROM (
-        SELECT e.vec_id, c.list_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {cos_sql('e.v', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM e CROSS JOIN cents c
-      ) WHERE rn = 1
-    ),
-    rsubs AS (
-      SELECT a.vec_id, a.list_id, m,
-             list_transform(range(16),
-                 i -> e.v[m*16 + i + 1] - c.cvec[m*16 + i + 1]) AS sv
-      FROM assign a
-      JOIN e USING (vec_id)
-      JOIN cents c USING (list_id),
-      unnest(range(4)) t(m)
-    ),
-    enc AS (
-      SELECT s.vec_id, s.list_id, s.m, rcb.code,
-             CAST(round((list_dot_product(s.sv, s.sv)
-                         - 2 * list_dot_product(s.sv, rcb.cv)
-                         + list_dot_product(rcb.cv, rcb.cv)) * 1000000)
-                  AS BIGINT) AS d
-      FROM rsubs s JOIN rcb ON rcb.m = s.m
-    ),
-    codes AS (
-      SELECT vec_id, list_id, m, code FROM (
-        SELECT vec_id, list_id, m, code,
-               row_number() OVER (PARTITION BY vec_id, m
-                                  ORDER BY d, code) AS rn
-        FROM enc
-      ) WHERE rn = 1
-    ),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 100 = 0),
-    probes AS (
-      SELECT query_id, list_id FROM (
-        SELECT q.query_id, c.list_id,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {cos_sql('q.qv', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM q CROSS JOIN cents c
-      ) WHERE rn <= 4
-    ),
-    qrsubs AS (
-      SELECT p.query_id, p.list_id, m,
-             list_transform(range(16),
-                 i -> q.qv[m*16 + i + 1] - c.cvec[m*16 + i + 1]) AS sv
-      FROM probes p
-      JOIN q USING (query_id)
-      JOIN cents c USING (list_id),
-      unnest(range(4)) t(m)
-    ),
-    lut AS (
-      SELECT s.query_id, s.list_id, s.m, rcb.code,
-             CAST(round((list_dot_product(s.sv, s.sv)
-                         - 2 * list_dot_product(s.sv, rcb.cv)
-                         + list_dot_product(rcb.cv, rcb.cv)) * 1000000)
-                  AS BIGINT) AS dq
-      FROM qrsubs s JOIN rcb ON rcb.m = s.m
-    ),
-    adist AS (
-      SELECT l.query_id, c.vec_id, CAST(sum(l.dq) AS BIGINT) AS adist
-      FROM codes c
-      JOIN lut l ON l.list_id = c.list_id AND l.m = c.m AND l.code = c.code
-      WHERE c.vec_id <> l.query_id
-      GROUP BY l.query_id, c.vec_id
-    )
-    SELECT query_id, vec_id, adist, CAST(rank AS BIGINT) AS rank FROM (
-      SELECT query_id, vec_id, adist,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY adist, vec_id) AS rank
-      FROM adist
-    ) WHERE rank <= 10
-    ORDER BY query_id, rank
-    """,
-    tags=("similarity", "ann", "ivf", "pq", "ivfpq"),
-)
-def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str):
-    """IVF-PQ with residual encoding + ADC (operators/similarity.py:
-    ivfpq_topk) — the production ANN index (FAISS IVFPQ shape): trained
-    IVF routing, per-list residuals, trained residual PQ codebooks
-    (committed literals), per-(query, probed-list) LUTs, integer
-    micro-unit ADC sums over only the probed lists' code rows. The
-    oracle replays the full index build AND search from the identical
-    centroid literals."""
-    from llm_data_pipeline_spark.operators.similarity import ivfpq_topk
-
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    books = _ann_books(emb, _count_key=sf_dir)
-    out = ivfpq_topk(
-        emb, queries, books["ivf"], books["rpq"], k=10,
-        n_probe=books["geo"]["n_probe_ivfpq"],
-    )
-    return out.select(
-        "query_id", "vec_id", "adist", F.col("rank").cast("long").alias("rank")
-    ).orderBy("query_id", "rank")
-
-
-@query(
-    "semantic_dedup_kept",
-    oracle=f"""
-    WITH {_PAIR_BASE.strip()},
-    {_IVF_CB_SQL.strip()},
-    assigned AS (
-      SELECT vec_id, v, list_id, csim FROM (
-        SELECT e.vec_id, e.v, c.list_id,
-               {cos_sql('e.v', 'c.cvec')} AS csim,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {cos_sql('e.v', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM e CROSS JOIN cents c
-      ) WHERE rn = 1
-    ),
-    pairs AS (
-      SELECT a.vec_id AS u, a.csim AS cu, b.vec_id AS w, b.csim AS cw
-      FROM assigned a JOIN assigned b
-        ON a.list_id = b.list_id AND a.vec_id < b.vec_id
-      WHERE {cos_sql('a.v', 'b.v')} >= 0.3
-    ),
-    dropped AS (
-      SELECT DISTINCT CASE WHEN cu > cw THEN u
-                           WHEN cw > cu THEN w
-                           ELSE greatest(u, w) END AS vec_id
-      FROM pairs
-    )
-    SELECT a.vec_id, CAST(a.list_id AS BIGINT) AS list_id,
-           a.csim AS centroid_sim
-    FROM assigned a ANTI JOIN dropped d ON a.vec_id = d.vec_id
-    ORDER BY vec_id
-    """,
-    tags=("similarity", "dedup", "semdedup"),
-)
-def semantic_dedup_kept(spark: SparkSession, sf_dir: str):
-    """SemDeDup semantic dedup (operators/semdedup.py, Abbas et al.
-    2023): k-means-cluster-bounded pairwise cosine, drop the
-    higher-centroid-similarity member of every >=0.3 pair. Uses the
-    TRAINED IVF k-means codebook (committed literals) so the oracle
-    replays assignment, pair generation, and the dominance anti-join
-    relationally from the same centroids."""
-    from llm_data_pipeline_spark.operators.semdedup import semantic_dedup
-
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    cents = ivf_codebook_df(spark)
-    return (
-        semantic_dedup(emb, cents, threshold=0.3)
-        .select("vec_id", F.col("list_id").cast("long").alias("list_id"),
-                "centroid_sim")
-        .orderBy("vec_id")
-    )
-
-
-@query(
-    "semantic_dedup_groups",
-    oracle=f"""
-    WITH RECURSIVE {_PAIR_BASE.strip()},
-    {_IVF_CB_SQL.strip()},
-    assigned AS (
-      SELECT vec_id, v, list_id, csim FROM (
-        SELECT e.vec_id, e.v, c.list_id,
-               {cos_sql('e.v', 'c.cvec')} AS csim,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {cos_sql('e.v', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM e CROSS JOIN cents c
-      ) WHERE rn = 1
-    ),
-    pairs AS (
-      SELECT a.vec_id AS u, b.vec_id AS v
-      FROM assigned a JOIN assigned b
-        ON a.list_id = b.list_id AND a.vec_id < b.vec_id
-      WHERE {cos_sql('a.v', 'b.v')} >= 0.3
-    ),
-    sym AS (SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs),
-    walk(id, comp) AS (
-      SELECT DISTINCT u, u FROM sym
-      UNION
-      SELECT s.v, w.comp FROM walk w JOIN sym s ON s.u = w.id
-    ),
-    comps AS (SELECT id AS vec_id, min(comp) AS component
-              FROM walk GROUP BY id),
-    members AS (
-      SELECT c.vec_id, c.component, a.csim AS centroid_sim
-      FROM comps c JOIN assigned a ON a.vec_id = c.vec_id
-    )
-    SELECT vec_id, component, centroid_sim,
-           (row_number() OVER (PARTITION BY component
-                               ORDER BY centroid_sim, vec_id) = 1) AS kept
-    FROM members
-    ORDER BY vec_id
-    """,
-    tags=("similarity", "dedup", "semdedup", "graph"),
-)
-def semantic_dedup_groups_q(spark: SparkSession, sf_dir: str):
-    """Paper-exact SemDeDup (operators/semdedup.py:semantic_dedup_groups):
-    duplicate groups = connected components of the same-cluster
-    >=0.3-cosine pair graph (the engine's size-gated CC operator); each
-    group keeps exactly its lowest-centroid-similarity member — Abbas et
-    al. 2023's per-group argmin. The oracle replays components with a
-    recursive min-label walk from the same committed centroid
-    literals."""
-    from llm_data_pipeline_spark.data.codebooks import IVF_CODEBOOK
-    from llm_data_pipeline_spark.operators.semdedup import (
-        semantic_dedup_groups,
-    )
-
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    cents = ivf_codebook_df(spark)
-    return (
-        semantic_dedup_groups(emb, cents, threshold=0.3)
-        .select("vec_id", "component", "centroid_sim", "kept")
-        .orderBy("vec_id")
-    )
-
-
-# documents -> signed hashed-trigram vectors (vecs(doc_id, v DOUBLE[64])),
-# shared by the hashed-embedding queries.
-_HASHED_VECS_SQL = """d AS (SELECT doc_id, lower(text) AS t FROM documents),
-    grams AS (
-      SELECT doc_id, substring(t, i, 3) AS gram
-      FROM d, unnest(range(1, greatest(length(t) - 1, 1))) AS u(i)
-    ),
-    hb AS (
-      SELECT doc_id, h % 64 AS bucket,
-             CASE WHEN (h // 256) % 2 = 1 THEN 1 ELSE -1 END AS sign
-      FROM (SELECT doc_id,
-                   ('0x' || substr(md5(gram), 1, 15))::BIGINT AS h
-            FROM grams)
-    ),
-    sums AS (SELECT doc_id, bucket, CAST(sum(sign) AS BIGINT) AS val
-             FROM hb GROUP BY 1, 2),
-    grid AS (SELECT d.doc_id, i AS bucket FROM d, unnest(range(64)) t(i)),
-    dense AS (
-      SELECT g.doc_id, g.bucket, CAST(coalesce(s.val, 0) AS DOUBLE) AS val
-      FROM grid g LEFT JOIN sums s
-        ON s.doc_id = g.doc_id AND s.bucket = g.bucket
-    ),
-    vecs AS (SELECT doc_id, list(val ORDER BY bucket) AS v
-             FROM dense GROUP BY doc_id)"""
-
-
-@query(
-    "text_hashed_embedding_near_dups",
-    oracle=f"""
-    WITH {_HASHED_VECS_SQL}
-    SELECT a.doc_id AS u, b.doc_id AS v,
-           {cos_sql('a.v', 'b.v')} AS score
-    FROM vecs a JOIN vecs b ON a.doc_id < b.doc_id
-    WHERE {cos_sql('a.v', 'b.v')} >= 0.9
-    ORDER BY u, v
-    """,
-    tags=("similarity", "dedup", "text", "hashing"),
-)
-def text_hashed_embedding_near_dups(spark: SparkSession, sf_dir: str):
-    """Model-free text semantic near-dup, end to end in-engine: documents
-    -> signed hashed-trigram embeddings (operators/hashed_embedding.py,
-    the Weinberger et al. hashing trick — no vocabulary, no model file)
-    -> exact cosine pairs >= 0.9 via the blocked-GEMM two-phase operator
-    (bit-identical to the naive self-join). The oracle replays hashing,
-    vector build, and pair scoring relationally — the whole text->
-    embedding->dedup chain is hash-checked."""
-    from llm_data_pipeline_spark.operators.hashed_embedding import (
-        hashed_trigram_embedding,
-    )
-    from llm_data_pipeline_spark.operators.similarity import (
-        near_dup_pairs_blocked,
-    )
-
-    docs = table(spark, sf_dir, "documents", scatter=True)
-    # NOT checkpointed: pinning the vectors cost 3x (stats loss degraded
-    # the blocked operator's join strategy — same trap as SemDeDup's
-    # assignment frame); exchange reuse already shares the gram pipeline.
-    emb = hashed_trigram_embedding(docs)
-    out = (
-        near_dup_pairs_blocked(emb, threshold=0.9, id_col="doc_id")
-        .select("u", "v", "score")
-        # pin the (tiny) pair set before the deterministic final sort so
-        # orderBy's range-sampling pass reads blocks instead of
-        # re-running the embed+GEMM chain (README perf rule #3)
-        .transform(cut_lineage, eager=False)
-    )
-    return out.orderBy("u", "v")
-
-
-def _text_cents_sql() -> str:
-    from llm_data_pipeline_spark.data.text_centroids import TEXT_CENTROIDS
-
-    return (
-        "cents AS (\n      SELECT * FROM (VALUES\n      "
-        + ",\n      ".join(
-            f"({i}, {_sql_dlist(vec)})"
-            for i, vec in enumerate(TEXT_CENTROIDS)
-        )
-        + "\n      ) AS t(list_id, cvec)\n    )"
-    )
-
-
-@query(
-    "text_semantic_dedup",
-    oracle=f"""
-    WITH {_HASHED_VECS_SQL},
-    {_text_cents_sql()},
-    assigned AS (
-      SELECT doc_id, v, list_id, csim FROM (
-        SELECT vecs.doc_id, vecs.v, c.list_id,
-               {cos_sql('vecs.v', 'c.cvec')} AS csim,
-               row_number() OVER (PARTITION BY vecs.doc_id
-                                  ORDER BY {cos_sql('vecs.v', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM vecs CROSS JOIN cents c
-      ) WHERE rn = 1
-    ),
-    pairs AS (
-      SELECT a.doc_id AS u, a.csim AS cu, b.doc_id AS w, b.csim AS cw
-      FROM assigned a JOIN assigned b
-        ON a.list_id = b.list_id AND a.doc_id < b.doc_id
-      WHERE {cos_sql('a.v', 'b.v')} >= 0.9
-    ),
-    dropped AS (
-      SELECT DISTINCT CASE WHEN cu > cw THEN u
-                           WHEN cw > cu THEN w
-                           ELSE greatest(u, w) END AS doc_id
-      FROM pairs
-    )
-    SELECT a.doc_id, CAST(a.list_id AS BIGINT) AS list_id,
-           a.csim AS centroid_sim
-    FROM assigned a ANTI JOIN dropped dr ON a.doc_id = dr.doc_id
-    ORDER BY doc_id
-    """,
-    tags=("similarity", "dedup", "semdedup", "text", "hashing"),
-)
-def text_semantic_dedup(spark: SparkSession, sf_dir: str):
-    """SemDeDup on RAW TEXT, end to end in-engine and model-free:
-    documents -> signed hashed-trigram embeddings (operators/
-    hashed_embedding.py) -> nearest of 16 TRAINED k-means centroids
-    (deterministic Lloyd recipe over the same hashed embeddings,
-    committed literals in data/text_centroids.py via
-    scripts/gen_codebooks.py text — the r5 stand-in is gone) ->
-    per-cluster BLAS pair generation (cluster_pairs_gemm, lossless
-    margin + exact re-score) -> pairwise-dominance keep. The oracle
-    replays hashing, the committed centroid literals, assignment,
-    pairs, and the anti-join relationally — the complete text->
-    embedding->semantic-dedup chain is hash-checked with zero external
-    models."""
-    from llm_data_pipeline_spark.data.text_centroids import TEXT_CENTROIDS
-    from llm_data_pipeline_spark.operators.hashed_embedding import (
-        hashed_trigram_embedding,
-    )
-    from llm_data_pipeline_spark.operators.semdedup import semantic_dedup
-
-    docs = table(spark, sf_dir, "documents", scatter=True)
-    emb = hashed_trigram_embedding(docs)
-    cents = local_df(spark, 
-        [(i, [float(x) for x in v]) for i, v in enumerate(TEXT_CENTROIDS)],
-        "list_id long, cvec array<double>",
-    )
-    return (
-        semantic_dedup(emb, cents, threshold=0.9, id_col="doc_id",
-                       use_gemm=True)
-        .select("doc_id", F.col("list_id").cast("long").alias("list_id"),
-                "centroid_sim")
-        .orderBy("doc_id")
-    )
-
-
-@query(
-    "semantic_dedup_incremental",
-    oracle=f"""
-    WITH {_PAIR_BASE.strip()},
-    inc AS (
-      SELECT vec_id + 200000 AS vec_id,
-             list_concat([CAST(0.0 AS DOUBLE)], v[2:64]) AS v
-      FROM e WHERE vec_id < 50
-      UNION ALL
-      SELECT vec_id + 300000, v FROM e WHERE vec_id >= 50 AND vec_id < 100
-      UNION ALL
-      SELECT vec_id + 400000, list_reverse(v)
-      FROM e WHERE vec_id >= 100 AND vec_id < 150
-    ),
-    allv AS (
-      SELECT vec_id, v, FALSE AS isnew FROM e
-      UNION ALL
-      SELECT vec_id, v, TRUE AS isnew FROM inc
-    ),
-    {_IVF_CB_SQL.strip()},
-    assigned AS (
-      SELECT vec_id, v, isnew, list_id, csim FROM (
-        SELECT a.vec_id, a.v, a.isnew, c.list_id,
-               {cos_sql('a.v', 'c.cvec')} AS csim,
-               row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {cos_sql('a.v', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM allv a CROSS JOIN cents c
-      ) WHERE rn = 1
-    ),
-    pairs AS (
-      SELECT a.vec_id AS u, a.csim AS cu, a.isnew AS na,
-             b.vec_id AS w, b.csim AS cw
-      FROM assigned a JOIN assigned b
-        ON a.list_id = b.list_id AND b.isnew
-       AND a.vec_id <> b.vec_id
-       AND (NOT a.isnew OR a.vec_id < b.vec_id)
-      WHERE {cos_sql('a.v', 'b.v')} >= 0.3
-    ),
-    dropped AS (
-      SELECT DISTINCT CASE WHEN NOT na THEN w
-                           WHEN cu > cw THEN u
-                           WHEN cw > cu THEN w
-                           ELSE greatest(u, w) END AS vec_id
-      FROM pairs
-    )
-    SELECT a.vec_id, CAST(a.list_id AS BIGINT) AS list_id,
-           a.csim AS centroid_sim
-    FROM assigned a ANTI JOIN dropped d ON a.vec_id = d.vec_id
-    WHERE a.isnew
-    ORDER BY vec_id
-    """,
-    tags=("similarity", "dedup", "semdedup", "incremental"),
-)
-def semantic_dedup_incremental_q(spark: SparkSession, sf_dir: str):
-    """Incremental SemDeDup (operators/semdedup.py:
-    semantic_dedup_incremental) — the daily-ingest variant: a synthetic
-    increment (50 near-dups with the first component zeroed, 50 exact
-    re-ingests, 50 fresh reversed vectors) joins the base's clusters;
-    pairs form new x base and new x new only, a new row duplicating any
-    base member is dropped (base is canonical), new x new falls to the
-    dominance rule. The oracle replays increment construction,
-    assignment, pair restriction, and the keep decision relationally."""
-    from llm_data_pipeline_spark.functions.vectors import to_double
-    from llm_data_pipeline_spark.operators.semdedup import (
-        semantic_dedup_incremental,
-    )
-
-    emb = table(spark, sf_dir, "embeddings", scatter=True).select(
-        "vec_id", to_double(F.col("embedding")).alias("embedding")
-    )
-    vid = F.col("vec_id")
-    inc = (
-        emb.where(vid < 50).select(
-            (vid + 200000).alias("vec_id"),
-            F.concat(
-                F.array(F.lit(0.0)), F.slice(F.col("embedding"), 2, 63)
-            ).alias("embedding"),
-        )
-        .unionByName(
-            emb.where((vid >= 50) & (vid < 100)).select(
-                (vid + 300000).alias("vec_id"), "embedding"
-            )
-        )
-        .unionByName(
-            emb.where((vid >= 100) & (vid < 150)).select(
-                (vid + 400000).alias("vec_id"),
-                F.reverse(F.col("embedding")).alias("embedding"),
-            )
-        )
-    )
-    cents = ivf_codebook_df(spark)
-    return (
-        semantic_dedup_incremental(emb, inc, cents, threshold=0.3)
-        .select("vec_id", F.col("list_id").cast("long").alias("list_id"),
-                "centroid_sim")
-        .orderBy("vec_id")
-    )
-
-
 @query(
     "embedding_hard_negatives",
     oracle=f"""
@@ -1417,7 +194,7 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str):
     training margin). Label mismatch is fused into the broadcast join
     condition so same-label rows never reach the scorer
     (operators/similarity.py:hard_negative_topk); at 100 TB the exact scan
-    swaps for the PQ/IVF shortlist + this re-rank, unchanged API."""
+    swaps for an approximate shortlist + this re-rank, unchanged API."""
     from llm_data_pipeline_spark.operators.similarity import hard_negative_topk
 
     emb = table(spark, sf_dir, "embeddings", scatter=True)
@@ -1499,7 +276,7 @@ def bitext_margin_mining(spark: SparkSession, sf_dir: str):
     where a raw cosine cut over-mines hub vectors. Integer micro-unit
     margins via exact rounded division — the full pipeline (scoring, kNN
     averages, margin, both best-of windows) replays bit-identically in
-    DuckDB. At 100 TB the all-pairs scorer swaps for the PQ/IVF shortlist
+    DuckDB. At 100 TB the all-pairs scorer swaps for an approximate shortlist
     (operators/similarity.py: margin_knn_mining docstring) and this margin
     post-pass is unchanged."""
     from llm_data_pipeline_spark.operators.similarity import margin_knn_mining
@@ -1700,7 +477,7 @@ def _kcenter_oracle(k: int = _KC_K) -> str:
 def embedding_kcenter_selection(spark: SparkSession, sf_dir: str):
     """Greedy k-center diversity selection (k={k}): farthest-point coreset
     with the decreasing coverage-radius trajectory — the exemplar-picking
-    dual of SemDeDup. O(k) narrow scans + TakeOrdered argmaxes, driver
+    dual of semantic dedup. O(k) narrow scans + TakeOrdered argmaxes, driver
     state = the k selected vectors only (operators/similarity.py:
     kcenter_selection); integer micro-unit distances replay bit-for-bit
     in DuckDB."""
@@ -1808,716 +585,4 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str):
             F.lit(1).cast("int").alias("is_outlier"),
         )
         .orderBy("vec_id")
-    )
-
-
-_MATRYOSHKA_DIM = 16
-
-
-@query(
-    "embedding_matryoshka_recall",
-    oracle=f"""
-    WITH {_PAIR_BASE.strip()},
-    e16 AS (SELECT vec_id, v[1:{_MATRYOSHKA_DIM}] AS v16 FROM e),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 100 = 0),
-    q16 AS (SELECT vec_id AS query_id, v[1:{_MATRYOSHKA_DIM}] AS qv16
-            FROM e WHERE vec_id % 100 = 0),
-    exact AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.query_id, e.vec_id,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {cos_sql('qv', 'e.v')} DESC,
-                                           e.vec_id) AS rank
-        FROM e CROSS JOIN q
-        WHERE e.vec_id <> q.query_id
-      ) WHERE rank <= 10
-    ),
-    approx AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.query_id, e16.vec_id,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {cos_sql('qv16', 'e16.v16')} DESC,
-                                           e16.vec_id) AS rank
-        FROM e16 CROSS JOIN q16 q
-        WHERE e16.vec_id <> q.query_id
-      ) WHERE rank <= 10
-    )
-    SELECT x.query_id,
-           CAST(coalesce(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 END), 0)
-                AS BIGINT) AS n_hits,
-           CAST(coalesce(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 END), 0)
-                * 100000 AS BIGINT) AS recall_ppm
-    FROM exact x
-    LEFT JOIN approx a ON a.query_id = x.query_id AND a.vec_id = x.vec_id
-    GROUP BY x.query_id
-    ORDER BY x.query_id
-    """,
-    tags=("similarity", "ann", "recall", "matryoshka"),
-)
-def embedding_matryoshka_recall(spark: SparkSession, sf_dir: str):
-    """Matryoshka / truncated-dimension retrieval audit: recall@10 of
-    exact search over the FIRST 16 of 64 embedding dimensions against
-    exact full-dimension search — the number that tells a 100-TB serving
-    stack how much shortlist quality a 4x cheaper prefix-dim scan buys
-    (the standard two-stage pattern: truncated-dim shortlist, full-dim
-    rerank — the prefix scan reads 1/4 the bytes and does 1/4 the FLOPs
-    per candidate). Both rankings are exact brute force, so the entire
-    number — truncation, both scorings, hit counting — is hash-checked.
-    On the near-orthogonal synthetic table this measures the information
-    loss of truncation directly (no index noise mixed in)."""
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = brute_force_topk(emb, queries, k=10).select("query_id", "vec_id")
-    emb16 = emb.select(
-        "vec_id", F.slice("embedding", 1, _MATRYOSHKA_DIM).alias("embedding")
-    )
-    q16 = queries.select(
-        "query_id", F.slice("embedding", 1, _MATRYOSHKA_DIM).alias("embedding")
-    )
-    approx = brute_force_topk(emb16, q16, k=10).select(
-        "query_id", F.col("vec_id").alias("a_vec_id")
-    )
-    hits = exact.join(
-        approx,
-        (exact.query_id == approx.query_id)
-        & (F.col("vec_id") == F.col("a_vec_id")),
-        "left",
-    ).select(exact.query_id, F.col("a_vec_id").isNotNull().alias("hit"))
-    return (
-        hits.groupBy("query_id")
-        .agg(
-            F.coalesce(F.sum(F.when(F.col("hit"), 1)), F.lit(0))
-            .cast("long")
-            .alias("n_hits")
-        )
-        .select(
-            "query_id",
-            "n_hits",
-            (F.col("n_hits") * 100_000).cast("long").alias("recall_ppm"),
-        )
-        .orderBy("query_id")
-    )
-
-
-def _ensure_ivf_index(spark: SparkSession, sf_dir: str, books: dict) -> str:
-    """Build (once per process x sf_dir) the persisted IVF inverted-list
-    index: the corpus's (list_id, vec_id, embedding) assignment table
-    written bucketed by list_id — the nightly ANN index build. Serving
-    then never re-assigns the corpus and never shuffles the index side
-    (storage partitioning satisfies the probe join); the ANN twin of the
-    dedup band index. Returns the index table name."""
-    import os as _os
-
-    from llm_data_pipeline_spark.operators.similarity import _best_lists
-    from llm_data_pipeline_spark.operators.skew import write_bucketed
-    from llm_data_pipeline_spark.queries_sinks import SINK_BASE
-
-    sfx = f"{abs(hash(sf_dir)) % 10**8}_{_os.getpid()}"
-    t = f"bkt_ivf_index_{sfx}"
-    if not spark.catalog.tableExists(t):
-        emb = table(spark, sf_dir, "embeddings", scatter=True)
-        cents = local_df(spark, 
-            [(i, [float(x) for x in v]) for i, v in enumerate(books["ivf"])],
-            "list_id long, cvec array<double>",
-        )
-        assigned = _best_lists(
-            emb, cents, "vec_id", "embedding", 1, carry=("embedding",)
-        )
-        write_bucketed(
-            assigned.select("list_id", "vec_id", "embedding"),
-            t, "list_id", 8, path=f"{SINK_BASE}/{t}",
-        )
-    return t
-
-
-@query(
-    "embedding_ivf_indexed_topk",
-    oracle=_IVF_FLAT_ORACLE,
-    tags=("similarity", "ann", "ivf", "index", "scale"),
-)
-def embedding_ivf_indexed_topk(spark: SparkSession, sf_dir: str):
-    """IVF-Flat's PHYSICAL deployment — serve against the PERSISTED
-    inverted-list index (_ensure_ivf_index: the assignment table written
-    once, bucketed by list_id) instead of re-assigning the corpus per
-    query batch: at serve time only the n_probe probe rows per query
-    route into the stored lists; corpus vectors are never re-scored
-    against centroids and the index side never re-shuffles. Identical
-    scoring/tie semantics to embedding_ivf_flat_topk, so it grades
-    against the IDENTICAL oracle — the ANN twin of
-    minhash_bucketed_index_dedup (round-6's flagship pattern, extended
-    to similarity serving)."""
-    from llm_data_pipeline_spark.operators.similarity import ivf_indexed_topk
-
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    books = _ann_books(emb, _count_key=sf_dir)
-    cents = local_df(spark, 
-        [(i, [float(x) for x in v]) for i, v in enumerate(books["ivf"])],
-        "list_id long, cvec array<double>",
-    )
-    t = _ensure_ivf_index(spark, sf_dir, books)
-    return (
-        ivf_indexed_topk(
-            spark.table(t), queries, cents, k=10,
-            n_probe=books["geo"]["n_probe_flat"],
-        )
-        .select("query_id", "vec_id", "score", "rank")
-        .orderBy("query_id", "rank")
-    )
-
-
-from llm_data_pipeline_spark.functions.intmath import rounded_div_sql  # noqa: E402
-
-
-_SWEEP_TCS = (30, 32, 34, 36)  # thresholds in centi-units (0.30 .. 0.36)
-
-
-@query(
-    "semantic_dedup_threshold_sweep",
-    oracle=f"""
-    WITH {_PAIR_BASE.strip()},
-    pr AS (
-      SELECT a.vec_id AS u, b.vec_id AS v,
-             {cos_sql('a.v', 'b.v')} AS score
-      FROM e a JOIN e b ON a.vec_id < b.vec_id
-      WHERE {cos_sql('a.v', 'b.v')} >= 0.30
-    ),
-    t(tc) AS (VALUES {", ".join(f"({c})" for c in _SWEEP_TCS)}),
-    qual AS (
-      SELECT t.tc, pr.u, pr.v FROM pr JOIN t ON pr.score >= t.tc / 100.0
-    ),
-    stacked AS (
-      SELECT tc, u AS doc FROM qual UNION SELECT tc, v FROM qual
-    ),
-    tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM e)
-    SELECT CAST(q.tc AS BIGINT) AS threshold_centi,
-           CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST(s.n_docs AS BIGINT) AS n_docs_affected,
-           CAST((s.n_docs * 1000000 + o.n_total // 2) // o.n_total
-                AS BIGINT) AS affected_ppm
-    FROM qual q
-    JOIN (SELECT tc, count(*) AS n_docs FROM stacked GROUP BY tc) s
-      ON s.tc = q.tc
-    CROSS JOIN tot o
-    GROUP BY q.tc, s.n_docs, o.n_total
-    ORDER BY threshold_centi
-    """,
-    tags=("similarity", "dedup", "audit", "calibration"),
-)
-def semantic_dedup_threshold_sweep(spark: SparkSession, sf_dir: str):
-    """The semantic-dedup TUNING CURVE: near-dup pair count and affected-
-    document share at a ladder of cosine thresholds, from ONE pair
-    computation — the artifact a 100-TB curation run reads before
-    committing to a threshold (every 0.02 of threshold moves a measurable
-    slice of the corpus between 'kept' and 'dedup candidate'; picking it
-    blind is how runs silently gut a stratum). Thresholds are integer
-    centi-units so the ladder is literal-exact on both engines; scores
-    are the 6-dp-rounded cosine both engines rank with everywhere else.
-    Scale shape: the pair set is computed ONCE at the lowest threshold
-    (blocked two-phase GEMM, cluster-bounded like embedding_near_dup_pairs)
-    and the sweep is a broadcast-small threshold join + two aggregates
-    over the (tiny) qualifying pair set — cost is one dedup screen, not
-    one per threshold. The oracle replays the exact all-pairs ground
-    truth and the identical ladder."""
-    from llm_data_pipeline_spark.functions.intmath import rounded_div_col
-
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    # eager: the tiny post-screen pair set feeds THREE downstream subtrees
-    # in one action (pair counts, and both legs of the stacked doc union)
-    # — a lazy checkpoint lets each subtree race to materialize the full
-    # blocked-GEMM lineage before the checkpoint blocks land (the same
-    # multi-consumer race measured at 25s-vs-4s in dedup_method_agreement)
-    pairs = near_dup_pairs_blocked(
-        emb, threshold=0.30, rows_per_block=256
-    ).transform(cut_lineage, eager=True)
-    th = spark.range(1).select(
-        F.explode(F.array(*[F.lit(c) for c in _SWEEP_TCS])).alias("tc")
-    )
-    qual = pairs.join(
-        F.broadcast(th), F.col("score") >= F.col("tc") / F.lit(100.0)
-    )
-    stacked = (
-        qual.select("tc", F.col("u").alias("doc"))
-        .union(qual.select("tc", F.col("v").alias("doc")))
-        .distinct()
-    )
-    docs_per_t = stacked.groupBy("tc").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    tot = emb.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    return (
-        qual.groupBy("tc")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
-        .join(docs_per_t, "tc")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.col("tc").cast("long").alias("threshold_centi"),
-            "n_pairs",
-            F.col("n_docs").cast("long").alias("n_docs_affected"),
-            rounded_div_col(
-                F.col("n_docs") * F.lit(1_000_000), F.col("n_total")
-            ).alias("affected_ppm"),
-        )
-        .coalesce(1)
-        .sortWithinPartitions("threshold_centi")
-    )
-
-
-@query(
-    "ivf_list_balance",
-    oracle=f"""
-    WITH {_PAIR_BASE.strip()},
-    {_IVF_CB_SQL.strip()},
-    assign AS (
-      SELECT vec_id, list_id FROM (
-        SELECT e.vec_id, c.list_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {cos_sql('e.v', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM e CROSS JOIN cents c
-      ) WHERE rn = 1
-    ),
-    ls AS (SELECT list_id, count(*) AS n_vecs FROM assign GROUP BY 1),
-    tot AS (
-      SELECT CAST(sum(n_vecs) AS BIGINT) AS total,
-             CAST(count(*) AS BIGINT) AS nlists
-      FROM ls
-    )
-    SELECT CAST(l.list_id AS BIGINT) AS list_id,
-           CAST(l.n_vecs AS BIGINT) AS n_vecs,
-           CAST((l.n_vecs * 1000000 + t.total // 2) // t.total AS BIGINT)
-             AS share_ppm,
-           CAST((l.n_vecs * t.nlists * 1000000 + t.total // 2) // t.total
-                AS BIGINT) AS balance_ppm
-    FROM ls l, tot t
-    ORDER BY list_id
-    """,
-    tags=("similarity", "ann", "ivf", "index", "audit"),
-)
-def ivf_list_balance(spark: SparkSession, sf_dir: str):
-    """Inverted-list SKEW audit of the persisted IVF index — the ANN twin
-    of the dedup family's cap audits, because list imbalance is THE IVF
-    performance killer at scale: probe latency is bounded by the largest
-    probed list, so one mega-list (a dense hub region, or a stale
-    codebook after corpus drift) silently turns an nlist-way index into
-    a near-linear scan for every query that probes it. Per list:
-    member count, corpus share in exact ppm, and balance_ppm =
-    n_vecs * nlist / total scaled to 1e6 (1e6 = perfectly balanced; the
-    max over lists is the probe-latency multiplier an operator alarms
-    on). Reads ONLY the index's list_id column — at 100 TB the audit is
-    a metadata aggregate over the index table (column-pruned scan, no
-    vector ever read), safe to run after every nightly build. The oracle
-    replays the assignment from the committed codebook literals, so the
-    index CONTENT is what's being audited."""
-    from llm_data_pipeline_spark.functions.intmath import rounded_div_col
-
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    books = _ann_books(emb, _count_key=sf_dir)
-    t = _ensure_ivf_index(spark, sf_dir, books)
-    ls = spark.table(t).groupBy("list_id").agg(
-        F.count(F.lit(1)).alias("n_vecs")
-    )
-    tot = ls.agg(
-        F.sum("n_vecs").cast("long").alias("total"),
-        F.count(F.lit(1)).cast("long").alias("nlists"),
-    )
-    return (
-        ls.crossJoin(F.broadcast(tot))
-        .select(
-            F.col("list_id").cast("long").alias("list_id"),
-            F.col("n_vecs").cast("long").alias("n_vecs"),
-            rounded_div_col(
-                F.col("n_vecs") * F.lit(1_000_000), F.col("total")
-            ).alias("share_ppm"),
-            rounded_div_col(
-                F.col("n_vecs") * F.col("nlists") * F.lit(1_000_000),
-                F.col("total"),
-            ).alias("balance_ppm"),
-        )
-        .coalesce(1)
-        .sortWithinPartitions("list_id")
-    )
-
-
-@query(
-    "pq_reconstruction_error",
-    oracle=f"""
-    WITH {_PAIR_BASE.strip()},
-    subs AS (
-      SELECT vec_id, m, v[m*16+1 : m*16+16] AS sv
-      FROM e, unnest(range(4)) t(m)
-    ),
-    {_PQ_CB_SQL.strip()},
-    enc AS (
-      SELECT s.vec_id, s.m, cb.code,
-             CAST(round((list_dot_product(s.sv, s.sv)
-                         - 2 * list_dot_product(s.sv, cb.cv)
-                         + list_dot_product(cb.cv, cb.cv)) * 1000000)
-                  AS BIGINT) AS d
-      FROM subs s JOIN cb ON cb.m = s.m
-    ),
-    best AS (
-      SELECT vec_id, m, d FROM (
-        SELECT vec_id, m, d,
-               row_number() OVER (PARTITION BY vec_id, m
-                                  ORDER BY d, code) AS rn
-        FROM enc
-      ) WHERE rn = 1
-    )
-    SELECT CAST(m AS BIGINT) AS m,
-           CAST(count(*) AS BIGINT) AS n_vecs,
-           CAST(sum(d) AS BIGINT) AS total_err_micro,
-           {rounded_div_sql("sum(d)", "count(*)")} AS mean_err_micro
-    FROM best GROUP BY m
-    ORDER BY m
-    """,
-    tags=("similarity", "ann", "pq", "audit"),
-)
-def pq_reconstruction_error(spark: SparkSession, sf_dir: str):
-    """PQ codebook-quality audit: per-subspace squared reconstruction
-    error of the encoded corpus, in exact integer micro-units — the
-    leading indicator a 100-TB serving stack watches between retrains (a
-    codebook drifting away from the corpus shows rising err_micro long
-    before recall visibly collapses; the recall floors in
-    tests/test_quality_gates.py are the lagging alarm). The winning
-    encode distance IS the subspace's squared reconstruction error, so
-    this reuses the exact encode chain
-    (operators/similarity.py: pq_encode_errors — fold identity, HALF_UP
-    micro rounding, (d, code) ties) and the oracle replays it from the
-    committed codebook literals."""
-    from llm_data_pipeline_spark.functions.intmath import rounded_div_col
-    from llm_data_pipeline_spark.operators.similarity import pq_encode_errors
-
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    errs = pq_encode_errors(emb, _ann_books(emb, _count_key=sf_dir)["pq"])
-    return (
-        errs.groupBy("m")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_vecs"),
-            F.sum("err_micro").cast("long").alias("total_err_micro"),
-        )
-        .select(
-            F.col("m").cast("long").alias("m"),
-            "n_vecs",
-            "total_err_micro",
-            rounded_div_col(
-                F.col("total_err_micro"), F.col("n_vecs")
-            ).alias("mean_err_micro"),
-        )
-        .coalesce(1)
-        .sortWithinPartitions("m")
-    )
-
-
-_IVF_INC_OFFSET = 10_000
-
-
-@query(
-    "embedding_ivf_index_append",
-    oracle=f"""
-    WITH eb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                FROM embeddings),
-    einc AS (
-      SELECT vec_id + {_IVF_INC_OFFSET} AS vec_id,
-             list_concat(v[2:64], v[1:1]) AS v
-      FROM eb
-    ),
-    e AS (SELECT * FROM eb UNION ALL SELECT * FROM einc),
-    {_IVF_CB_SQL.strip()},
-    assign AS (
-      SELECT vec_id, list_id FROM (
-        SELECT e.vec_id, c.list_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {cos_sql('e.v', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM e CROSS JOIN cents c
-      ) WHERE rn = 1
-    ),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 100 = 0),
-    probes AS (
-      SELECT query_id, list_id FROM (
-        SELECT q.query_id, c.list_id,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {cos_sql('q.qv', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM q CROSS JOIN cents c
-      ) WHERE rn <= 4
-    ),
-    cands AS (
-      SELECT p.query_id, a.vec_id, {cos_sql('q.qv', 'e.v')} AS score
-      FROM probes p
-      JOIN q ON q.query_id = p.query_id
-      JOIN assign a ON a.list_id = p.list_id
-      JOIN e ON e.vec_id = a.vec_id
-      WHERE a.vec_id <> p.query_id
-    )
-    SELECT query_id, vec_id, score, rank FROM (
-      SELECT query_id, vec_id, score,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY score DESC, vec_id) AS rank
-      FROM cands
-    ) WHERE rank <= 10
-    ORDER BY query_id, rank
-    """,
-    tags=("similarity", "ann", "ivf", "index", "incremental", "scale"),
-)
-def embedding_ivf_index_append(spark: SparkSession, sf_dir: str):
-    """Daily MAINTENANCE of the persisted IVF index — the ANN lifecycle's
-    third leg (build: _ensure_ivf_index; serve: embedding_ivf_indexed_topk;
-    refresh: here): a deterministic increment (rotated copies, distinct
-    content with the same norms) is assigned to lists with the SAME
-    committed centroids — per-vector independent, a pure narrow map over
-    the increment only — and UNIONED with the stored assignment table;
-    serving over the merged index must equal a from-scratch build over
-    base ∪ increment, which is exactly what the oracle replays (full
-    assignment + probe + rank over the union). The base corpus is never
-    re-assigned; at 100 TB the append is an increment-sized write into
-    the bucketed layout. Centroid DRIFT between retrains is the monitored
-    tradeoff — pq_reconstruction_error is the leading indicator that
-    triggers the rebuild."""
-    from llm_data_pipeline_spark.operators.similarity import (
-        _best_lists,
-        ivf_indexed_topk,
-    )
-
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    inc = emb.select(
-        (F.col("vec_id") + _IVF_INC_OFFSET).alias("vec_id"),
-        F.concat(
-            F.slice("embedding", 2, 63), F.slice("embedding", 1, 1)
-        ).alias("embedding"),
-    )
-    books = _ann_books(emb, _count_key=sf_dir)
-    cents = local_df(spark, 
-        [(i, [float(x) for x in v]) for i, v in enumerate(books["ivf"])],
-        "list_id long, cvec array<double>",
-    )
-    t = _ensure_ivf_index(spark, sf_dir, books)
-    inc_assigned = _best_lists(
-        inc, cents, "vec_id", "embedding", 1, carry=("embedding",)
-    ).select("list_id", "vec_id", "embedding")
-    merged = spark.table(t).select(
-        "list_id", "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).unionByName(
-        inc_assigned.select(
-            "list_id", "vec_id",
-            F.col("embedding").cast("array<double>").alias("embedding"),
-        )
-    )
-    full = emb.select("vec_id", "embedding").unionByName(
-        inc.select("vec_id", "embedding")
-    )
-    queries = full.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return (
-        ivf_indexed_topk(
-            merged, queries, cents, k=10,
-            n_probe=books["geo"]["n_probe_flat"],
-        )
-        .select("query_id", "vec_id", "score", "rank")
-        .orderBy("query_id", "rank")
-    )
-
-
-# recall/cost sweep ladder: powers of two up to the SMALL tier's n_lists
-# (16); at larger tiers the ladder is a prefix of the list order, so the
-# same integers stay meaningful (probing 16 of 32 lists = half the index)
-_PROBE_LADDER = (1, 2, 4, 8, 16)
-
-
-@query(
-    "ivf_probe_recall_sweep",
-    oracle=f"""
-    WITH e AS MATERIALIZED (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    {_IVF_CB_SQL.strip()},
-    q AS MATERIALIZED (
-      SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 100 = 0
-    ),
-    assign AS MATERIALIZED (
-      SELECT vec_id, list_id FROM (
-        SELECT e.vec_id, c.list_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {cos_sql('e.v', 'c.cvec')} DESC,
-                                           c.list_id) AS rn
-        FROM e CROSS JOIN cents c
-      ) WHERE rn = 1
-    ),
-    hits AS MATERIALIZED (
-      SELECT query_id, vec_id FROM (
-        SELECT q.query_id, e.vec_id,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY {cos_sql('q.qv', 'e.v')} DESC,
-                                           e.vec_id) AS rnk
-        FROM e CROSS JOIN q
-        WHERE e.vec_id <> q.query_id
-      ) WHERE rnk <= 10
-    ),
-    pranks AS MATERIALIZED (
-      SELECT q.query_id, c.list_id,
-             row_number() OVER (PARTITION BY q.query_id
-                                ORDER BY {cos_sql('q.qv', 'c.cvec')} DESC,
-                                         c.list_id) AS prank
-      FROM q CROSS JOIN cents c
-    ),
-    ladder AS (SELECT * FROM (VALUES (1),(2),(4),(8),(16)) AS t(n_probe)),
-    tot AS (SELECT CAST(count(*) AS BIGINT) AS n_hits_total FROM hits),
-    dims AS (
-      SELECT (SELECT CAST(count(*) AS BIGINT) FROM q) AS nq,
-             (SELECT CAST(count(*) AS BIGINT) FROM e) AS nc
-    ),
-    cov AS (
-      SELECT l.n_probe, CAST(count(*) AS BIGINT) AS n_hits_covered
-      FROM hits h
-      JOIN assign a ON a.vec_id = h.vec_id
-      JOIN pranks p ON p.query_id = h.query_id AND p.list_id = a.list_id
-      JOIN ladder l ON p.prank <= l.n_probe
-      GROUP BY 1
-    ),
-    sizes AS (
-      SELECT list_id, CAST(count(*) AS BIGINT) AS lsz FROM assign GROUP BY 1
-    ),
-    sc AS (
-      SELECT l.n_probe, CAST(sum(s.lsz) AS BIGINT) AS n_scanned
-      FROM pranks p
-      JOIN sizes s ON s.list_id = p.list_id
-      JOIN ladder l ON p.prank <= l.n_probe
-      GROUP BY 1
-    )
-    SELECT CAST(l.n_probe AS BIGINT) AS n_probe,
-           CAST(coalesce(c.n_hits_covered, 0) AS BIGINT) AS n_hits_covered,
-           CAST((coalesce(c.n_hits_covered, 0) * 1000000 + t.n_hits_total // 2)
-                // t.n_hits_total AS BIGINT) AS recall_ppm,
-           CAST((s.n_scanned * 1000000 + (d.nq * d.nc) // 2)
-                // (d.nq * d.nc) AS BIGINT) AS scanned_ppm
-    FROM ladder l
-    LEFT JOIN cov c ON c.n_probe = l.n_probe
-    JOIN sc s ON s.n_probe = l.n_probe
-    CROSS JOIN tot t CROSS JOIN dims d
-    ORDER BY n_probe
-    """,
-    tags=("similarity", "ann", "ivf", "audit", "calibration"),
-)
-def ivf_probe_recall_sweep(spark: SparkSession, sf_dir: str):
-    """The IVF TUNING CURVE: achievable recall@10 and corpus-scan cost at
-    a ladder of n_probe values, from ONE exact ground-truth computation —
-    the artifact an operator reads before picking the probe width (THE
-    speed/recall dial: n_probe trades probe latency linearly for recall,
-    and picking it blind either burns 4x the scan budget or silently
-    serves 60% recall). Per ladder rung: how many exact-top-10 hits live
-    in the query's first p probed lists (recall_ppm — the UPPER BOUND any
-    scoring inside p probes can reach, independent of PQ noise) and the
-    exact expected scan share (scanned_ppm = probed-list mass / corpus x
-    queries — the cost axis). The ANN twin of
-    semantic_dedup_threshold_sweep: ONE expensive set (exact brute-force
-    top-10, the same graded computation embedding_topk_bruteforce runs),
-    swept by a broadcast integer ladder.
-
-    Scale shape: the exact top-10 dominates and is computed once (Arrow
-    cosine, corpus x queries — at 100 TB you'd sample queries, exactly as
-    the %100 sample here does); list assignments come from the PERSISTED
-    IVF index (vec_id+list_id only — the embedding column is never read
-    from the index, same column-pruned scan ivf_list_balance grades);
-    probe ranks are queries x centroids (tiny, broadcast); the sweep
-    itself is two metadata aggregates over 5 broadcast ladder rungs. The
-    oracle replays assignment from the committed codebook literals, so
-    the persisted index's content is graded against first principles,
-    and the probe-rank tie rule (cosine desc, list_id asc) is the same
-    rule _best_lists applies everywhere else."""
-    from llm_data_pipeline_spark.functions.intmath import rounded_div_col
-    from llm_data_pipeline_spark.functions.vectors import cosine_arrow
-
-    emb = table(spark, sf_dir, "embeddings", scatter=True)
-    books = _ann_books(emb, _count_key=sf_dir)
-    t = _ensure_ivf_index(spark, sf_dir, books)
-    assign = spark.table(t).select("vec_id", "list_id")
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    hits = brute_force_topk(emb, queries, k=10).select("query_id", "vec_id")
-    # centroid literals JVM-side (explode of struct literals, not
-    # createDataFrame: no python-RDD scan in the plan)
-    cents = (
-        spark.range(1)
-        .select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).cast("long").alias("list_id"),
-                            F.array(
-                                *[F.lit(float(x)) for x in v]
-                            ).alias("cvec"),
-                        )
-                        for i, v in enumerate(books["ivf"])
-                    ]
-                )
-            ).alias("c")
-        )
-        .select("c.list_id", "c.cvec")
-    )
-    pr = queries.join(F.broadcast(cents)).select(
-        "query_id",
-        "list_id",
-        F.round(cosine_arrow(F.col("embedding"), F.col("cvec")), 6).alias(
-            "_cs"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_cs"), F.asc("list_id"))
-    pranks = pr.select(
-        "query_id", "list_id", F.row_number().over(w).alias("prank")
-    )
-    ladder = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(int(p)).cast("long") for p in _PROBE_LADDER])
-        ).alias("n_probe")
-    )
-    tot = hits.agg(F.count(F.lit(1)).cast("long").alias("n_hits_total"))
-    dims = queries.agg(
-        F.count(F.lit(1)).cast("long").alias("nq")
-    ).crossJoin(emb.agg(F.count(F.lit(1)).cast("long").alias("nc")))
-    cov = (
-        hits.join(assign, "vec_id")
-        .join(pranks, ["query_id", "list_id"])
-        .join(F.broadcast(ladder), F.col("prank") <= F.col("n_probe"))
-        .groupBy("n_probe")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hits_covered"))
-    )
-    sizes = assign.groupBy("list_id").agg(
-        F.count(F.lit(1)).cast("long").alias("lsz")
-    )
-    sc = (
-        pranks.join(F.broadcast(sizes), "list_id")
-        .join(F.broadcast(ladder), F.col("prank") <= F.col("n_probe"))
-        .groupBy("n_probe")
-        .agg(F.sum("lsz").cast("long").alias("n_scanned"))
-    )
-    return (
-        ladder.join(cov, "n_probe", "left")
-        .join(sc, "n_probe")
-        .crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(dims))
-        .select(
-            F.col("n_probe").cast("long").alias("n_probe"),
-            F.coalesce(F.col("n_hits_covered"), F.lit(0))
-            .cast("long")
-            .alias("n_hits_covered"),
-            rounded_div_col(
-                F.coalesce(F.col("n_hits_covered"), F.lit(0))
-                * F.lit(1_000_000),
-                F.col("n_hits_total"),
-            ).alias("recall_ppm"),
-            rounded_div_col(
-                F.col("n_scanned") * F.lit(1_000_000),
-                F.col("nq") * F.col("nc"),
-            ).alias("scanned_ppm"),
-        )
-        .coalesce(1)
-        .sortWithinPartitions("n_probe")
     )

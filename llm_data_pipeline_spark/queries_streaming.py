@@ -820,8 +820,7 @@ def _stream_topk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_embedding_topk",
-    # identical answer contract to embedding_topk_bruteforce: the stream
-    # must produce the exact batch top-10 (streaming == batch)
+    # the stream must produce the exact batch top-10 (streaming == batch)
     oracle=_STREAM_ANN_ORACLE,
     tags=("streaming", "similarity", "ann", "join"),
 )
@@ -841,8 +840,8 @@ def streaming_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the score table nor its state-store mirror is ever materialized.
     Defensive last-update pick per query (max_by on the cumulative scored
     count) keeps the result micro-batch-count-independent. Graded by the
-    identical oracle shape as embedding_topk_bruteforce — streaming ==
-    batch, the same contract the unigram stream proves for tokenize."""
+    exact batch top-10 in SQL — streaming == batch, the same contract the
+    unigram stream proves for tokenize."""
     from llm_data_pipeline_spark.streaming.stream import run_to_memory
 
     agg = _stream_topk_frame(spark, sf_dir)

@@ -820,7 +820,7 @@ def term_powerlaw_fit(spark: SparkSession, sf_dir: str):
     """Zipf/power-law fit of the term-frequency distribution: top-{n}
     terms -> (ln rank, ln count) -> least-squares slope+intercept in
     EXACT integer micro-unit arithmetic (the same rounded-division
-    contract as the k-means/LR trainers), per-term residuals included —
+    contract as the LR trainer), per-term residuals included —
     a distributed regression whose whole trajectory the oracle replays.
     Shape: one term-count groupBy + a TakeOrdered top-{n}; the regression
     runs as window sums over {n} rows."""

@@ -394,8 +394,7 @@ def domain_pagerank_prior(spark: SparkSession, sf_dir: str) -> DataFrame:
     (17d+3) mod N; edges aggregated to weighted domain pairs). Ranks are
     BIGINT micro-units with damping 85/100 applied as integer division, so
     the DuckDB oracle re-derives EVERY iteration from raw parquet via
-    unrolled CTEs — the same trajectory-replay convention as the in-engine
-    k-means. Per iteration: one edges-vs-ranks join + one groupBy(dst)
+    unrolled CTEs. Per iteration: one edges-vs-ranks join + one groupBy(dst)
     (operators/pagerank.py; lazy localCheckpoint keeps the plan flat).
     This is the CommonCrawl-style domain ranking curation pipelines use
     as a quality signal."""

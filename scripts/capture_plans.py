@@ -26,7 +26,6 @@ def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault("SPARK_GRAFT_BENCH", "1")
     load_all()
     spark = get_spark("plan-capture")
     spark.sparkContext.setLogLevel("ERROR")

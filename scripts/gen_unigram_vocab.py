@@ -7,8 +7,7 @@ Recipe (deterministic, documented so the artifact is reproducible):
   top 2000 by (count desc, piece), plus every single char (coverage);
 - costs: self-information in integer micro-nats,
   cost = round(1e6 * ln(total/count)) — ln evaluates HERE once, at
-  generation time; query time on both engines is pure integer compare
-  (same literal-plane discipline as the ANN codebooks);
+  generation time; query time on both engines is pure integer compare;
 - hard EM x3: Viterbi-segment the corpus under current costs (tie-break
   min (cost, piece_len)), recount piece usage, re-cost; prune to the top
   300 used pieces + all single chars (unused chars get the 0.5-smoothed

@@ -63,7 +63,6 @@ def _report(ui_url, app_id, since_job, wall, label):
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault("SPARK_GRAFT_BENCH", "1")
     os.environ["SPARK_UI_ENABLED"] = "true"
     load_all()
     spark = get_spark("profile-first")

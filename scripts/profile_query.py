@@ -74,7 +74,6 @@ def main() -> None:
     names = sys.argv[1:]
     reps = int(os.environ.get("PROFILE_REPS", "2"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault("SPARK_GRAFT_BENCH", "1")
     os.environ.setdefault("SPARK_UI_ENABLED", "true")
     load_all()
     spark = get_spark("profile")

@@ -77,10 +77,12 @@ def test_connected_components(spark):
     assert comps == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_paths_agree(spark):
+def test_connected_components_paths_agree(spark, monkeypatch):
     """The size-gated driver-DSU path and the distributed label-propagation
     path must label identically (chain, triangle-with-tail, singletons,
     cross-links arriving in adverse order)."""
+    from llm_data_pipeline_spark.operators import lsh
+
     edges = spark.createDataFrame(
         [
             Row(u=5, v=4), Row(u=4, v=3), Row(u=3, v=2), Row(u=2, v=1),
@@ -92,9 +94,9 @@ def test_connected_components_paths_agree(spark):
         r.doc_id: r.component
         for r in connected_components(edges).collect()
     }
+    monkeypatch.setattr(lsh, "DRIVER_MAX_ROWS", 0)
     dist = {
-        r.doc_id: r.component
-        for r in connected_components(edges, driver_dsu_threshold=0).collect()
+        r.doc_id: r.component for r in connected_components(edges).collect()
     }
     assert dsu == dist
     assert dsu[5] == 1 and dsu[22] == 20 and dsu[41] == 30
@@ -320,9 +322,12 @@ def test_propagation_pointer_jump_converges_logarithmically(spark):
 def test_minhash_incremental_dedup_semantics(spark):
     """Hand-built base/increment: exact re-ingest dropped, near-dup of a
     base doc dropped, fresh doc kept, all-new near-dup pair keeps only
-    its (length desc, doc_id desc) canonical."""
+    its (length desc, doc_id desc) canonical. The base's band index is
+    built from its signatures with band_index_rows + band_index_counts."""
     from llm_data_pipeline_spark.operators.lsh import (
-        minhash_incremental_dedup,
+        band_index_counts,
+        band_index_rows,
+        minhash_incremental_dedup_indexed,
     )
     from llm_data_pipeline_spark.operators.minhash import add_minhash
 
@@ -344,8 +349,9 @@ def test_minhash_incremental_dedup_semantics(spark):
         ],
         "doc_id long, text string",
     )
-    out = minhash_incremental_dedup(
-        add_minhash(base), add_minhash(new), rows_per_band=8
+    index = band_index_rows(add_minhash(base), rows_per_band=8)
+    out = minhash_incremental_dedup_indexed(
+        index, add_minhash(new), band_index_counts(index), rows_per_band=8
     )
     kept = {r.doc_id: r.kept for r in out.select("doc_id", "kept").collect()}
     assert kept == {101: False, 102: False, 103: True, 104: False, 105: True}

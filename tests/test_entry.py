@@ -1,6 +1,7 @@
 """The entry-point contract in __spark_entry__.py: ``entry(spark)`` is the
-clean-stage judgment, every oracle names a registered query, and the
-registry's shared table reader never serves another session's schema."""
+clean-stage judgment, every oracle (and every name on the full-tier oracle
+list) names a registered query, and the registry's shared table reader
+never serves another session's schema."""
 
 from __future__ import annotations
 
@@ -20,9 +21,13 @@ def test_entry_is_clean_judge(spark):
 
 
 def test_every_oracle_names_a_query():
+    from test_oracle import FULL_SWEEP_ONLY
+
     qs, osql = E.queries(), E.oracle_sql()
     assert osql, "no oracle queries registered"
     assert set(osql) <= set(qs)
+    # a query deleted from the registry must leave the full-tier list too
+    assert FULL_SWEEP_ONLY <= set(qs), FULL_SWEEP_ONLY - set(qs)
 
 
 def test_registry_has_no_relational_queries():

@@ -35,8 +35,8 @@ def _duck(sf_dir: str):
 ORACLE_QUERIES = sorted(n for n, s in Q.REGISTRY.items() if s.oracle)
 NO_ORACLE = sorted(n for n, s in Q.REGISTRY.items() if not s.oracle)
 
-# The slow tail of the sweep (measured: these 36 queries own ~85% of the
-# suite's oracle time — heavy dedup/ANN chains whose DuckDB replays are
+# The slow tail of the sweep (measured: these queries own most of the
+# suite's oracle time — heavy dedup chains whose DuckDB replays are
 # themselves expensive). They carry the `full` marker so the driver's
 # default profile finishes inside its verify window (pytest.ini); the
 # builder runs `-m "full or not full"` in-round, so every query is still
@@ -46,19 +46,16 @@ FULL_SWEEP_ONLY = {
     "component_index_incremental", "dedup_cascade_funnel",
     "dedup_cluster_size_histogram", "dedup_method_agreement",
     "dedup_rate_by_quality_bucket", "dedup_source_crosstab",
-    "domain_pagerank_prior", "embedding_ann_lsh_topk",
-    "embedding_ann_recall_planted", "fuzzy_dedup_kept", "lsh_band_stats",
+    "domain_pagerank_prior", "fuzzy_dedup_kept", "lsh_band_stats",
     "lsh_scurve_calibration", "minhash_band_index_build",
     "minhash_bucketed_index_dedup", "minhash_dedup_kept",
     "minhash_incremental_dedup", "minhash_jaccard_estimate_error",
-    "minhash_lsh_recall_eval", "minhash_signatures",
-    "nb_language_classifier", "pack_constant_length",
-    "pipeline_web_curation_v2", "quality_classifier_auc",
-    "semantic_dedup_groups", "semantic_dedup_incremental",
-    "semantic_dedup_kept", "semantic_dedup_threshold_sweep",
-    "simhash_band_stats", "streaming_band_index_screen",
-    "streaming_late_data_audit", "takedown_cluster_propagation",
-    "text_semantic_dedup", "unigram_lm_encode", "winnow_candidate_pairs",
+    "minhash_lsh_recall_eval", "minhash_signatures", "nb_language_classifier",
+    "pack_constant_length", "pipeline_web_curation_v2",
+    "quality_classifier_auc", "simhash_band_stats",
+    "streaming_band_index_screen", "streaming_late_data_audit",
+    "takedown_cluster_propagation", "unigram_lm_encode",
+    "winnow_candidate_pairs",
 }
 
 ORACLE_PARAMS = [

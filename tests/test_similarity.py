@@ -7,7 +7,6 @@ import pytest
 
 from llm_data_pipeline_spark.operators.similarity import (
     brute_force_topk,
-    hyperplane_lsh_topk,
     near_dup_pairs,
 )
 
@@ -56,79 +55,6 @@ def test_near_dup_pairs(spark):
     assert all(v >= 0.95 for v in pairs.values())
 
 
-def test_lsh_recall_against_bruteforce(spark, sf_dir):
-    import pyspark.sql.functions as F
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = brute_force_topk(emb, queries, k=10)
-    # This corpus's neighbors are near-orthogonal (top-10 cosine ~0.3, i.e.
-    # ~0.61 same-side probability per hyperplane) — so few bits, many
-    # tables. At real scale with tighter clusters, raise nbits.
-    approx = hyperplane_lsh_topk(emb, queries, dim=64, k=10, nbits=4, n_tables=16)
-    e = {(r.query_id, r.vec_id) for r in exact.collect()}
-    a = {(r.query_id, r.vec_id) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.6, f"LSH recall too low: {recall}"
-
-
-def test_ivf_flat_recall_vs_bruteforce(spark, sf_dir):
-    from llm_data_pipeline_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_flat_topk,
-    )
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = {
-        (r["query_id"], r["vec_id"])
-        for r in brute_force_topk(emb, queries, k=10).collect()
-    }
-    approx = {
-        (r["query_id"], r["vec_id"])
-        for r in ivf_flat_topk(emb, queries, k=10, n_lists=16, n_probe=4).collect()
-    }
-    # probing 4/16 lists must keep a meaningful share of the true top-10
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.2, recall
-    # every query produced a full candidate ranking
-    assert {q for q, _ in approx} == {q for q, _ in exact}
-
-
-def test_ivf_kmeans_codebook_improves_recall(spark, sf_dir):
-    from llm_data_pipeline_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_flat_topk,
-        ivf_kmeans_codebook,
-    )
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    cents = ivf_kmeans_codebook(emb, n_lists=8, seed=42)
-    assert cents.count() == 8
-    assert dict(cents.dtypes)["cvec"] == "array<double>"
-    exact = {
-        (r["query_id"], r["vec_id"])
-        for r in brute_force_topk(emb, queries, k=10).collect()
-    }
-    approx = {
-        (r["query_id"], r["vec_id"])
-        for r in ivf_flat_topk(
-            emb, queries, k=10, n_lists=8, n_probe=3, centroids=cents
-        ).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.3, recall
-
-
 @pytest.mark.full  # gauntlet-length; default profile skips (pytest.ini)
 def test_near_dup_blocked_matches_naive(spark, sf_dir):
     """Block-GEMM candidate generation + exact re-score must equal the
@@ -163,69 +89,6 @@ def test_near_dup_blocked_matches_naive(spark, sf_dir):
         ).collect()
     )
     assert naive == derived
-
-
-@pytest.mark.full  # gauntlet-length; default profile skips (pytest.ini)
-def test_near_dup_lsh_prebucket_recall_and_exact_scores(spark, sf_dir):
-    """The subquadratic LSH-prebucketed path: every emitted pair must carry
-    the exact naive score (precision exact); recall at a near-dup-grade
-    threshold should be ~1.0 with a handful of tables."""
-    from llm_data_pipeline_spark.operators.similarity import (
-        near_dup_pairs,
-        near_dup_pairs_lsh,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dim = len(emb.select("embedding").first()[0])
-    naive = {tuple(r) for r in near_dup_pairs(emb, threshold=0.8).collect()}
-    lsh = {
-        tuple(r)
-        for r in near_dup_pairs_lsh(
-            emb, dim=dim, threshold=0.8, nbits=6, n_tables=8
-        ).collect()
-    }
-    assert lsh <= naive  # exact re-score: no false positives, scores equal
-    if naive:
-        recall = len(lsh & naive) / len(naive)
-        assert recall >= 0.9, recall
-
-
-def test_pq_adc_topk_contract_and_recall(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from llm_data_pipeline_spark.operators.similarity import (
-        brute_force_topk,
-        pq_adc_topk,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    pq = pq_adc_topk(emb, queries, k=10).collect()
-    nq = queries.count()
-    assert len(pq) == nq * 10
-    by_q = {}
-    for r in pq:
-        by_q.setdefault(r.query_id, []).append(r)
-    for rows in by_q.values():
-        ranks = sorted(r.rank for r in rows)
-        assert ranks == list(range(1, 11))
-        dists = [r.adist for r in sorted(rows, key=lambda r: r.rank)]
-        assert dists == sorted(dists)  # ascending approximate distance
-        assert all(r.query_id != r.vec_id for r in rows)
-    # deterministic across runs
-    pq2 = pq_adc_topk(emb, queries, k=10).collect()
-    assert sorted(map(tuple, pq)) == sorted(map(tuple, pq2))
-    # sanity: the compressed index still finds some of the true neighbors
-    exact = brute_force_topk(emb, queries, k=10).collect()
-    ex = {}
-    for r in exact:
-        ex.setdefault(r.query_id, set()).add(r.vec_id)
-    hits = sum(
-        1 for r in pq if r.vec_id in ex.get(r.query_id, set())
-    )
-    assert hits > 0, "PQ should recover at least some exact neighbors"
 
 
 def test_cosine_arrow_bit_identical_to_fold(spark, sf_dir):
@@ -442,137 +305,6 @@ class TestMarginMining:
         assert got == want
 
 
-class TestAnnGeometry:
-    """ann_geometry: the ~sqrt(n) scaling rule + codebook-tier selection
-    (round-5 defect: frozen nlist=16 / sf0.01 books collapsed IVF-PQ
-    recall@10 to 0.07 at sf0.1)."""
-
-    def test_sqrt_rule_and_tiers(self):
-        from llm_data_pipeline_spark.operators.similarity import ann_geometry
-
-        small = ann_geometry(500)   # the graded sf0.01/sf0.001 corpus
-        # the small tier MUST reproduce the committed graded constants —
-        # these are baked into the DuckDB oracles
-        assert small == {
-            "n_lists": 16, "n_probe_flat": 4, "n_probe_ivfpq": 4,
-            "n_sub": 4, "n_codes": 16, "shortlist": 50, "tier": "small",
-        }
-        large = ann_geometry(2000)  # the bench corpus
-        assert large["n_lists"] == 32 and large["tier"] == "large"
-        assert large["n_probe_ivfpq"] == 16 and large["n_probe_flat"] == 8
-        assert large["n_sub"] == 16 and large["n_codes"] == 64
-        assert large["shortlist"] == 100
-        # keeps growing ~sqrt(n), snapped to powers of two
-        assert ann_geometry(2_000_000)["n_lists"] == 1024
-
-    def test_large_codebooks_match_their_geometry(self):
-        from llm_data_pipeline_spark.data.codebooks_large import (
-            GEOMETRY,
-            IVF_CODEBOOK_L,
-            PQ_CODEBOOK_L,
-            PQ_RESIDUAL_CODEBOOK_L,
-        )
-
-        assert len(IVF_CODEBOOK_L) == GEOMETRY["n_lists"]
-        assert len(PQ_CODEBOOK_L) == GEOMETRY["n_sub"]
-        assert all(len(b) == GEOMETRY["n_codes"] for b in PQ_CODEBOOK_L)
-        assert len(PQ_RESIDUAL_CODEBOOK_L) == GEOMETRY["n_sub"]
-        dim = len(IVF_CODEBOOK_L[0])
-        assert dim == 64
-        assert len(PQ_CODEBOOK_L[0][0]) == dim // GEOMETRY["n_sub"]
-
-
-class TestGemmEncodeParity:
-    """The Arrow GEMM encode/LUT (scale path) must reproduce the
-    fold-expression path bit for bit — same assignment, codes, and
-    integer ADC distances — pinned on the real embeddings table with the
-    committed graded codebooks."""
-
-    def test_pq_adc_gemm_matches_fold(self, spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from llm_data_pipeline_spark.data.codebooks import PQ_CODEBOOK
-        from llm_data_pipeline_spark.operators.similarity import (
-            pq_adc_topk,
-            pq_encode_gemm,
-            pq_lut_gemm,
-        )
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        queries = emb.where(F.col("vec_id") % 100 == 0).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        # fold path (what the oracle replays; small books stay under the
-        # auto-switch threshold)
-        fold = pq_adc_topk(emb, queries, k=10, codebook=PQ_CODEBOOK)
-        # GEMM path forced over the SAME small books
-        codes = pq_encode_gemm(emb, PQ_CODEBOOK).drop("list_id")
-        lut = pq_lut_gemm(queries, PQ_CODEBOOK).drop("list_id")
-        from pyspark.sql.window import Window
-
-        adist = (
-            codes.join(F.broadcast(lut), ["m", "code"])
-            .where(F.col("vec_id") != F.col("query_id"))
-            .groupBy("query_id", "vec_id")
-            .agg(F.sum("dq").cast("long").alias("adist"))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.asc("adist"), F.asc("vec_id")
-        )
-        gemm = adist.withColumn("rank", F.row_number().over(w)).where(
-            F.col("rank") <= 10
-        )
-        cols = ["query_id", "vec_id", "adist", "rank"]
-        a = sorted(map(tuple, fold.select(*cols).collect()))
-        b = sorted(map(tuple, gemm.select(*cols).collect()))
-        assert a == b
-
-    def test_ivfpq_gemm_matches_fold(self, spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from llm_data_pipeline_spark.data.codebooks import (
-            IVF_CODEBOOK,
-            PQ_RESIDUAL_CODEBOOK,
-        )
-        from llm_data_pipeline_spark.operators.similarity import (
-            ivfpq_topk,
-            pq_encode_gemm,
-            pq_lut_gemm,
-        )
-        from pyspark.sql.window import Window
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        queries = emb.where(F.col("vec_id") % 100 == 0).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        fold = ivfpq_topk(
-            emb, queries, IVF_CODEBOOK, PQ_RESIDUAL_CODEBOOK, k=10, n_probe=4
-        )
-        codes = pq_encode_gemm(
-            emb, PQ_RESIDUAL_CODEBOOK, ivf_centroids=IVF_CODEBOOK
-        )
-        lut = pq_lut_gemm(
-            queries, PQ_RESIDUAL_CODEBOOK, ivf_centroids=IVF_CODEBOOK,
-            n_probe=4,
-        )
-        adist = (
-            codes.join(F.broadcast(lut), ["list_id", "m", "code"])
-            .where(F.col("vec_id") != F.col("query_id"))
-            .groupBy("query_id", "vec_id")
-            .agg(F.sum("dq").cast("long").alias("adist"))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.asc("adist"), F.asc("vec_id")
-        )
-        gemm = adist.withColumn("rank", F.row_number().over(w)).where(
-            F.col("rank") <= 10
-        )
-        cols = ["query_id", "vec_id", "adist", "rank"]
-        a = sorted(map(tuple, fold.select(*cols).collect()))
-        b = sorted(map(tuple, gemm.select(*cols).collect()))
-        assert a == b
-
-
 class TestKCenterBatched:
     """kcenter_selection_batched: p=1 == the sequential greedy exactly;
     p>1 cuts rounds while keeping the cover radius in the greedy
@@ -611,112 +343,3 @@ class TestKCenterBatched:
         # radii are non-increasing in selection order
         radii = [r["radius_mu"] for r in sorted(b, key=lambda r: r["sel_rank"])][1:]
         assert radii == sorted(radii, reverse=True)
-
-
-class TestPlantedRecallFixture:
-    """The planted-cluster ANN fixture (round-6 judge task #6): on data
-    with genuine cluster structure a healthy IVF index must SATURATE
-    recall — on the random near-orthogonal embeddings table a geometry
-    bug and fixture noise were indistinguishable (absolute recall
-    ceiling-bounded at ~0.57)."""
-
-    def test_recall_floor_on_clusterable_data(self, spark, sf_dir):
-        from llm_data_pipeline_spark.queries_similarity import (
-            embedding_ann_recall_planted,
-        )
-
-        rows = embedding_ann_recall_planted(spark, sf_dir).collect()
-        assert len(rows) == 20  # one query per planted cluster
-        mean_recall = sum(r["n_hits"] for r in rows) / (10 * len(rows))
-        assert mean_recall >= 0.9
-
-    def test_fixture_is_actually_clustered(self, spark, sf_dir):
-        # sanity on the generator: every vector's best centroid is its
-        # own cluster's center (noise << center separation) — the
-        # property that makes >=0.9 recall achievable by construction
-        from pyspark.sql import functions as F
-
-        from llm_data_pipeline_spark.queries_similarity import (
-            _PLANTED_C,
-            _planted_centroids,
-            _planted_embeddings,
-        )
-        from llm_data_pipeline_spark.operators.similarity import _best_lists
-
-        fx = _planted_embeddings(spark)
-        best = _best_lists(
-            fx, _planted_centroids(spark), "vec_id", "embedding", 1
-        )
-        mismatched = (
-            fx.join(best, "vec_id")
-            .where(F.col("list_id") != F.col("vec_id") % _PLANTED_C)
-            .count()
-        )
-        assert mismatched == 0
-
-
-class TestBestListsUdfParity:
-    """The r10 vectorized _best_lists (one Arrow pass against the
-    collected codebook) must emit EXACTLY the rows of the crossJoin +
-    row_number formulation it replaced (_best_lists_window — the shape
-    every IVF/SemDeDup oracle replays in SQL): same (ident, list_id)
-    pairs, same rounded scores including NULL/0.0 degenerate-row
-    semantics, same desc-nulls-last / lowest-list-id tie order."""
-
-    def _cmp(self, a, b, cols):
-        ka = sorted(tuple(r[c] for c in cols) for r in a.collect())
-        kb = sorted(tuple(r[c] for c in cols) for r in b.collect())
-        assert ka == kb
-
-    def test_real_embeddings_all_shapes(self, spark, sf_dir):
-        from llm_data_pipeline_spark.data.codebooks import ivf_codebook_df
-        from llm_data_pipeline_spark.operators.similarity import (
-            _best_lists,
-            _best_lists_window,
-        )
-        from llm_data_pipeline_spark.queries import table
-
-        emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        cents = ivf_codebook_df(spark)
-        for n, keep in ((1, "centroid_sim"), (4, None), (99, "s")):
-            got = _best_lists(emb, cents, "vec_id", "embedding", n,
-                              keep_score=keep, carry=("embedding",))
-            want = _best_lists_window(emb, cents, "vec_id", "embedding", n,
-                                      keep_score=keep, carry=("embedding",))
-            cols = ["vec_id", "list_id"] + ([keep] if keep else [])
-            self._cmp(got, want, cols)
-
-    def test_degenerate_rows(self, spark):
-        from pyspark.sql import Row
-
-        from llm_data_pipeline_spark.operators.similarity import (
-            _best_lists,
-            _best_lists_window,
-        )
-
-        emb = spark.createDataFrame(
-            [
-                Row(vec_id=0, embedding=[1.0, 0.5, -0.25]),
-                Row(vec_id=1, embedding=[0.0, 0.0, 0.0]),   # zero norm
-                Row(vec_id=2, embedding=None),               # null vector
-                Row(vec_id=3, embedding=[]),                 # empty array
-                Row(vec_id=4, embedding=[1.0, 2.0]),         # dim mismatch
-                Row(vec_id=5, embedding=[-1.0, 0.5, 0.25]),
-            ],
-            "vec_id long, embedding array<double>",
-        )
-        cents = spark.createDataFrame(
-            [
-                (0, [0.5, 0.5, 0.5]),
-                (1, [1.0, 0.0, 0.0]),
-                (2, [0.0, 0.0, 0.0]),   # zero-norm centroid
-                (3, [-0.5, 0.25, 1.0]),
-            ],
-            "list_id long, cvec array<double>",
-        )
-        for n in (1, 2, 4):
-            got = _best_lists(emb, cents, "vec_id", "embedding", n,
-                              keep_score="s")
-            want = _best_lists_window(emb, cents, "vec_id", "embedding", n,
-                                      keep_score="s")
-            self._cmp(got, want, ["vec_id", "list_id", "s"])

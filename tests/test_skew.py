@@ -144,49 +144,3 @@ def test_band_index_join_keeps_index_unshuffled(spark, sf_dir):
     # exactly ONE exchange: the increment side; the bucketed index scan
     # feeds the join through sort only
     assert I.shuffle_count(joined) == 1
-
-
-def test_ivf_index_join_keeps_index_unshuffled(spark, sf_dir):
-    """The persisted IVF inverted-list index (embedding_ivf_indexed_topk)
-    must serve probes WITHOUT re-shuffling the index side — the ANN twin
-    of the band-index guard above: one Exchange (the probe side), the
-    bucketed list scan feeds the join through sort only."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from llm_data_pipeline_spark.operators.similarity import _best_lists
-    from llm_data_pipeline_spark.operators.skew import write_bucketed
-    from llm_data_pipeline_spark.plans import inspect as I
-    from llm_data_pipeline_spark.queries import table
-    from llm_data_pipeline_spark.queries_sinks import SINK_BASE
-
-    os.makedirs(SINK_BASE, exist_ok=True)
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = spark.createDataFrame(
-        [(i, [float(i == j) for j in range(64)]) for i in range(4)],
-        "list_id long, cvec array<double>",
-    )
-    t = f"bkt_ivf_index_test_{os.getpid()}"
-    assigned = emb.join(
-        _best_lists(emb, cents, "vec_id", "embedding", 1), "vec_id"
-    )
-    write_bucketed(
-        assigned.select("list_id", "vec_id", "embedding"),
-        t, "list_id", 4, path=f"{SINK_BASE}/{t}",
-    )
-    probes = _best_lists(
-        emb.where(F.col("vec_id") % 100 == 0)
-        .select(F.col("vec_id").alias("query_id"), "embedding"),
-        cents, "query_id", "embedding", 2,
-    )
-    joined = spark.table(t).hint("merge").join(probes, "list_id")
-    plan = I.formatted_plan(joined)
-    assert "SortMergeJoin" in plan
-    # the probe side is shuffle-free since r10 (one Arrow argmax pass —
-    # the old crossJoin + row_number window owned an exchange); the join
-    # adds exactly 1 (re-keying the probes on list_id). The bucketed
-    # index side adds NONE — if it needed one the total would be 2
-    # (storage partitioning satisfies the join key).
-    assert I.shuffle_count(probes) == 0
-    assert I.shuffle_count(joined) == 1
