@@ -32,7 +32,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from llm_data_pipeline_spark.core.config import PipelineConfig, step_output_dir

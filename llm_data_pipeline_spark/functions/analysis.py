@@ -232,10 +232,8 @@ def with_quality_ppm(df, text_col: str = "text", out_col: str = "q_ppm"):
     from llm_data_pipeline_spark.functions.intmath import rounded_div_col
     from llm_data_pipeline_spark.functions.text import (
         ALPHA_CLASS,
-        CJK_CLASS,
         NON_WS_CLASS,
         PUNCT_CLASS,
-        count_matches,
     )
 
     t = F.coalesce(F.col(text_col), F.lit(""))

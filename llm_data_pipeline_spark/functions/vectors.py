@@ -1,9 +1,9 @@
 """Vector math over array<float> embedding columns — native higher-order
-functions only (no UDFs), so similarity search stays inside codegen.
+functions only (no UDFs), so vector scoring stays inside codegen.
 
 All arithmetic is done in double with a *sequential* left fold, which is
 bit-reproducible and matches DuckDB's list_dot_product/list_reduce exactly
-(verified by the similarity oracle queries).
+(verified by the streaming_embedding_topk oracle query).
 """
 
 from __future__ import annotations
@@ -46,7 +46,7 @@ def cosine_arrow(a: Column, b: Column) -> Column:
     (which starts from 0.0, and 0.0 + x0 == x0 exactly) — and the
     float32→float64 casts and multiplies are the same operand set, so
     every output double matches the fold bit for bit (pinned on the real
-    embeddings table in tests/test_similarity.py). Use in wide scoring
+    embeddings table in tests/test_streaming.py). Use in wide scoring
     projections: the interpreted higher-order fold costs ~µs/element,
     this is one vectorized numpy pass per batch.
 

@@ -282,7 +282,6 @@ def bottomk_sample(
     TakeOrderedAndProject — per-partition top-k heaps + one k-row merge,
     never a global sort. Returns (hk, *carry).
     """
-    from llm_data_pipeline_spark.functions.hashing import portable_hash60
 
     return (
         df.select(portable_hash60(key).alias("hk"), *carry)
@@ -396,7 +395,6 @@ def grouped_bottomk_quantiles(
     """
     import math
 
-    from llm_data_pipeline_spark.functions.hashing import portable_hash60
     from llm_data_pipeline_spark.functions.intmath import rounded_div_col
 
     spark = df.sparkSession

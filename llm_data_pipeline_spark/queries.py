@@ -129,14 +129,10 @@ def load_all() -> None:
     import llm_data_pipeline_spark.queries_pii  # noqa: F401
     import llm_data_pipeline_spark.queries_dedup  # noqa: F401
     import llm_data_pipeline_spark.queries_text  # noqa: F401
-    import llm_data_pipeline_spark.queries_similarity  # noqa: F401
     import llm_data_pipeline_spark.queries_tokenize  # noqa: F401
     import llm_data_pipeline_spark.queries_streaming  # noqa: F401
-    import llm_data_pipeline_spark.queries_multimodal  # noqa: F401
-    import llm_data_pipeline_spark.queries_udf  # noqa: F401
     import llm_data_pipeline_spark.queries_curation  # noqa: F401
     import llm_data_pipeline_spark.queries_heuristics  # noqa: F401
-    import llm_data_pipeline_spark.queries_search  # noqa: F401
     import llm_data_pipeline_spark.queries_ingest  # noqa: F401
     import llm_data_pipeline_spark.queries_e2e  # noqa: F401
     import llm_data_pipeline_spark.queries_sinks  # noqa: F401

@@ -614,89 +614,6 @@ def unicode_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# integer-exact distributed k-means (training trajectory replayed in SQL)
-# ---------------------------------------------------------------------------
-
-_KM_K = 8
-_KM_ITERS = 3
-_KM_DIM = 64
-
-
-def _km_oracle(k: int = _KM_K, iters: int = _KM_ITERS, dim: int = _KM_DIM) -> str:
-    rdiv = rounded_div_sql("s.s", "s.n")
-    ctes = [
-        f"""emb AS (
-      SELECT vec_id, i AS pos,
-             CAST(round(embedding[i+1]::DOUBLE * 1000000) AS BIGINT) AS v
-      FROM embeddings, unnest(range({dim})) t(i)
-    )""",
-        f"c0 AS (SELECT vec_id AS cluster, pos, v FROM emb WHERE vec_id < {k})",
-    ]
-    for t in range(1, iters + 1):
-        ctes += [
-            f"""d{t} AS (
-      SELECT e.vec_id, c.cluster, sum((e.v - c.v) * (e.v - c.v)) AS d
-      FROM emb e JOIN c{t-1} c USING (pos) GROUP BY 1, 2
-    )""",
-            f"""a{t} AS (
-      SELECT vec_id, cluster FROM (
-        SELECT vec_id, cluster,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d, cluster) AS rn
-        FROM d{t}) WHERE rn = 1
-    )""",
-            f"""s{t} AS (
-      SELECT a.cluster, e.pos, CAST(sum(e.v) AS BIGINT) AS s,
-             CAST(count(*) AS BIGINT) AS n
-      FROM a{t} a JOIN emb e USING (vec_id) GROUP BY 1, 2
-    )""",
-            f"""c{t} AS (
-      SELECT p.cluster, p.pos, coalesce({rdiv}, p.v) AS v
-      FROM c{t-1} p LEFT JOIN s{t} s ON s.cluster = p.cluster AND s.pos = p.pos
-    )""",
-        ]
-    ctes.append(
-        f"""df AS (
-      SELECT e.vec_id, c.cluster, sum((e.v - c.v) * (e.v - c.v)) AS d
-      FROM emb e JOIN c{iters} c USING (pos) GROUP BY 1, 2
-    )"""
-    )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + """
-    SELECT cluster, CAST(count(*) AS BIGINT) AS n_members,
-           CAST(sum(d) AS BIGINT) AS inertia
-    FROM (SELECT vec_id, cluster, d,
-                 row_number() OVER (PARTITION BY vec_id ORDER BY d, cluster) AS rn
-          FROM df) WHERE rn = 1
-    GROUP BY cluster ORDER BY cluster
-    """
-    )
-
-
-@query(
-    "embedding_kmeans_clusters",
-    oracle=_km_oracle(),
-    tags=("corpus", "embedding", "clustering", "training"),
-)
-def embedding_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed Lloyd k-means trained IN-ENGINE over the embeddings
-    table (k=8, 3 iterations, smallest-id init) and graded on the final
-    per-cluster sizes + inertia (operators/kmeans.py). The oracle
-    re-derives EVERY centroid of EVERY iteration from raw parquet via
-    unrolled CTEs —
-    possible because the trajectory is integer-exact: micro-quantized
-    vectors, associative int64 distances, tie-to-smallest-id assignment,
-    pure-integer rounded-division centroid updates."""
-    from llm_data_pipeline_spark.operators.kmeans import kmeans_cluster_stats
-
-    emb = table(spark, sf_dir, "embeddings", scatter=True).select(
-        "vec_id", "embedding"
-    )
-    return kmeans_cluster_stats(emb, k=_KM_K, iters=_KM_ITERS).orderBy("cluster")
-
-
-# ---------------------------------------------------------------------------
 # robust length filter (exact per-group percentiles + IQR fences)
 # ---------------------------------------------------------------------------
 
@@ -1579,8 +1496,6 @@ def packing_padding_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-branch window pass. The global rank windows here are the graded
     harness; at scale the batching comes free from the range-sharded
     layout (per-shard local order), which is the point being measured."""
-    from llm_data_pipeline_spark.functions.hashing import portable_hash60
-    from llm_data_pipeline_spark.functions.intmath import rounded_div_col
 
     docs = table(spark, sf_dir, "documents", scatter=True).select(
         "doc_id", "n_chars"
@@ -1808,7 +1723,6 @@ def source_mix_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     mix within 90% of the uniform maximum ln(k) — the alarm that one
     source is quietly swallowing the corpus. One groupBy; everything else
     is a k-row rollup."""
-    from llm_data_pipeline_spark.functions.intmath import rounded_div_col
 
     docs = table(spark, sf_dir, "documents", scatter=True)
     c = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
@@ -1898,7 +1812,6 @@ def ngram_novelty_by_source(spark: SparkSession, sf_dir: str):
     combine carries (source, gram) distincts. Oracle replays
     tokenization, gram explode, first-occurrence attribution, and the
     rounded-div ppm."""
-    from llm_data_pipeline_spark.functions.intmath import rounded_div_col
     from llm_data_pipeline_spark.functions.text import norm_ws
 
     docs = table(spark, sf_dir, "documents", scatter=True)

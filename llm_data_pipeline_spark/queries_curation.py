@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from llm_data_pipeline_spark.functions.hashing import DUCKDB_HASH60
+from llm_data_pipeline_spark.functions.intmath import rounded_div_col, rounded_div_sql
 from llm_data_pipeline_spark.operators.curation import (
     decontaminate,
     mix_corpus,
@@ -874,7 +875,6 @@ _PRIO_HASH_SQL = DUCKDB_HASH60.format(s="(doc_id::VARCHAR || ':prio-v1')")
 
 
 def _prio_oracle() -> str:
-    from llm_data_pipeline_spark.functions.intmath import rounded_div_sql
 
     err = rounded_div_sql(
         "((e.est_total - o.exact_total) * 1000000)", "o.exact_total"
@@ -994,7 +994,6 @@ def priority_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("exact_total")
     )
     est = samp.agg(F.sum("est_w").cast("long").alias("est_total"))
-    from llm_data_pipeline_spark.functions.intmath import rounded_div_col
 
     return (
         samp.crossJoin(F.broadcast(est))
@@ -1026,11 +1025,6 @@ def priority_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # multiplicative-update cap: one nat of excess loss doubles the factor
 # ceiling (factor in [1, 2] per step, integer micro-units)
 _DOREMI_CAP = 1_000_000
-
-from llm_data_pipeline_spark.functions.intmath import (  # noqa: E402
-    rounded_div_col,
-    rounded_div_sql,
-)
 
 _LN_MICRO = "CAST(round(ln({x}) * 1000000) AS BIGINT)"
 

@@ -20,7 +20,6 @@ from pyspark.sql.window import Window
 
 from llm_data_pipeline_spark.operators.dedup import (
     add_simhash,
-    exact_dedup,
     ngram_jaccard_pairs,
     simhash_candidate_pairs,
 )
@@ -1576,7 +1575,6 @@ def _ensure_screen_pairs(spark: SparkSession, sf_dir: str) -> str:
     because its pair set IS derivable from pure index content."""
     import os as _os
 
-    from llm_data_pipeline_spark.functions.hashing import portable_hash64
     from llm_data_pipeline_spark.queries_sinks import SINK_BASE
 
     sfx = f"{abs(hash(sf_dir)) % 10**8}_{_os.getpid()}"
@@ -2201,7 +2199,6 @@ def minhash_lsh_recall_eval(spark: SparkSession, sf_dir: str):
     truth replay in SQL, so the recall/precision numbers themselves are
     oracle-checked, not self-reported."""
     from llm_data_pipeline_spark.functions.intmath import rounded_div_col
-    from llm_data_pipeline_spark.operators.lsh import band_rows, candidate_pairs
 
     aug = _augmented(spark, sf_dir, scatter=True)
     # ONE shingling pass shared by both evaluation sides: the LSH chain
@@ -3383,7 +3380,6 @@ def lsh_scurve_calibration(spark: SparkSession, sf_dir: str):
     Jaccard only over the 50 planted pairs (O(pairs), never O(n^2));
     the LSH chain, the truth, and the comparison all hash-checked."""
     from llm_data_pipeline_spark.functions.intmath import rounded_div_col
-    from llm_data_pipeline_spark.operators.lsh import band_rows
 
     aug = _augmented(spark, sf_dir, scatter=True)
     # ONE shingling pass shared by the banding chain and the exact-Jaccard

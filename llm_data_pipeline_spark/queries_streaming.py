@@ -743,10 +743,6 @@ def streaming_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         graded_prefix,
         unigram_encode_expr,
     )
-    from llm_data_pipeline_spark.streaming.stream import (
-        read_parquet_stream,
-        run_to_memory,
-    )
 
     sdf = read_parquet_stream(
         spark, f"{sf_dir}/documents.parquet", ts_col=None
@@ -798,7 +794,6 @@ def _stream_topk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from llm_data_pipeline_spark.functions.vectors import cosine_arrow
     from llm_data_pipeline_spark.queries import table
     from llm_data_pipeline_spark.streaming.state import streaming_topk
-    from llm_data_pipeline_spark.streaming.stream import read_parquet_stream
 
     corpus = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     sq = (
@@ -828,9 +823,10 @@ def streaming_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact ANN SERVING on a continuous query stream: arriving query
     vectors (a readStream over the embeddings table's %100 sample) are
     scored against the static corpus via a stream-static join with the
-    same Arrow-batched cosine as the batch path, and — the scale-bearing
-    part — the top-10 REDUCTION happens INSIDE the stream with **O(k)
-    state per query** (``streaming/state.py:streaming_topk``, an
+    Arrow-batched cosine (``functions/vectors.py:cosine_arrow``), and —
+    the scale-bearing part — the top-10 REDUCTION happens INSIDE the
+    stream with **O(k) state per query**
+    (``streaming/state.py:streaming_topk``, an
     applyInPandasWithState k-buffer: each micro-batch merges its
     candidates into a <=10-entry state row and discards the rest). The
     round-8 formulation collect_list'ed EVERY scored corpus row into the
@@ -842,7 +838,6 @@ def streaming_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     count) keeps the result micro-batch-count-independent. Graded by the
     exact batch top-10 in SQL — streaming == batch, the same contract the
     unigram stream proves for tokenize."""
-    from llm_data_pipeline_spark.streaming.stream import run_to_memory
 
     agg = _stream_topk_frame(spark, sf_dir)
     out = run_to_memory(agg, mode="update", state_partitions=4)
@@ -898,10 +893,6 @@ def streaming_event_topk_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import StringType
 
     from llm_data_pipeline_spark.streaming.state import streaming_topk
-    from llm_data_pipeline_spark.streaming.stream import (
-        read_parquet_stream,
-        run_to_memory,
-    )
 
     ev = read_parquet_stream(spark, f"{sf_dir}/events.parquet", ts_col=None)
     scored = ev.select(

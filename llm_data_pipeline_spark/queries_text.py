@@ -419,7 +419,6 @@ def lm_quality_tertiles(spark: SparkSession, sf_dir: str):
     micro scores, so no float summation order leaks in. At 100 TB the
     ntile becomes a quantile-threshold join (approx or exact percentiles)
     instead of a global sort — same semantics, two corpus passes."""
-    from pyspark.sql.window import Window
 
     from llm_data_pipeline_spark.operators.lm_score import add_lm_score
 
@@ -476,7 +475,6 @@ def language_confusion_matrix(spark: SparkSession, sf_dir: str):
     corpus's stored language labels, with per-label fractions — the
     accuracy view a model-quality dashboard needs before swapping the
     heuristic for a real fastText model."""
-    from pyspark.sql.window import Window
 
     docs = table(spark, sf_dir, "documents", scatter=True)
     pred = A.with_language_heuristic(docs).select("doc_id", "lang", "lang_pred")
@@ -630,7 +628,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str):
     replayed exactly by the oracle. Scale shape: two vocabulary-bounded
     groupBys + a broadcast of the df table onto the tf rows; the top-3
     window partitions by doc_id."""
-    from pyspark.sql.window import Window
 
     docs = table(spark, sf_dir, "documents", scatter=True)
     toked = docs.select(
@@ -716,7 +713,6 @@ def quality_threshold_sweep(spark: SparkSession, sf_dir: str):
     The scale shape for 'how much data does each cut keep' questions:
     no per-threshold rescan, no data x thresholds expansion; the window
     runs over <=6 rows."""
-    from llm_data_pipeline_spark.functions import analysis as A
     from llm_data_pipeline_spark.functions.intmath import rounded_div_col
 
     docs = table(spark, sf_dir, "documents", scatter=True)
@@ -1125,7 +1121,6 @@ def quality_drift_ks(spark: SparkSession, sf_dir: str):
     different mechanisms (even ids vs long docs) so the drift is real and
     the flag fires deterministically. This is the pre-training guardrail
     that catches a silently-shifted ingest batch before it trains."""
-    from llm_data_pipeline_spark.functions import analysis as A
     from llm_data_pipeline_spark.functions.intmath import rounded_div_col
 
     docs = table(spark, sf_dir, "documents", scatter=True)
@@ -1243,7 +1238,6 @@ def quality_zscore_by_lang(spark: SparkSession, sf_dir: str):
     cross-lingual quality cut. Two-pass exact integer moments (centered
     squares stay far inside int64; the one sqrt runs on an integer input,
     cross-engine stable) + a broadcast params join; z in micro-units."""
-    from llm_data_pipeline_spark.functions import analysis as A
     from llm_data_pipeline_spark.functions.intmath import rounded_div_col
 
     docs = table(spark, sf_dir, "documents", scatter=True)

@@ -675,7 +675,7 @@ def binary_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         drop_remainder=True, order_col="doc_id",
     )
     out_dir = _BIN_EXPORT_DIR
-    meta = export_binary(chunks, out_dir, dtype="uint16", via="partitions")
+    meta = export_binary(chunks, out_dir, dtype="uint16")
     arr = np.fromfile(meta["path"], dtype="<u2").astype(np.int64)
     row = (
         int(arr.size),

@@ -641,7 +641,6 @@ _UPS_BUDGET_TOKENS = 1_000_000  # global token budget the sampler scales into
 
 
 def _upsample_oracle() -> str:
-    from llm_data_pipeline_spark.functions.intmath import rounded_div_sql
     from llm_data_pipeline_spark.queries_text import (
         QUALITY_DECILE_SQL,
         TEXT_BASE_SQL,
@@ -702,7 +701,6 @@ def quality_upsample_epochs(spark: SparkSession, sf_dir: str):
     at 100 TB the plan is a dashboard artifact, the sampler applies it
     as a broadcast map."""
     from llm_data_pipeline_spark.functions.analysis import tokens, with_quality_ppm
-    from llm_data_pipeline_spark.functions.intmath import rounded_div_col
 
     docs = table(spark, sf_dir, "documents", scatter=True)
     # decile from the INTEGER-ppm score (with_quality_ppm) — the float

@@ -487,7 +487,6 @@ def pipeline_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         remove_boilerplate_lines,
     )
     from llm_data_pipeline_spark.functions.hashing import portable_hash60
-    from pyspark.sql.window import Window
 
     c4 = c4_line_stats(
         lined_documents(spark, sf_dir),
@@ -674,7 +673,6 @@ _V2_NORM = "trim(regexp_replace(lower(coalesce(text,'')), '\\s+', ' ', 'g'))"
 
 
 def _v2_oracle() -> str:
-    from llm_data_pipeline_spark.functions.intmath import rounded_div_sql
     from llm_data_pipeline_spark.queries_heuristics import _gopher_oracle
 
     rd = rounded_div_sql("(docs * 1000000)", "coalesce(prev, docs)")

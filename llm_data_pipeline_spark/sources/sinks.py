@@ -12,11 +12,9 @@ Reference parity:
   token id overflows uint16 (export/run.py:125-127).
 
 Scale note for S8: the reference streams every shard through the driver.
-Here the default path writes per-range-partition ``.bin`` shards in
-parallel (executors own disjoint, contiguous chunk ranges, so shard
-concatenation order == partition order) and only the final concat touches
-one machine; a pure-driver ``toLocalIterator`` path exists for strict
-single-file streaming without a shared filesystem.
+Here executors write per-range-partition ``.bin`` shards in parallel (they
+own disjoint, contiguous chunk ranges, so shard concatenation order ==
+partition order) and only the final concat touches one machine.
 """
 
 from __future__ import annotations
@@ -65,53 +63,39 @@ def write_packed_parquet(
     )
 
 
+_EXPORT_DTYPES = {"uint16": np.uint16, "int32": np.int32}
+
+
 def export_binary(
     df_chunks: DataFrame,
     out_dir: str,
     dtype: str = "uint16",
     order_col: str = "chunk_id",
     ids_col: str = "input_ids",
-    num_partitions: int | None = None,
-    via: str = "partitions",
 ) -> dict:
     """S8: flatten chunk token ids (in chunk order) into final.bin.
 
-    via='partitions': range-partition on chunk order, each partition writes
+    Range-partitions on chunk order; each partition writes
     ``shards/part-NNNNN.bin`` (parallel, shared-FS contract like the
-    reference's Parquet dirs), driver concatenates in partition order.
-    via='driver': strict reference shape — toLocalIterator in order, single
-    append stream.
+    reference's Parquet dirs) and the driver concatenates them in partition
+    order. ``dtype`` is ``"uint16"`` or ``"int32"``; anything else raises
+    ``ValueError`` before a file is written.
 
-    Returns {"path", "total_tokens", "n_overflow"} — n_overflow counts ids
-    that wrapped in uint16 (the reference logs a warning per overflow batch).
+    Returns {"path", "total_tokens", "n_overflow", "dtype"} — n_overflow
+    counts uint16 ids that wrapped (the reference logs a warning per
+    overflow batch), counted by the same pass that writes the shards.
     """
-    np_dtype = np.uint16 if dtype == "uint16" else np.int32
+    if dtype not in _EXPORT_DTYPES:
+        raise ValueError(
+            f"export dtype must be one of {sorted(_EXPORT_DTYPES)}, got {dtype!r}"
+        )
+    np_dtype = _EXPORT_DTYPES[dtype]
+    check_overflow = dtype == "uint16"
     os.makedirs(out_dir, exist_ok=True)
     final = os.path.join(out_dir, "final.bin")
 
-    overflow = (
-        df_chunks.select(
-            F.size(F.filter(ids_col, lambda x: x >= 65536)).alias("o")
-        ).agg(F.sum("o"))
-        .first()[0]
-        if dtype == "uint16"
-        else 0
-    )
-
-    if via == "driver":
-        total = 0
-        with open(final, "wb") as f:
-            for row in df_chunks.orderBy(order_col).toLocalIterator():
-                # int64 first, then astype: astype wraps out-of-range ids
-                # portably (numpy>=2.0 raises on direct asarray(uint16)).
-                arr = np.asarray(row[ids_col], dtype=np.int64).astype(np_dtype)
-                f.write(arr.tobytes())
-                total += len(arr)
-        return {"path": final, "total_tokens": total, "n_overflow": overflow or 0}
-
     spark = df_chunks.sparkSession
-    if num_partitions is None:
-        num_partitions = max(2, spark.sparkContext.defaultParallelism)
+    num_partitions = max(2, spark.sparkContext.defaultParallelism)
     shard_dir = os.path.join(out_dir, "shards")
     os.makedirs(shard_dir, exist_ok=True)
     for old in os.listdir(shard_dir):
@@ -120,38 +104,43 @@ def export_binary(
     parted = df_chunks.select(order_col, ids_col).repartitionByRange(
         num_partitions, order_col
     ).sortWithinPartitions(order_col)
-    dtype_name = "uint16" if np_dtype is np.uint16 else "int32"
 
     def _write_shard(it):
         import numpy as _np
 
         pid = None
         buf = []
+        n_overflow = 0
         for row in it:
             if pid is None:
                 from pyspark import TaskContext
 
                 pid = TaskContext.get().partitionId()
-            buf.append(_np.asarray(row[1], dtype=_np.int64).astype(np_dtype))
+            # int64 first, then astype: astype wraps out-of-range ids
+            # portably (numpy>=2.0 raises on direct asarray(uint16)).
+            ids = _np.asarray(row[1], dtype=_np.int64)
+            if check_overflow:
+                n_overflow += int(_np.count_nonzero(ids >= 65536))
+            buf.append(ids.astype(np_dtype))
         if pid is None:
             return iter(())
         data = _np.concatenate(buf) if buf else _np.empty(0, dtype=np_dtype)
         shard = os.path.join(shard_dir, f"part-{pid:05d}.bin")
         with open(shard, "wb") as f:
             f.write(data.tobytes())
-        return iter([(pid, len(data))])
+        return iter([(pid, len(data), n_overflow)])
 
-    counts = dict(parted.rdd.mapPartitions(_write_shard).collect())
+    shards = sorted(parted.rdd.mapPartitions(_write_shard).collect())
     total = 0
     with open(final, "wb") as f:
-        for pid in sorted(counts):
+        for pid, n_tokens, _ in shards:
             shard = os.path.join(shard_dir, f"part-{pid:05d}.bin")
             with open(shard, "rb") as s:
                 f.write(s.read())
-            total += counts[pid]
+            total += n_tokens
     return {
         "path": final,
         "total_tokens": total,
-        "n_overflow": overflow or 0,
-        "dtype": dtype_name,
+        "n_overflow": sum(n for *_, n in shards),
+        "dtype": dtype,
     }

@@ -47,3 +47,76 @@ def test_table_schema_cache_ignores_recycled_session_address(spark, sf_dir):
         assert Q.table(spark, sf_dir, "documents").schema == real
     finally:
         Q._SCHEMA_CACHE.pop((id(spark), path), None)
+
+
+def _import_hygiene(path):
+    """Problems in one module: module-level imported names it never
+    references, and function-local ``from X import n`` re-imports of a
+    name the module already imports from X at top level."""
+    import ast
+
+    src = path.read_text()
+    lines = src.splitlines()
+    tree = ast.parse(src)
+
+    def exempt(node):
+        return any(
+            "# noqa: F401" in lines[i - 1]
+            for i in range(node.lineno, node.end_lineno + 1)
+        )
+
+    def key(node, alias):
+        return (node.level, node.module, alias.name)
+
+    top, top_from = {}, set()
+    for node in tree.body:
+        if isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            for a in node.names:
+                top_from.add(key(node, a))
+                if not exempt(node):
+                    top[a.asname or a.name] = node.lineno
+        elif isinstance(node, ast.Import) and not exempt(node):
+            for a in node.names:
+                top[a.asname or a.name.split(".")[0]] = node.lineno
+
+    used = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            used.add(node.id)
+        ann = getattr(node, "annotation", None) or getattr(node, "returns", None)
+        if isinstance(ann, ast.Constant) and isinstance(ann.value, str):
+            used |= {
+                n.id for n in ast.walk(ast.parse(ann.value, mode="eval"))
+                if isinstance(n, ast.Name)
+            }
+    problems = [
+        f"{path}:{line}: `{name}` imported but unused"
+        for name, line in top.items() if name not in used
+    ]
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for node in ast.walk(fn):
+            if isinstance(node, ast.ImportFrom):
+                problems += [
+                    f"{path}:{node.lineno}: `{a.name}` re-imported from "
+                    f"{node.module}, already imported at module level"
+                    for a in node.names if key(node, a) in top_from
+                ]
+    return problems
+
+
+def test_package_has_no_unused_imports():
+    """Import hygiene over the package (no linter ships with the repo): a
+    deletion must not leave an import behind. ``__init__.py`` files and
+    ``# noqa: F401`` lines are re-exports and exempt."""
+    import pathlib
+
+    pkg = pathlib.Path(Q.__file__).parent
+    problems = [
+        p
+        for path in sorted(pkg.rglob("*.py"))
+        if path.name != "__init__.py"
+        for p in _import_hygiene(path)
+    ]
+    assert not problems, "\n".join(problems)

@@ -1,22 +1,16 @@
 """Property-based tests (hypothesis) over the pure-Python kernels.
 
 These target the components whose correctness is positional/byte-level —
-the WARC reader, the fake-codec header, text normalization — where
+the WARC reader, text normalization, sequential packing — where
 example-based tests miss edge shapes. No SparkSession involved, so the
 search space can be explored cheaply.
 """
 
 from __future__ import annotations
 
-import struct
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from llm_data_pipeline_spark.operators.multimodal import (
-    MAGIC,
-    pack_fake_media,
-)
 from llm_data_pipeline_spark.sources.wet import (
     WetIngestConfig,
     extract_wet_bytes,
@@ -69,17 +63,6 @@ def test_extract_wet_bytes_never_violates_length_gates(texts):
 def test_normalize_text_idempotent(t):
     once = normalize_text(t)
     assert normalize_text(once) == once
-
-
-@settings(max_examples=100, deadline=None)
-@given(st.binary(max_size=2000), st.sampled_from(["image", "audio", "video"]))
-def test_fake_media_header_roundtrip(body, kind):
-    p = pack_fake_media(kind, body)
-    assert p[:4] == MAGIC
-    _, w, h, c, sr = struct.unpack("<BHHBH", p[4:12])
-    n = len(body)
-    assert (w, h, c) == (16 + n % 240, 16 + (n * 7) % 240, 1 + n % 3)
-    assert p[12:] == body
 
 
 @settings(max_examples=60, deadline=None)

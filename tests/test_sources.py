@@ -111,24 +111,39 @@ def test_write_packed_parquet_sharding(spark, tmp_path):
     assert len(data_files) >= 4  # 10 rows / 3-per-file cap
 
 
-@pytest.mark.parametrize("via", ["partitions", "driver"])
-def test_export_binary(spark, tmp_path, via):
+def test_export_binary(spark, tmp_path):
     chunks = [(i, [i * 4 + j for j in range(4)]) for i in range(50)]
     df = spark.createDataFrame(chunks, "chunk_id: long, input_ids: array<int>")
-    out = str(tmp_path / f"export_{via}")
-    meta = export_binary(df, out, dtype="uint16", via=via)
+    meta = export_binary(df, str(tmp_path / "export"), dtype="uint16")
     arr = np.fromfile(meta["path"], dtype=np.uint16)
     assert meta["total_tokens"] == 200
     assert list(arr) == list(range(200))  # global chunk order preserved
     assert meta["n_overflow"] == 0
+    assert meta["dtype"] == "uint16"
 
 
 def test_export_binary_overflow_count(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(0, [1, 70000, 2, 70001])], "chunk_id: long, input_ids: array<int>"
-    )
-    meta = export_binary(df, str(tmp_path / "ovf"), dtype="uint16", via="driver")
-    assert meta["n_overflow"] == 2
+    # overflowing ids in several chunks, so more than one shard counts some
+    chunks = [(i, [1, 70000 + i, 2, 65535]) for i in range(8)]
+    chunks.append((8, [65536, 3]))
+    df = spark.createDataFrame(chunks, "chunk_id: long, input_ids: array<int>")
+    meta = export_binary(df, str(tmp_path / "ovf"), dtype="uint16")
+    assert meta["n_overflow"] == 9
+    arr = np.fromfile(meta["path"], dtype=np.uint16)
+    assert meta["total_tokens"] == len(arr) == 34
+    assert list(arr[:4]) == [1, 70000 % 65536, 2, 65535]  # wrapped, in order
+    wide = export_binary(df, str(tmp_path / "ovf32"), dtype="int32")
+    assert wide["n_overflow"] == 0 and wide["dtype"] == "int32"
+    assert list(np.fromfile(wide["path"], dtype=np.int32)[-2:]) == [65536, 3]
+
+
+@pytest.mark.parametrize("dtype", ["uint32", "unit16"])
+def test_export_binary_rejects_unknown_dtype(spark, tmp_path, dtype):
+    df = spark.createDataFrame([(0, [1, 2])], "chunk_id: long, input_ids: array<int>")
+    out = tmp_path / "bad"
+    with pytest.raises(ValueError, match="dtype"):
+        export_binary(df, str(out), dtype=dtype)
+    assert not out.exists()  # rejected before any file is written
 
 
 def test_normalize_text_parity():
