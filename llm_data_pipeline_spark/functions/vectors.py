@@ -46,7 +46,7 @@ def cosine_arrow(a: Column, b: Column) -> Column:
     (which starts from 0.0, and 0.0 + x0 == x0 exactly) — and the
     float32→float64 casts and multiplies are the same operand set, so
     every output double matches the fold bit for bit (pinned on the real
-    embeddings table in tests/test_streaming.py). Use in wide scoring
+    embeddings table in tests/test_similarity.py). Use in wide scoring
     projections: the interpreted higher-order fold costs ~µs/element,
     this is one vectorized numpy pass per batch.
 

@@ -325,6 +325,23 @@ def test_lr_classifier_scoring_broadcasts_weights(q):
     I.assert_no_cartesian(df)
 
 
+def test_kmeans_assignment_joinless(spark, sf_dir):
+    from llm_data_pipeline_spark.operators.kmeans import (
+        assign_clusters,
+        quantize_micro,
+    )
+    from pyspark.sql import functions as F
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", quantize_micro(F.col("embedding")).alias("xq")
+    )
+    df = assign_clusters(emb, [[0] * 64, [1000] * 64])
+    plan = I.simple_plan(df)
+    # the model rides in the expression as literals — assignment must be a
+    # pure narrow map: no join, no shuffle
+    assert "Join" not in plan and I.shuffle_count(df) == 0
+
+
 def test_html_extraction_zero_shuffle_narrow_map(q):
     """The HTML extractor must run inside the scan stage: no join, at
     most the presentation sort's exchange."""

@@ -111,13 +111,20 @@ def test_write_packed_parquet_sharding(spark, tmp_path):
     assert len(data_files) >= 4  # 10 rows / 3-per-file cap
 
 
-def test_export_binary(spark, tmp_path):
-    chunks = [(i, [i * 4 + j for j in range(4)]) for i in range(50)]
-    df = spark.createDataFrame(chunks, "chunk_id: long, input_ids: array<int>")
+@pytest.mark.parametrize("layout", ["partitions", "one_chunk"])
+def test_export_binary(spark, tmp_path, layout):
+    # "partitions": 50 chunks arrive reversed and spread over 4 input
+    # partitions; "one_chunk": a single chunk, so most export partitions
+    # are empty and write no shard
+    n = 50 if layout == "partitions" else 1
+    chunks = [(i, [i * 4 + j for j in range(4)]) for i in range(n)]
+    df = spark.createDataFrame(
+        chunks[::-1], "chunk_id: long, input_ids: array<int>"
+    ).repartition(4)
     meta = export_binary(df, str(tmp_path / "export"), dtype="uint16")
     arr = np.fromfile(meta["path"], dtype=np.uint16)
-    assert meta["total_tokens"] == 200
-    assert list(arr) == list(range(200))  # global chunk order preserved
+    assert meta["total_tokens"] == 4 * n
+    assert list(arr) == list(range(4 * n))  # global chunk order restored
     assert meta["n_overflow"] == 0
     assert meta["dtype"] == "uint16"
 
