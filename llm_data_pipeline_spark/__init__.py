@@ -4,7 +4,7 @@ A brand-new engine (DataFrame / Spark SQL first) with the data-processing
 capabilities of the reference pipeline surveyed in SURVEY.md: ingest →
 clean → quality → pii → minhash dedup → clustering → tokenize → pack →
 export, plus large-scale extensions (exact/fuzzy dedup families, text
-analysis, curation and streaming) designed for 100 TB-scale Spark
+analysis and streaming) designed for 100 TB-scale Spark
 clusters. The reference is text-only, and so is this engine.
 
 Everything is expressed as Catalyst-optimizable Column expressions where

@@ -157,9 +157,3 @@ def clean_judgment(
         "m_punct": m_punct,
         "m_dup_line": m_dup,
     }
-
-
-def stable_doc_id(*parts: Column) -> Column:
-    """sha1 over newline-joined provenance parts (reference
-    ingest/step.py:35-38)."""
-    return F.sha1(F.concat_ws("\n", *parts))

@@ -55,12 +55,3 @@ def split_kept(df_scored: DataFrame) -> tuple[DataFrame, DataFrame]:
 def drop_reason_distribution(df_scored: DataFrame) -> DataFrame:
     """Group-count of drop reasons — the stage's headline stats query."""
     return df_scored.groupBy("drop_reason").agg(F.count("*").alias("n_docs"))
-
-
-def run_clean(
-    df: DataFrame,
-    text_col: str = "text",
-    rules: CleanThresholds | None = None,
-) -> DataFrame:
-    """End-to-end: normalize + score + keep only passing rows."""
-    return score_documents(df, text_col, rules).filter(F.col("kept"))

@@ -1,10 +1,8 @@
-"""Deduplication family beyond MinHash/LSH: exact, SimHash, n-gram Jaccard.
+"""Deduplication family beyond MinHash/LSH: SimHash, n-gram Jaccard, chunks.
 
 These are the training-data dedup operators a 100 TB pipeline needs
 (north-star extensions; the reference only ships MinHash+LSH):
 
-- exact_dedup      — hash-groupBy on normalized text; one shuffle on a
-                     64/128-bit digest, never on the text itself.
 - simhash          — 64-bit SimHash natively (token hashes -> per-bit
                      majority vote -> packed long), Hamming-ball candidate
                      pairs via 4x16-bit chunk banding (pigeonhole: any pair
@@ -22,33 +20,6 @@ from pyspark.sql.window import Window
 
 from llm_data_pipeline_spark.functions.text import norm_ws
 from llm_data_pipeline_spark.functions.checkpoint import cut_lineage
-
-# ---------------------------------------------------------------------------
-# exact dedup
-# ---------------------------------------------------------------------------
-
-
-def exact_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    normalize: bool = True,
-) -> DataFrame:
-    """Keep one representative (min id) per distinct (normalized) text.
-
-    The shuffle key is md5(text) — fixed 32-byte keys, not arbitrary-length
-    documents, so shuffle volume is bounded by row count. Collision risk at
-    128 bits is negligible for any real corpus.
-    """
-    t = norm_ws(F.col(text_col)) if normalize else F.col(text_col)
-    keyed = df.withColumn("_k", F.md5(t))
-    w = Window.partitionBy("_k").orderBy(F.asc(id_col))
-    return (
-        keyed.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") == 1)
-        .drop("_k", "_rk")
-    )
-
 
 # ---------------------------------------------------------------------------
 # SimHash
@@ -92,13 +63,6 @@ def token_hashes(text: Column, hash_fn=None) -> Column:
     # wrapper lambda: builtins like xxhash64 are *args functions, which the
     # higher-order-function bridge rejects as lambda bodies
     return F.transform(tokens, lambda t: hash_fn(t))
-
-
-def simhash64(text: Column, hash_fn=None) -> Column:
-    """Single-expression SimHash (token hashing inlined into the bit fold —
-    prefer :func:`add_simhash`, which stages the hash array behind a column
-    boundary so each token is hashed once, not 64 times)."""
-    return simhash64_from_hashes(token_hashes(text, hash_fn))
 
 
 def _simhash64_expr_sql(col_name: str) -> str:
@@ -225,31 +189,6 @@ def simhash_candidate_pairs(
 # ---------------------------------------------------------------------------
 # word n-gram Jaccard (exact)
 # ---------------------------------------------------------------------------
-
-
-def word_ngrams_from_toks(tokens: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (space-joined) of a token ARRAY.
-
-    Pass a materialized column: expressions fed into the transform lambda
-    are re-inlined per element, so an inline tokenize would re-tokenize
-    the document once per n-gram position (see ngram_jaccard_pairs)."""
-    return F.when(F.size(tokens) < n, F.array(F.concat_ws(" ", tokens))).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(tokens) - n),
-                lambda i: F.concat_ws(" ", F.slice(tokens, i + 1, n)),
-            )
-        )
-    )
-
-
-def word_ngrams(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (space-joined) of normalized text.
-
-    Convenience form for single-use expressions; hot paths should stage
-    the token array and call :func:`word_ngrams_from_toks`."""
-    tokens = F.filter(F.split(norm_ws(text), " "), lambda x: x != "")
-    return word_ngrams_from_toks(tokens, n)
 
 
 def _shingled_docs(
@@ -596,12 +535,6 @@ def doc_chunks_from_toks(toks: Column, chunk_words: int = 16) -> Column:
             ),
         )
     )
-
-
-def doc_chunks(text: Column, chunk_words: int = 16) -> Column:
-    """Convenience text form of :func:`doc_chunks_from_toks`."""
-    toks = F.filter(F.split(norm_ws(text), " "), lambda x: x != "")
-    return doc_chunks_from_toks(toks, chunk_words)
 
 
 def chunk_dup_stats(

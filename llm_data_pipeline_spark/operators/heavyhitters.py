@@ -34,8 +34,7 @@ candidate-bounded shuffle. The MG dict lives in a Python worker but is
 bounded by ``c`` entries regardless of stream length.
 
 The reference pipeline has no frequent-pattern operator; this belongs to
-the engine-native curation extension set (SURVEY.md §2 extension set,
-alongside dedup/DSIR/mixing).
+the engine-native extension set (SURVEY.md §2 extension set).
 """
 
 from __future__ import annotations

@@ -6,8 +6,8 @@ and keeps high-scoring docs. The reference pipeline treats such models as
 external downloads (SURVEY §2.1 S10 — out of engine scope); this operator
 instead trains the classifier INSIDE the engine with plain DataFrame ops,
 so the whole loop — featurize, fit, score, select — runs where the data
-is. Features reuse DSIR's hashed unigram+bigram bucket counts
-(operators/dsir.py), so one featurization serves both selectors.
+is. Features are hashed unigram+bigram bucket counts per document (the
+DSIR featurization of Xie et al. 2023), built by ``_doc_bucket_counts``.
 
 Training = ``iters`` full-batch gradient-descent steps on logistic loss.
 Scale shape:
@@ -43,15 +43,59 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from llm_data_pipeline_spark.functions.intmath import rounded_div
-from llm_data_pipeline_spark.operators.dsir import _doc_bucket_counts
 from llm_data_pipeline_spark.functions.checkpoint import cut_lineage
+from llm_data_pipeline_spark.functions.hashing import portable_hash60
 from llm_data_pipeline_spark.functions.localframe import local_df
+from llm_data_pipeline_spark.functions.text import norm_ws
 
 DEFAULT_BUCKETS = 512
 DEFAULT_SALT = "qcls-v1:"
 DEFAULT_LR_INV = 2  # learning rate = 1 / lr_inv
 DEFAULT_ITERS = 3
 MICRO = 1_000_000
+
+
+def _doc_bucket_counts(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n_buckets: int,
+    salt: str,
+) -> DataFrame:
+    """(doc_id, bucket, c): hashed unigram+bigram feature counts per doc.
+
+    Bigrams are rendered as "w1 w2"; a unigram can never collide with a
+    bigram string (bigrams always contain a space), so one hash family
+    serves both feature orders.
+    """
+    toked = df.select(
+        F.col(id_col).alias("doc_id"),
+        F.filter(F.split(norm_ws(F.col(text_col)), " "), lambda x: x != "").alias(
+            "_toks"
+        ),
+    )
+    bigrams = F.when(
+        F.size("_toks") < 2, F.array().cast("array<string>")
+    ).otherwise(
+        F.zip_with(
+            F.slice("_toks", 1, F.size("_toks") - 1),
+            F.slice("_toks", 2, F.size("_toks") - 1),
+            lambda a, b: F.concat_ws(" ", a, b),
+        )
+    )
+    feats = toked.select(
+        "doc_id", F.explode(F.concat(F.col("_toks"), bigrams)).alias("feat")
+    )
+    return (
+        feats.select(
+            "doc_id",
+            (portable_hash60(F.concat(F.lit(salt), F.col("feat"))) % n_buckets).alias(
+                "bucket"
+            ),
+        )
+        .groupBy("doc_id", "bucket")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
 
 
 def _err_micro(margin_micro: Column, y: Column) -> Column:

@@ -34,7 +34,7 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Explicit ASCII whitespace class (NOT \s: Java and RE2 disagree on \x0B),
@@ -140,17 +140,6 @@ def encode_via_udf(
     return df.select(F.col(id_col), _encode(F.col(text_col)).alias("input_ids"))
 
 
-def resolve_eos_id(vocab: DataFrame | None = None) -> int:
-    """EOS id resolution (C16; reference tokenizer/run.py:51-67).
-
-    The word-vocab tokenizer fixes eos at the reference SPM convention
-    (eos=2). For an external model, ``encode_sentencepiece`` resolves it
-    from the model; here the trained vocab never occupies special ids, so
-    the constant is authoritative.
-    """
-    return EOS_ID
-
-
 def encode_sentencepiece(
     df: DataFrame,
     model_path: str,
@@ -239,28 +228,3 @@ def compare_tokenizers(
     ta, tb = out["a"]["total_tokens"], out["b"]["total_tokens"]
     out["token_saving_a_vs_b"] = round(1 - ta / tb, 6) if tb else 0.0
     return out
-
-
-def inspect_vocab(vocab: DataFrame, n: int = 50) -> list[tuple[int, str]]:
-    """Model inspection (M3; reference tokenizer/inspect_model.py:10-16):
-    the first ``n`` (id, token) pieces in id order."""
-    return [
-        (r["id"], r["token"])
-        for r in vocab.orderBy("id").limit(n).collect()
-    ]
-
-
-def train_and_encode(
-    spark: SparkSession,
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    vocab_size: int = 32000,
-    strategy: str = "join",
-) -> tuple[DataFrame, DataFrame]:
-    """Convenience: train vocab on df, encode df. Returns (vocab, encoded)."""
-    vocab = train_word_vocab(df, text_col, vocab_size)
-    enc = (encode_via_join if strategy == "join" else encode_via_udf)(
-        df, vocab, text_col, id_col
-    )
-    return vocab, enc

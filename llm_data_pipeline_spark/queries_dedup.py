@@ -1449,12 +1449,15 @@ def _ensure_signature_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     its own shingle+signature pipeline on first touch (three staged
     shingle checkpoints, three Arrow stages, ~8 s of the artifact family's
     first-pass-vs-steady gap in BENCH terms). Nightly they are ONE job:
-    sign base ∪ increment ∪ variants once behind an eager checkpoint
-    (signatures are per-row, so values are identical to per-side signing),
-    then the three independent writes overlap from a thread pool (guide
-    §2.6 — the next write's tasks back-fill executors freed by the
-    current write's tail). Returns
-    {t_index, counts_path, inc_path, var_path}.
+    sign base ∪ increment ∪ variants once and write the signed union to
+    parquet, partitioned by side (signatures are per-row, so values are
+    identical to per-side signing), then derive the three artifacts from
+    what is read back, their independent writes overlapping from a thread
+    pool (guide §2.6 — the next write's tasks back-fill executors freed by
+    the current write's tail). The persisted union, unlike an in-memory
+    checkpoint, holds no executor storage during the writes and survives
+    executor loss. Returns
+    {t_index, sig_path, counts_path, inc_path, var_path}.
     """
     import os as _os
     from concurrent.futures import ThreadPoolExecutor
@@ -1467,6 +1470,7 @@ def _ensure_signature_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     t_index = f"bkt_band_index_{sfx}"
     out = {
         "t_index": t_index,
+        "sig_path": f"{SINK_BASE}/signed_union_{sfx}",
         "counts_path": f"{SINK_BASE}/bkt_band_counts_{sfx}",
         "inc_path": f"{SINK_BASE}/signed_increment_{sfx}",
         "var_path": f"{SINK_BASE}/variant_band_rows_{sfx}",
@@ -1489,13 +1493,12 @@ def _ensure_signature_artifacts(spark: SparkSession, sf_dir: str) -> dict:
         .unionByName(variants.withColumn("_side", F.lit("v"))),
         _cache_key=(sf_dir, "documents::b+i+v"),
     )
-    signed = cut_lineage(
-        add_minhash(tagged, hash_fn=portable_hash60).select(
-            "_side", "doc_id",
-            F.col("length").cast("long").alias("length"), "signature",
-        ),
-        eager=True,  # three writer jobs read it — materialize once
-    )
+    add_minhash(tagged, hash_fn=portable_hash60).select(
+        "_side", "doc_id",
+        F.col("length").cast("long").alias("length"), "signature",
+    ).write.mode("overwrite").partitionBy("_side").parquet(out["sig_path"])
+    # three writer jobs read it; each prunes to its own side's directory
+    signed = spark.read.parquet(out["sig_path"])
 
     def _write_index() -> None:
         write_bucketed(

@@ -308,8 +308,8 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     every day after. Writes land under the pid-suffixed SINK_BASE; the
     graded values are the join's per-priority revenue rollup, proving the
     bucketed files carry exactly the source rows. Plan guard
-    (tests/test_webclean.py-style, in tests/test_skew.py): zero exchanges
-    feeding the join, one for the final aggregate."""
+    (in tests/test_skew.py): zero exchanges feeding the join, one for the
+    final aggregate."""
     from llm_data_pipeline_spark.operators.skew import write_bucketed
 
     sfx = f"{abs(hash(sf_dir)) % 10**8}_{os.getpid()}"

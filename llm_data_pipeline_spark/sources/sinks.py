@@ -1,8 +1,7 @@
-"""Sinks (S5-S9): parquet, text shards, packed shards, binary token export.
+"""Sinks (S6-S8): text shards, packed shards, binary token export.
 
-Reference parity:
-- S5 parquet sink (core.py:329-356): the reference rm-rf'd the output dir
-  before writing; Spark's ``mode("overwrite")`` is the atomic equivalent.
+Reference parity (the S5 parquet sink is ``core/stage.py::
+write_parquet_counted``):
 - S6 sharded text sink (tokenizer/train.py:25-87): one doc per line,
   newlines flattened, N shards — feeds SentencePiece training.
 - S7 packed parquet shards (tokenizer/run.py:220-261): zstd compression,
@@ -24,11 +23,6 @@ import os
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_parquet(df: DataFrame, path: str, compression: str = "snappy") -> None:
-    """S5: overwrite-mode parquet sink."""
-    df.write.mode("overwrite").option("compression", compression).parquet(path)
 
 
 def write_text_shards(

@@ -7,7 +7,6 @@ from pyspark.sql import Row
 
 from llm_data_pipeline_spark.operators.dedup import (
     add_simhash,
-    exact_dedup,
     ngram_jaccard_pairs,
     simhash_candidate_pairs,
 )
@@ -113,13 +112,6 @@ def test_minhash_dedup_keeps_canonical(spark):
     # empty and null text share the all-zero signature -> they cluster, and
     # exactly one survives (doc_id desc tie-break keeps 7)
     assert kept_ids & {5, 7} == {7}
-
-
-def test_exact_dedup(spark):
-    out = exact_dedup(_corpus(spark))
-    ids = {r.doc_id for r in out.select("doc_id").collect()}
-    assert 1 in ids and 3 not in ids  # min doc_id representative kept
-    assert {2, 4, 5, 6} <= ids
 
 
 def test_ngram_jaccard(spark):
