@@ -136,7 +136,9 @@ def load_all() -> None:
     import llm_data_pipeline_spark.queries_e2e  # noqa: F401
     import llm_data_pipeline_spark.queries_sinks  # noqa: F401
     import llm_data_pipeline_spark.queries_corpus  # noqa: F401
+    import llm_data_pipeline_spark.queries_webclean  # noqa: F401
     import llm_data_pipeline_spark.queries_trainprep  # noqa: F401
+    import llm_data_pipeline_spark.queries_storage  # noqa: F401
 
 
 def spark_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

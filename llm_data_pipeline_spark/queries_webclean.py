@@ -1162,43 +1162,8 @@ def _lic_header_sql() -> str:
     return f"(CASE {whens} ELSE '' END || coalesce(text, ''))"
 
 
-# Shared license-cascade pieces (license_header_filter AND the code-corpus
-# pipeline compose the SAME graded detector; one definition each side).
-
-def license_ft_sql() -> str:
-    """DuckDB: the prologue-bounded lowered text the cascade scans."""
-    return f"lower(substr({_lic_header_sql()}, 1, 400))"
-
-
-def license_id_case_sql(ft: str = "ft") -> str:
-    """DuckDB: license_id CASE over a column named ``ft``."""
-    return f"""CASE
-          WHEN regexp_matches({ft}, '{_SPDX_RE}')
-            THEN 'spdx:' || regexp_extract({ft}, '{_SPDX_RE}', 1)
-          WHEN regexp_matches({ft}, 'licensed under the apache license')
-            THEN 'apache-2.0'
-          WHEN regexp_matches({ft}, 'gnu general public license')
-            THEN 'gpl'
-          WHEN regexp_matches({ft},
-                 'permission is hereby granted, free of charge')
-            THEN 'mit'
-          WHEN regexp_matches({ft}, 'released into the public domain')
-            THEN 'unlicense'
-          WHEN regexp_matches({ft}, 'all rights reserved')
-            THEN 'proprietary'
-          ELSE 'none'
-        END"""
-
-
-def license_class_case_sql(lid: str = "license_id") -> str:
-    """DuckDB: class CASE over a column named ``lid``."""
-    return f"""CASE
-          WHEN {lid} LIKE 'spdx:gpl%' OR {lid} = 'gpl' THEN 'copyleft'
-          WHEN {lid} = 'proprietary' THEN 'nonfree'
-          WHEN {lid} = 'none' THEN 'unknown'
-          ELSE 'permissive'
-        END"""
-
+# License-cascade pieces of license_header_filter's Spark side (the
+# oracle spells the same cascade out in DuckDB SQL).
 
 def license_ft_col():
     """Spark: the prologue-bounded lowered text (needs doc_id, text)."""

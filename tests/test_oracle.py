@@ -46,12 +46,13 @@ FULL_SWEEP_ONLY = {
     "component_index_incremental", "dedup_cascade_funnel",
     "dedup_cluster_size_histogram", "dedup_method_agreement",
     "dedup_rate_by_quality_bucket", "dedup_source_crosstab",
-    "fuzzy_dedup_kept", "lsh_band_stats",
+    "domain_pagerank_prior", "fuzzy_dedup_kept", "lsh_band_stats",
     "lsh_scurve_calibration", "minhash_band_index_build",
     "minhash_bucketed_index_dedup", "minhash_dedup_kept",
     "minhash_incremental_dedup", "minhash_jaccard_estimate_error",
     "minhash_lsh_recall_eval", "minhash_signatures", "nb_language_classifier",
-    "pack_constant_length", "quality_classifier_auc", "simhash_band_stats",
+    "pack_constant_length", "pipeline_web_curation_v2",
+    "quality_classifier_auc", "simhash_band_stats",
     "streaming_band_index_screen", "streaming_late_data_audit",
     "takedown_cluster_propagation", "unigram_lm_encode",
     "winnow_candidate_pairs",

@@ -293,6 +293,33 @@ def test_lr_classifier_scoring_broadcasts_weights(q):
     I.assert_no_cartesian(df)
 
 
+def test_kmeans_assignment_joinless(spark, sf_dir):
+    from llm_data_pipeline_spark.operators.kmeans import (
+        assign_clusters,
+        quantize_micro,
+    )
+    from pyspark.sql import functions as F
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", quantize_micro(F.col("embedding")).alias("xq")
+    )
+    df = assign_clusters(emb, [[0] * 64, [1000] * 64])
+    plan = I.simple_plan(df)
+    # the model rides in the expression as literals — assignment must be a
+    # pure narrow map: no join, no shuffle
+    assert "Join" not in plan and I.shuffle_count(df) == 0
+
+
+def test_html_extraction_zero_shuffle_narrow_map(q):
+    """The HTML extractor must run inside the scan stage: no join, at
+    most the presentation sort's exchange."""
+    df = q("html_text_extraction")
+    I.assert_no_cartesian(df)
+    plan = I.simple_plan(df)
+    assert "Join" not in plan
+    assert I.shuffle_count(df) <= 1
+
+
 def test_taxonomy_tagging_zero_shuffle_narrow_map(q):
     df = q("keyword_taxonomy_tagging")
     I.assert_no_cartesian(df)
@@ -323,6 +350,14 @@ def test_prefix_dedup_block_key_join(q):
     I.assert_no_cartesian(df)
 
 
+def test_robots_rules_join_broadcasts(q):
+    """The per-domain rule table is domain-bounded — it must ride a
+    broadcast, never shuffle the corpus on the domain key."""
+    df = q("robots_txt_disallow_filter")
+    assert I.broadcast_join_count(df) >= 1
+    I.assert_no_cartesian(df)
+
+
 def test_dp_histogram_one_agg_no_join(q):
     """The DP mechanism is a narrow map over the released cells — one
     aggregation shuffle, no join anywhere."""
@@ -337,6 +372,14 @@ def test_kappa_single_docid_join(q):
     cartesian, no second corpus shuffle family."""
     df = q("scorer_agreement_kappa")
     I.assert_no_cartesian(df)
+
+
+def test_meta_robots_zero_shuffle_narrow_map(q):
+    df = q("html_meta_robots_filter")
+    I.assert_no_cartesian(df)
+    plan = I.simple_plan(df)
+    assert "Join" not in plan
+    assert I.shuffle_count(df) <= 1
 
 
 def test_window_reconstruct_one_groupby(q):
@@ -478,6 +521,44 @@ def test_band_index_compaction_pure_serve(q):
     I.assert_no_cartesian(df)
 
 
+def test_zorder_layout_pruning_metadata_only(q):
+    """Layout planning must never read document content: every documents
+    scan is pruned to (doc_id, lang, n_chars) — no text column — and the
+    whole plan is JVM-side integer arithmetic (no Python stages)."""
+    df = q("zorder_layout_pruning")
+    schemas = I.scan_read_schemas(df)
+    assert schemas, "no parquet scan found"
+    assert all("text" not in s for s in schemas)
+    plan = I.formatted_plan(df)
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_sink_compaction_plan_metadata_only(q):
+    """The compaction plan is a metadata decision: scans read only
+    (source, doc_id, n_chars) — the data bytes being compacted are never
+    read — and no Python stage exists."""
+    df = q("sink_compaction_plan")
+    schemas = I.scan_read_schemas(df)
+    assert schemas, "no parquet scan found"
+    assert all("text" not in s and "lang" not in s for s in schemas)
+    plan = I.formatted_plan(df)
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_bloom_skipping_relational_and_pruned(q):
+    """The file-skipping audit's membership test is RELATIONAL (position
+    containment join) — no bitmap UDF, no Arrow stage — and the corpus
+    scans read only doc_id (the filter build touches keys, never
+    content). The tiny probe side must broadcast."""
+    df = q("bloom_file_skipping_audit")
+    schemas = I.scan_read_schemas(df)
+    assert schemas, "no parquet scan found"
+    assert all("text" not in s and "lang" not in s for s in schemas)
+    plan = I.formatted_plan(df)
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert I.broadcast_join_count(df) >= 1
+
+
 def test_watermark_detect_narrow_map_single_scan(q):
     """The watermark detector is per-row JVM array arithmetic: ONE
     documents scan (bigram hashing via transform-over-sequence, no
@@ -490,6 +571,19 @@ def test_watermark_detect_narrow_map_single_scan(q):
     schemas = I.scan_read_schemas(df)
     assert len(schemas) == 1 and "text" in schemas[0]
     assert I.shuffle_count(df) <= 2  # partial/final agg pair
+
+
+def test_license_filter_single_scan_case_cascade(q):
+    """The license cascade is ONE JVM CASE over a single documents scan
+    (doc_id + text only): no Python stages, no join — the share window
+    runs over the 8-row census, after the aggregate."""
+    df = q("license_header_filter")
+    plan = I.formatted_plan(df)
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "Join" not in plan
+    schemas = I.scan_read_schemas(df)
+    assert len(schemas) == 1
+    assert "lang" not in schemas[0] and "source" not in schemas[0]
 
 
 def test_late_data_audit_batch_tail_pruned(q):
@@ -507,3 +601,18 @@ def test_late_data_audit_batch_tail_pruned(q):
         "props" not in s and "value" not in s and "user_id" not in s
         for s in schemas
     )
+
+
+def test_compaction_execute_audits_artifact_only(q):
+    """The compaction-execute audit reads back ONLY the compacted sink
+    (one scan of the rewritten files — the fragmented sink and the
+    documents table never appear in the served plan) with zero Python
+    stages; content grading runs against what the rewrite actually
+    wrote."""
+    df = q("sink_compaction_execute")
+    plan = I.formatted_plan(df)
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "compacted_sink_" in plan
+    assert "frag_sink_" not in plan
+    assert "documents.parquet" not in plan
+    I.assert_no_cartesian(df)
