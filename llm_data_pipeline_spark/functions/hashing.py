@@ -39,9 +39,5 @@ def portable_hash64(col: Column) -> Column:
     return F.shiftleft(hi, 32).bitwiseOR(lo)
 
 
-# DuckDB SQL fragments mirroring the two families ({s} = string expression).
+# DuckDB SQL fragment mirroring portable_hash60 ({s} = string expression).
 DUCKDB_HASH60 = "(('0x' || substr(md5({s}), 1, 15))::BIGINT)"
-DUCKDB_HASH64_UNSIGNED = (
-    "(('0x' || substr(md5({s}), 1, 8))::BIGINT::HUGEINT * 4294967296"
-    " + ('0x' || substr(md5({s}), 9, 8))::BIGINT)"
-)

@@ -65,9 +65,6 @@ def frequent_ngram_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy(F.desc("cnt"), "gram").limit(_HH_TOPK)
 
 
-_HH_INC_OFFSET = 650_000
-
-
 @query(
     "frequent_ngram_incremental",
     oracle=f"""
@@ -288,8 +285,6 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # cross-source duplication governance matrix
 # ---------------------------------------------------------------------------
-
-_MIRROR_OFFSET = 600_000
 
 
 @query(

@@ -516,14 +516,13 @@ _WM_PLANT_MOD = 23
 _WM_Z_MICRO = 4_000_000
 
 
-def wm_doc_sql(rel: str, extra: str = "") -> str:
-    """DuckDB: per-doc watermark stats over relation ``rel`` (needs
-    doc_id, text) — subquery yielding (doc_id, {extra}planted, t, g,
-    z_micro) with z_micro NULL when t = 0. The SAME green rule and
-    z-score the graded detector uses (one definition per engine)."""
-    ex = f"{extra}, " if extra else ""
+def wm_doc_sql() -> str:
+    """DuckDB: per-doc watermark stats over ``documents`` — subquery
+    yielding (doc_id, source, planted, t, g, z_micro) with z_micro NULL
+    when t = 0. The SAME green rule and z-score the graded detector uses
+    (one definition per engine)."""
     return f"""(
-      SELECT doc_id, {ex}planted,
+      SELECT doc_id, source, planted,
              CASE WHEN planted
                   THEN CAST(len(list_filter(is_green, g -> g)) AS BIGINT)
                   ELSE CAST(len(is_green) AS BIGINT) END AS t,
@@ -541,11 +540,11 @@ def wm_doc_sql(rel: str, extra: str = "") -> str:
                              ELSE len(is_green) END))) AS BIGINT)
                ELSE NULL END AS z_micro
       FROM (
-        SELECT doc_id, {ex}(doc_id % {_WM_PLANT_MOD} = 0) AS planted,
+        SELECT doc_id, source, (doc_id % {_WM_PLANT_MOD} = 0) AS planted,
                list_transform(generate_series(2, len(w)),
                  i -> ('0x' || substr(md5(w[i-1] || '|' || w[i]), 1, 15))
                       ::BIGINT % {_WM_MOD} = 0) AS is_green
-        FROM (SELECT doc_id, {ex}{_NORM_TOKS} AS w FROM {rel})
+        FROM (SELECT doc_id, source, {_NORM_TOKS} AS w FROM documents)
       )
     )"""
 
@@ -615,7 +614,7 @@ def watermark_doc_frame(docs):
     oracle=f"""
     WITH z AS (
       SELECT source, planted, t, g, z_micro
-      FROM {wm_doc_sql("documents", "source")} WHERE t > 0
+      FROM {wm_doc_sql()} WHERE t > 0
     )
     SELECT source, planted,
            CAST(count(*) AS BIGINT) AS n_docs,

@@ -119,12 +119,44 @@ def test_package_has_no_unused_imports():
     assert not problems, "\n".join(problems)
 
 
+def _assigned_names(target):
+    """Plain names bound by an assignment target, tuple targets unpacked."""
+    import ast
+
+    if isinstance(target, ast.Name):
+        return [target.id]
+    if isinstance(target, ast.Starred):
+        return _assigned_names(target.value)
+    if isinstance(target, (ast.Tuple, ast.List)):
+        return [n for t in target.elts for n in _assigned_names(t)]
+    return []
+
+
+def _top_level_names(tree):
+    """(name, line) of every top-level def, class and assigned name, graded
+    queries (``@query`` registers those by name) and dunders aside."""
+    import ast
+
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if not any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+                for d in node.decorator_list
+            ):
+                yield node.name, node.lineno
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for name in (n for t in targets for n in _assigned_names(t)):
+                if not (name.startswith("__") and name.endswith("__")):
+                    yield name, node.lineno
+
+
 def test_package_has_no_unreferenced_definitions():
-    """Dead-code guard: every top-level ``def``/``class`` in the package
-    (graded queries aside: ``@query`` registers those by name) is named, as
+    """Dead-code guard: every top-level ``def``/``class`` and module
+    constant in the package (graded queries and dunders aside) is named, as
     a whole word, on some line of the repo's Python other than a definition
-    line of that name. A deletion must not leave behind a helper whose
-    last caller went with it."""
+    line of that name. A deletion must not leave behind a helper or a
+    constant whose last user went with it."""
     import ast
     import pathlib
     import re
@@ -138,14 +170,9 @@ def test_package_has_no_unreferenced_definitions():
     ]
     texts = {p: p.read_text().splitlines() for p in sources}
     defs = [
-        (p, node.name, node.lineno)
+        (p, name, line)
         for p in sorted(pkg.rglob("*.py"))
-        for node in ast.parse(p.read_text()).body
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-        and not any(
-            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
-            for d in node.decorator_list
-        )
+        for name, line in _top_level_names(ast.parse(p.read_text()))
     ]
     def_lines = {}
     for p, name, line in defs:

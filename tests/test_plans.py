@@ -293,33 +293,6 @@ def test_lr_classifier_scoring_broadcasts_weights(q):
     I.assert_no_cartesian(df)
 
 
-def test_kmeans_assignment_joinless(spark, sf_dir):
-    from llm_data_pipeline_spark.operators.kmeans import (
-        assign_clusters,
-        quantize_micro,
-    )
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", quantize_micro(F.col("embedding")).alias("xq")
-    )
-    df = assign_clusters(emb, [[0] * 64, [1000] * 64])
-    plan = I.simple_plan(df)
-    # the model rides in the expression as literals — assignment must be a
-    # pure narrow map: no join, no shuffle
-    assert "Join" not in plan and I.shuffle_count(df) == 0
-
-
-def test_html_extraction_zero_shuffle_narrow_map(q):
-    """The HTML extractor must run inside the scan stage: no join, at
-    most the presentation sort's exchange."""
-    df = q("html_text_extraction")
-    I.assert_no_cartesian(df)
-    plan = I.simple_plan(df)
-    assert "Join" not in plan
-    assert I.shuffle_count(df) <= 1
-
-
 def test_taxonomy_tagging_zero_shuffle_narrow_map(q):
     df = q("keyword_taxonomy_tagging")
     I.assert_no_cartesian(df)
@@ -350,14 +323,6 @@ def test_prefix_dedup_block_key_join(q):
     I.assert_no_cartesian(df)
 
 
-def test_robots_rules_join_broadcasts(q):
-    """The per-domain rule table is domain-bounded — it must ride a
-    broadcast, never shuffle the corpus on the domain key."""
-    df = q("robots_txt_disallow_filter")
-    assert I.broadcast_join_count(df) >= 1
-    I.assert_no_cartesian(df)
-
-
 def test_dp_histogram_one_agg_no_join(q):
     """The DP mechanism is a narrow map over the released cells — one
     aggregation shuffle, no join anywhere."""
@@ -372,14 +337,6 @@ def test_kappa_single_docid_join(q):
     cartesian, no second corpus shuffle family."""
     df = q("scorer_agreement_kappa")
     I.assert_no_cartesian(df)
-
-
-def test_meta_robots_zero_shuffle_narrow_map(q):
-    df = q("html_meta_robots_filter")
-    I.assert_no_cartesian(df)
-    plan = I.simple_plan(df)
-    assert "Join" not in plan
-    assert I.shuffle_count(df) <= 1
 
 
 def test_window_reconstruct_one_groupby(q):
@@ -571,19 +528,6 @@ def test_watermark_detect_narrow_map_single_scan(q):
     schemas = I.scan_read_schemas(df)
     assert len(schemas) == 1 and "text" in schemas[0]
     assert I.shuffle_count(df) <= 2  # partial/final agg pair
-
-
-def test_license_filter_single_scan_case_cascade(q):
-    """The license cascade is ONE JVM CASE over a single documents scan
-    (doc_id + text only): no Python stages, no join — the share window
-    runs over the 8-row census, after the aggregate."""
-    df = q("license_header_filter")
-    plan = I.formatted_plan(df)
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "Join" not in plan
-    schemas = I.scan_read_schemas(df)
-    assert len(schemas) == 1
-    assert "lang" not in schemas[0] and "source" not in schemas[0]
 
 
 def test_late_data_audit_batch_tail_pruned(q):
