@@ -125,8 +125,6 @@ def _assigned_names(target):
 
     if isinstance(target, ast.Name):
         return [target.id]
-    if isinstance(target, ast.Starred):
-        return _assigned_names(target.value)
     if isinstance(target, (ast.Tuple, ast.List)):
         return [n for t in target.elts for n in _assigned_names(t)]
     return []
