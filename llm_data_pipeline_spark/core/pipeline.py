@@ -20,11 +20,14 @@ only. Differences from the reference worth knowing:
   operators/tokenizer.py); `train_tokenizer` persists the vocab as parquet
   (the "model"), `tokenize` broadcast-joins against it;
 - quality LID is the deterministic heuristic scorer (fastText is optional);
-- clustering is distributed LSH banding and pairing; its connected
-  components run as union-find on the driver when the edge list has at
-  most ``operators.lsh.DRIVER_MAX_ROWS`` rows, else as distributed label
-  propagation, and the keep set is a distributed anti-join
-  (SURVEY.md §4.2(1,3)).
+- clustering is size-gated (SURVEY.md §4.2(1,3)): when the signatures
+  have at most ``operators.lsh.DRIVER_MAX_ROWS`` band rows, one bounded
+  collect feeds the bucket cap, union-find and keep rule on the driver and
+  the removals leave through a broadcast anti-join; past the bound, LSH
+  banding, pairing, components and the keep set run distributed;
+- within one ``run_pipeline`` call each step reads its input with the
+  schema its producer wrote and takes its input count from the producer's
+  output count (``core.stage.StepOutput``).
 """
 
 from __future__ import annotations
@@ -36,12 +39,17 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from llm_data_pipeline_spark.core.config import PipelineConfig, step_output_dir
-from llm_data_pipeline_spark.core.stage import EXCEPTION_KEY, Stage
+from llm_data_pipeline_spark.core.stage import (
+    EXCEPTION_KEY,
+    OUTPUT_KEY,
+    Stage,
+    StepOutput,
+)
 from llm_data_pipeline_spark.functions.checkpoint import cut_lineage
 from llm_data_pipeline_spark.functions.localframe import local_df
 
 
-def _ingest(spark, df_in, config, base):
+def _ingest(spark, df_in, config, base, n_in):
     from llm_data_pipeline_spark.sources.wet import read_wet
 
     if config.wet_glob:
@@ -59,7 +67,7 @@ def _ingest(spark, df_in, config, base):
     raise ValueError("ingest needs config.wet_glob or config.input")
 
 
-def _clean(spark, df_in, config, base):
+def _clean(spark, df_in, config, base, n_in):
     from llm_data_pipeline_spark.operators.clean import score_documents, split_kept
 
     # localCheckpoint (not persist): kept is returned lazily, so an
@@ -74,7 +82,7 @@ def _clean(spark, df_in, config, base):
     return kept, {"dropped_count": n_drop}
 
 
-def _quality(spark, df_in, config, base):
+def _quality(spark, df_in, config, base, n_in):
     from llm_data_pipeline_spark.operators.quality import run_quality
 
     out = run_quality(
@@ -86,7 +94,7 @@ def _quality(spark, df_in, config, base):
     return out, {}
 
 
-def _pii(spark, df_in, config, base):
+def _pii(spark, df_in, config, base, n_in):
     from llm_data_pipeline_spark.operators.pii import run_pii
 
     out = run_pii(
@@ -98,7 +106,7 @@ def _pii(spark, df_in, config, base):
     return out, {}
 
 
-def _minhash(spark, df_in, config, base):
+def _minhash(spark, df_in, config, base, n_in):
     from llm_data_pipeline_spark.operators.minhash import add_minhash
 
     out = add_minhash(
@@ -110,28 +118,25 @@ def _minhash(spark, df_in, config, base):
     return out, {}
 
 
-def _clustering(spark, df_in, config, base):
+def _clustering(spark, df_in, config, base, n_in):
     from llm_data_pipeline_spark.operators.lsh import minhash_dedup
 
-    kept, comps = minhash_dedup(
+    dedup: dict = {}
+    kept, _ = minhash_dedup(
         df_in,
         rows_per_band=config.rows_per_band,
         bucket_cap=config.bucket_cap,
+        stats=dedup,
     )
-    total = df_in.count()
-    # localCheckpoint (not persist): kept is returned lazily for the stage
-    # write, so the cache could never be unpersisted here; GC-scoped blocks.
-    kept = kept.transform(cut_lineage, eager=False)
-    n_kept_sampleable = kept.count()
-    removed = total - n_kept_sampleable
+    removed = dedup["removed_count"]
     return kept, {
-        "total_count": total,
+        "total_count": n_in,
         "removed_count": removed,
-        "dedup_rate": round(removed / total, 6) if total else 0.0,
+        "dedup_rate": round(removed / n_in, 6) if n_in else 0.0,
     }
 
 
-def _train_tokenizer(spark, df_in, config, base):
+def _train_tokenizer(spark, df_in, config, base, n_in):
     from llm_data_pipeline_spark.operators.tokenizer import train_word_vocab
     from llm_data_pipeline_spark.sources.sinks import write_text_shards
 
@@ -159,7 +164,7 @@ def _train_tokenizer(spark, df_in, config, base):
     return vocab, {"tokenizer": "word"}
 
 
-def _tokenize(spark, df_in, config, base):
+def _tokenize(spark, df_in, config, base, n_in):
     vocab = spark.read.parquet(step_output_dir(base, "train_tokenizer"))
     if config.tokenizer == "bpe":
         from llm_data_pipeline_spark.operators.bpe import encode_bpe
@@ -182,7 +187,7 @@ def _tokenize(spark, df_in, config, base):
     return out, {}
 
 
-def _token_packing(spark, df_in, config, base):
+def _token_packing(spark, df_in, config, base, n_in):
     from llm_data_pipeline_spark.operators.packing import pack_chunks
 
     chunks = pack_chunks(
@@ -194,7 +199,7 @@ def _token_packing(spark, df_in, config, base):
     return chunks, {"seq_len": config.seq_len}
 
 
-def _export(spark, df_in, config, base):
+def _export(spark, df_in, config, base, n_in):
     from llm_data_pipeline_spark.sources.sinks import export_binary
 
     meta = export_binary(df_in, f"{base}/export", dtype=config.export_dtype)
@@ -252,9 +257,15 @@ def run_pipeline(
         with open(stats_path) as f:
             all_stats = json.load(f)
 
+    # outputs written in this call, by step: a consumer reads with the
+    # producer's schema and count instead of inferring and counting again
+    written: dict[str, StepOutput] = {}
     for stage in selected:
-        st = stage.run(spark, config)
+        st = stage.run(spark, config, written.get(stage.input_step))
         cause = st.pop(EXCEPTION_KEY, None)
+        output = st.pop(OUTPUT_KEY, None)
+        if output is not None:
+            written[stage.name] = output
         all_stats[stage.name] = st
         ordered = {
             name: all_stats[name]

@@ -16,10 +16,21 @@ are distributed DataFrame ops, so the whole dedup scales with the cluster:
   keep        : left-anti / left-outer join against the removal set
 
 The driver sees data only behind a size gate with a distributed fallback,
-both bounded by DRIVER_MAX_ROWS rows: connected_components' edge collect,
-and minhash_incremental_dedup_indexed's two probes of the persisted band
-index (the increment's band rows, then the base rows of the buckets they
-touch), after which the daily screen's DSU and keep rule run on the driver.
+each bounded by DRIVER_MAX_ROWS rows:
+
+- minhash_dedup's keyed band rows: at most DRIVER_MAX_ROWS of them are
+  collected once, and the bucket cap, union-find and keep rule run on the
+  driver (the chain above is its distributed fallback);
+- connected_components' edge collect;
+- minhash_incremental_dedup_indexed's two probes of the persisted band
+  index (the increment's band rows, then the base rows of the buckets
+  they touch);
+- operators.packing.add_global_offsets' (order key, count) rows.
+
+Both dedup paths share one driver keep rule (:func:`_driver_keep`), and
+every band-row collect has the one bounded shape of :func:`bounded_rows`.
+The gates read DRIVER_MAX_ROWS at call time, so tests force the
+distributed side by patching it.
 """
 
 from __future__ import annotations
@@ -36,8 +47,9 @@ from llm_data_pipeline_spark.functions.localframe import local_df
 
 DEFAULT_ROWS_PER_BAND = 4
 DEFAULT_BUCKET_CAP = 500
-# Row bound of every driver-side path: connected_components' edge collect
-# and the indexed screen's two probes.
+# Row bound of every driver-side path: minhash_dedup's band rows,
+# connected_components' edge collect, the indexed screen's two probes and
+# packing's offset keys.
 DRIVER_MAX_ROWS = 1_000_000
 
 
@@ -450,6 +462,79 @@ def _keyed_band_rows(
     )
 
 
+def bounded_rows(df: DataFrame) -> DataFrame:
+    """``df`` cut to DRIVER_MAX_ROWS + 1 rows in one partition, every row
+    carrying the cut's row count ``_bound_n``. Past the bound only the
+    first row is left, so a large frame collects one row, not
+    DRIVER_MAX_ROWS + 1 (:func:`fits_driver` reads the collected count).
+    One partition lets the limit take its rows in one task."""
+    return (
+        df.coalesce(1)
+        .limit(DRIVER_MAX_ROWS + 1)
+        .withColumn("_bound_n", F.count("*").over(Window.partitionBy()))
+        .where(
+            (F.col("_bound_n") <= DRIVER_MAX_ROWS)
+            | (F.monotonically_increasing_id() == 0)
+        )
+    )
+
+
+def fits_driver(rows: pa.Table) -> bool:
+    """Whether a collected :func:`bounded_rows` frame is within the bound."""
+    return (
+        rows.num_rows == 0
+        or rows.column("_bound_n")[0].as_py() <= DRIVER_MAX_ROWS
+    )
+
+
+def _driver_keep(
+    rows: pa.Table, base_bhs: list | tuple = (), base_docs: list | tuple = ()
+) -> tuple[dict, list]:
+    """Union-find and keep rule of both driver dedup paths.
+
+    ``rows`` are the in-cap (bh, doc_id, ts, length) band rows of the docs
+    being deduped; ``base_bhs``/``base_docs`` are the (bh, doc_id) rows of
+    an already-deduped base in those buckets (none for minhash_dedup). A
+    star around one member of each bucket spans the same component as the
+    bucket's pairs, in O(members) edges. A component holding a base doc
+    removes all of its ``rows`` docs (the base is already deduped, so its
+    member is canonical); any other component keeps its (ts, length,
+    doc_id)-desc canonical, with NULLs ranked last as in Spark. Returns ({doc: component
+    root}, removed doc ids)."""
+    bhs, docs, ts, length = (
+        rows.column(c).to_pylist() for c in ("bh", "doc_id", "ts", "length")
+    )
+    hub: dict = {}
+    edges = [(hub.setdefault(bh, d), d) for bh, d in zip(bhs, docs)]
+    edges += [(hub[bh], d) for bh, d in zip(base_bhs, base_docs)]
+    root = _union_find(edges)
+
+    rank = {
+        d: (t is not None, t, ln is not None, ln, d)
+        for d, t, ln in zip(docs, ts, length)
+    }
+    with_base = {root[d] for d in base_docs}
+    best: dict = {}
+    for d, k in rank.items():
+        c = root[d]
+        if c not in with_base:
+            if c not in best or k > rank[best[c]]:
+                best[c] = d
+    return root, [d for d in rank if best.get(root[d]) != d]
+
+
+def _removal_frame(df: DataFrame, removed: list, id_col: str) -> DataFrame:
+    """The removed ids as one Arrow-built ``_rm_doc_id`` frame of ``df``'s
+    id type. One frame ships as one Arrow batch: a flat ~0.45 s from 10 to
+    2,000 ids, against 1.1-1.5 s for ``isin`` and 0.57 s for ``local_df``
+    at 2,000 ids (40-document increments, local[4])."""
+    id_type = df.schema[id_col].dataType
+    return df.sparkSession.createDataFrame(
+        pd.DataFrame({"_rm_doc_id": removed}, dtype=object),
+        StructType([StructField("_rm_doc_id", id_type, False)]),
+    )
+
+
 def band_index_rows(
     df_sig: DataFrame,
     rows_per_band: int = DEFAULT_ROWS_PER_BAND,
@@ -554,35 +639,22 @@ def minhash_incremental_dedup_indexed(
       calls building the expression, and a SQL ``IN`` string was no faster
       end to end. So every probe is a join whose small side is derived in
       Spark from ``new_sig``, and the removal set travels as one Arrow
-      frame (a flat ~0.45 s from 10 to 2,000 ids, against 1.1-1.5 s for
-      ``isin`` and 0.57 s for ``local_df`` at 2,000 ids).
+      frame (:func:`_removal_frame`).
     - Output layout: a map-side result writes one file per input split.
       The distributed path's final shuffle join is coalesced to one
       partition by AQE at this size, and without the ``coalesce(1)`` the
       driver path raised perfbench's ``write_amp`` from ~4.55 to ~5.06."""
     bn = _keyed_band_rows(new_sig, rows_per_band, id_col)
     counts = index_counts.select("bh", "base_n")
-    # Q1. The increment side is bounded before the join, in one partition,
-    # so the limit takes its rows in one task; the counts side of the join
-    # stays parallel. Every row carries the bounded row count, and past the
-    # bound only the first row comes back, so a large increment collects
-    # one row, not DRIVER_MAX_ROWS + 1. The lazy lineage cut is
+    # Q1. The increment side is bounded before the join (bounded_rows), so
+    # the counts side of the join stays parallel. The lazy lineage cut is
     # materialized by Q1's own job, and Q2's probe reads it instead of
     # broadcasting the counts table again.
-    bounded = (
-        bn.coalesce(1)
-        .limit(DRIVER_MAX_ROWS + 1)
-        .withColumn("_n", F.count("*").over(Window.partitionBy()))
-        .where(
-            (F.col("_n") <= DRIVER_MAX_ROWS)
-            | (F.monotonically_increasing_id() == 0)
-        )
-    )
-    probed = bounded.join(counts, "bh", "left").transform(
+    probed = bounded_rows(bn).join(counts, "bh", "left").transform(
         cut_lineage, eager=False
     )
     inc = probed.toArrow()
-    if inc.num_rows == 0 or inc.column("_n")[0].as_py() <= DRIVER_MAX_ROWS:
+    if fits_driver(inc):
         out = _driver_screen(index_bands, new_sig, probed, inc, bucket_cap, id_col)
         if out is not None:
             return out
@@ -628,7 +700,7 @@ def _driver_screen(
     id_col: str,
 ) -> DataFrame | None:
     """The driver half of minhash_incremental_dedup_indexed's size gate.
-    ``inc`` is Q1's collected (bh, doc_id, ts, length, _n, base_n) Arrow
+    ``inc`` is Q1's collected (bh, doc_id, ts, length, _bound_n, base_n) Arrow
     table, and ``probed`` the checkpointed frame it came from. The cap is
     decided in Arrow, and only the rows of in-cap buckets become Python
     lists: per-field access on Row objects cost more than the Spark jobs.
@@ -641,9 +713,6 @@ def _driver_screen(
         pc.and_(pc.greater_equal(n, 2), pc.less_equal(n, bucket_cap))
     )["bh"]
     rows = inc.filter(pc.is_in(inc["bh"], value_set=in_cap))
-    bhs, docs, ts, length = (
-        rows.column(c).to_pylist() for c in ("bh", "doc_id", "ts", "length")
-    )
     base_bhs, base_docs = [], []
     if pc.sum(rows["base_n"]).as_py():
         q2_rows = pc.sum(base_n.filter(pc.less_equal(base_n, bucket_cap)))
@@ -662,37 +731,11 @@ def _driver_screen(
             base.column(c).to_pylist() for c in ("bh", "doc_id")
         )
 
-    # A star around one increment member spans the same component as the
-    # bucket's new x base and new x new edges, in O(members) edges.
-    hub: dict = {}
-    edges = [(hub.setdefault(bh, d), d) for bh, d in zip(bhs, docs)]
-    edges += [(hub[bh], d) for bh, d in zip(base_bhs, base_docs)]
-    root = _union_find(edges)
-
-    # keep rule of _incremental_keep: drop every increment member of a
-    # component holding a base doc; an all-new component keeps its
-    # (ts, length, doc_id)-desc canonical (NULLs rank last, as in Spark)
-    rank = {
-        d: (t is not None, t, ln is not None, ln, d)
-        for d, t, ln in zip(docs, ts, length)
-    }
-    with_base = {root[d] for d in base_docs}
-    best: dict = {}
-    for d, k in rank.items():
-        c = root[d]
-        if c not in with_base:
-            if c not in best or k > rank[best[c]]:
-                best[c] = d
-    removed = [d for d in rank if best.get(root[d]) != d]
-
-    id_type = new_sig.schema[id_col].dataType
-    removals = new_sig.sparkSession.createDataFrame(
-        pd.DataFrame({"_rm_doc_id": removed}, dtype=object),
-        StructType([StructField("_rm_doc_id", id_type, False)]),
-    )
+    # the keep rule of _incremental_keep, on the driver
+    _, removed = _driver_keep(rows, base_bhs, base_docs)
     return (
         new_sig.join(
-            F.broadcast(removals),
+            F.broadcast(_removal_frame(new_sig, removed, id_col)),
             F.col(id_col) == F.col("_rm_doc_id"),
             "left_outer",
         )
@@ -767,13 +810,58 @@ def minhash_dedup(
     rows_per_band: int = DEFAULT_ROWS_PER_BAND,
     bucket_cap: int = DEFAULT_BUCKET_CAP,
     id_col: str = "doc_id",
+    stats: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Full LSH dedup over a signature-bearing frame.
 
-    Returns (kept_df, components_df). kept_df = df_sig minus non-canonical
-    duplicates (left-anti join against the removal set — fully distributed,
-    no driver keep-set).
+    Returns (kept_df, components_df): ``df_sig`` minus the non-canonical
+    duplicates, and (doc_id, component) for every doc in a candidate
+    bucket. With ``stats``, records ``removed_count`` in it.
+
+    Size gate. When ``df_sig`` has at most DRIVER_MAX_ROWS band rows, they
+    are collected once (the keyed md5 rows of the band index, bounded by
+    :func:`bounded_rows`), and the driver applies the cap
+    2 <= n <= ``bucket_cap`` in Arrow, then :func:`_driver_keep` (the daily
+    screen's union-find and keep rule, with no base rows). The removals
+    leave ``df_sig`` through a broadcast left-anti join with one Arrow
+    frame, and the components are a local frame of the union-find roots;
+    removed_count is Σ(component size − 1). The distributed chain cost the
+    pipeline's clustering step 23 Spark jobs on perfbench's 80-doc corpus,
+    most of them AQE query stages; tests/test_pipeline_e2e.py holds this
+    path to at most 6.
+
+    Past the bound the same answers come from the distributed chain:
+    candidate_pairs, connected_components, canonical_per_component and a
+    left-anti join against the removal set, which is counted in one job
+    when ``stats`` is given.
     """
+    rows = bounded_rows(_keyed_band_rows(df_sig, rows_per_band, id_col)).toArrow()
+    if fits_driver(rows):
+        sizes = rows.group_by("bh").aggregate([("bh", "count")])
+        n = sizes["bh_count"]
+        in_cap = sizes.filter(
+            pc.and_(pc.greater_equal(n, 2), pc.less_equal(n, bucket_cap))
+        )["bh"]
+        root, removed = _driver_keep(
+            rows.filter(pc.is_in(rows["bh"], value_set=in_cap))
+        )
+        if stats is not None:
+            stats["removed_count"] = len(removed)
+        id_type = dict(df_sig.dtypes)[id_col]
+        comps = local_df(
+            df_sig.sparkSession,
+            list(root.items()),
+            schema=f"doc_id {id_type}, component {id_type}",
+        )
+        # one partition, as AQE leaves the distributed path's shuffle join
+        # at this size: a map-side join writes one file per input split
+        kept = df_sig.join(
+            F.broadcast(_removal_frame(df_sig, removed, id_col)),
+            F.col(id_col) == F.col("_rm_doc_id"),
+            "left_anti",
+        ).coalesce(1)
+        return kept, comps
+
     # Stage the band rows: candidate_pairs consumes them twice (the
     # count-prefilter pass and the collect_list pass), and without a
     # boundary each pass re-runs the signature UDF upstream. Band rows are
@@ -811,6 +899,10 @@ def minhash_dedup(
         .where(F.col("doc_id") != F.col("canonical_doc_id"))
         .select(F.col("doc_id").alias("_rm_doc_id"))
     )
+    if stats is not None:
+        # the lazy cut is materialized by the count and read by the join
+        removals = removals.transform(cut_lineage, eager=False)
+        stats["removed_count"] = removals.count()
     kept = df_sig.join(
         removals, F.col(id_col) == F.col("_rm_doc_id"), "left_anti"
     )

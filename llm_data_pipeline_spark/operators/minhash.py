@@ -20,11 +20,18 @@ normalize re-ran ``lower`` + ``regexp_replace`` over the whole document
 once per shingle position (O(len²) a document). The staged column is
 referenced several times by the shingling expression, so CollapseProject
 keeps the projection boundary and each document is normalized once
-(guarded by tests/test_plans.py). What remains super-linear is
-``substring``, which is O(position) on UTF-8: on 4 vCPU the signer ran at
-377k chars/s on 1.8k-char documents and 177k chars/s on 6k-char documents
-(41k and 12k chars/s with the inline normalize). A linear formulation is
-a separate item.
+(guarded by tests/test_plans.py). Shingles are taken from the normalized
+text's code points, staged the same way as ``_chars = split(_norm, "")``:
+each shingle is ``array_join(slice(_chars, i + 1, n), "")``, O(n) at any
+position. The ``substring`` this replaced is O(position) on UTF-8, so its
+per-char cost grew with document length: in a micro-benchmark (4 vCPU,
+random-word documents, best of 3, signature UDF included) ``substring``
+signed 498k chars/s on 1.8k-char documents and 232k chars/s on 6k-char
+documents, the code-point array 901k and 1.12M chars/s, with identical
+shingle sets. Spark's ``split(s, "")`` is code-point aware, so a non-BMP
+character is one element, as it is one character of ``length`` (golden
+signatures in tests/test_dedup.py pin non-BMP, CJK and combining-mark
+text).
 
 Not bit-compatible with the reference (Spark's xxhash64 uses seed 42 over
 UTF-8 bytes; the reference hashes with python-xxhash seed 0) — parity is
@@ -63,18 +70,21 @@ def _perm_params(k: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def shingles(norm: Column, ngram: int = DEFAULT_NGRAM) -> Column:
+def shingles(
+    norm: Column, chars: Column, ngram: int = DEFAULT_NGRAM
+) -> Column:
     """array<string> of the distinct char n-gram shingles of ``norm``.
 
-    ``norm`` must reference an already-normalized, staged column (see
-    :func:`add_shingles`), not an expression: it is read inside the
-    ``transform`` lambda, once per shingle position. Text shorter than
-    ``ngram`` is its own single shingle."""
+    ``norm`` and ``chars`` (its code points, ``split(norm, "")``) must
+    reference already-staged columns (see :func:`add_shingles`), not
+    expressions: ``chars`` is read inside the ``transform`` lambda, once
+    per shingle position. Text shorter than ``ngram`` is its own single
+    shingle."""
     return F.when(F.length(norm) < ngram, F.array(norm)).otherwise(
         F.array_distinct(
             F.transform(
-                F.sequence(F.lit(0), F.length(norm) - ngram),
-                lambda i: F.substring(norm, i + 1, F.lit(ngram)),
+                F.sequence(F.lit(0), F.size(chars) - ngram),
+                lambda i: F.array_join(F.slice(chars, i + 1, ngram), ""),
             )
         )
     )
@@ -85,15 +95,17 @@ def add_shingles(
 ) -> DataFrame:
     """Append ``length`` (chars of the raw text), ``_empty`` (raw text is
     blank after trimming spaces) and ``_sh`` (:func:`shingles` of the
-    normalized text). The normalized text is staged as ``_norm`` and
-    dropped again, so the output schema is the input's plus those three."""
+    normalized text). The normalized text and its code points are staged
+    as ``_norm`` and ``_chars`` and dropped again, so the output schema is
+    the input's plus those three."""
     text = F.coalesce(F.col(text_col), F.lit(""))
     return (
         df.withColumn("length", F.length(text))
         .withColumn("_empty", F.length(F.trim(text)) == 0)
         .withColumn("_norm", norm_ws(text))
-        .withColumn("_sh", shingles(F.col("_norm"), ngram))
-        .drop("_norm")
+        .withColumn("_chars", F.split("_norm", ""))
+        .withColumn("_sh", shingles(F.col("_norm"), F.col("_chars"), ngram))
+        .drop("_norm", "_chars")
     )
 
 

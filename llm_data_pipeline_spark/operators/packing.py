@@ -26,11 +26,15 @@ Scale notes (100 TB):
 
 - The prefix sum has two physical strategies: ``window`` (a global-order
   running sum — simple, but the running sum funnels (doc_id, count) pairs
-  through one partition) and ``partitioned`` (default): range-partition by
-  the order key, per-partition cumsum via mapInPandas, then add per-partition
-  bases computed from a driver-side aggregate of *n_partitions* rows. Only
-  8-byte counts flow through the narrow stages; the heavy token arrays never
-  leave their partitions until the final chunk shuffle.
+  through one partition) and ``partitioned`` (default). The partitioned
+  strategy is size-gated: up to ``lsh.DRIVER_MAX_ROWS`` documents with
+  unique order keys, the (key, count) pairs are collected once and summed
+  on the driver, and the offsets rejoin through one broadcast frame.
+  Otherwise it range-partitions by the order key, runs a per-partition
+  cumsum via mapInPandas, then adds per-partition bases computed from a
+  driver-side aggregate of *n_partitions* rows. Only 8-byte counts flow
+  through the narrow stages; the heavy token arrays never leave their
+  partitions until the final chunk shuffle.
 - The final shuffle is keyed by chunk_id (total_tokens / seq_len keys),
   uniformly distributed by construction — no skew.
 - Everything after tokenization is native Column expressions; no Python in
@@ -39,9 +43,14 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
+from llm_data_pipeline_spark.operators import lsh
 from llm_data_pipeline_spark.operators.tokenizer import EOS_ID
 from llm_data_pipeline_spark.functions.checkpoint import cut_lineage
 
@@ -61,7 +70,6 @@ def add_global_offsets(
     count_col: str,
     order_cols: list[str],
     strategy: str = "partitioned",
-    num_partitions: int | None = None,
     ordinal_col: str | None = None,
     return_totals: bool = False,
 ) -> DataFrame:
@@ -78,9 +86,24 @@ def add_global_offsets(
 
     strategy='window': single global-order running-sum window (correct at
     any size, bottlenecked by the one-partition window at extreme scale).
-    strategy='partitioned': distributed two-pass prefix sum — range
-    partition on the order key, cumsum within partitions, add broadcast
-    per-partition bases. Identical output, no single-partition stage.
+    strategy='partitioned': identical output, no single-partition stage
+    past the driver gate.
+
+    - At most ``lsh.DRIVER_MAX_ROWS`` rows: the (order key, count) rows
+      are collected once as Arrow (bounded by ``lsh.bounded_rows``),
+      sorted with NULLs first as Spark's ascending sort puts them, and the
+      exclusive cumsum, the ordinals and the totals are taken in that one
+      pass. ``start`` and the ordinal rejoin through a broadcast join with
+      one Arrow-built frame, which needs unique order keys (pack_chunks'
+      ``doc_id`` is unique after encoding): duplicate keys fall back.
+      Arrow's order equals Spark's for the integral and string keys the
+      packer uses (not for NaN or -0.0).
+      This spares the range path's sample job, its AQE stages and its
+      lineage cut (11 Spark jobs for the pipeline's token_packing step on
+      perfbench's 80-doc corpus).
+    - Otherwise a distributed two-pass prefix sum: range partition on the
+      order key, cumsum within partitions, add broadcast per-partition
+      bases.
     """
     if strategy == "window":
         from pyspark.sql.window import Window
@@ -98,8 +121,11 @@ def add_global_offsets(
         return (out, None) if return_totals else out
 
     spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = max(2, spark.sparkContext.defaultParallelism)
+    driver = _driver_offsets(df, count_col, order_cols, ordinal_col)
+    if driver is not None:
+        out, totals = driver
+        return (out, totals) if return_totals else out
+    num_partitions = max(2, spark.sparkContext.defaultParallelism)
     parted = (
         df.repartitionByRange(num_partitions, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
@@ -135,8 +161,6 @@ def add_global_offsets(
     ]
 
     def _cumsum(batches):
-        import numpy as np
-
         base = None
         running_t, running_n = 0, 0
         for pdf in batches:
@@ -158,6 +182,40 @@ def add_global_offsets(
     # (it is a narrow per-partition transform).
     out = parted.mapInPandas(_cumsum, out_schema)
     return (out, (acc_t, acc_n)) if return_totals else out
+
+
+def _driver_offsets(
+    df: DataFrame,
+    count_col: str,
+    order_cols: list[str],
+    ordinal_col: str | None,
+) -> tuple[DataFrame, tuple[int, int]] | None:
+    """add_global_offsets' driver path: ``(df + start [+ ordinal], (grand
+    total, n rows))``, or None when ``df`` is over the driver bound or its
+    order keys are not unique."""
+    rows = lsh.bounded_rows(df.select(*order_cols, count_col)).toArrow()
+    if not lsh.fits_driver(rows):
+        return None
+    if rows.group_by(order_cols).aggregate([]).num_rows != rows.num_rows:
+        return None
+    rows = rows.sort_by(
+        [(c, "ascending") for c in order_cols], null_placement="at_start"
+    )
+    counts = pc.fill_null(rows[count_col], 0).to_numpy().astype(np.int64)
+    csum = np.cumsum(counts)
+    keys = {f"_key{i}": c for i, c in enumerate(order_cols)}
+    cols = {k: rows[c] for k, c in keys.items()}
+    fields = [StructField(k, df.schema[c].dataType) for k, c in keys.items()]
+    cols["start"] = pa.array(csum - counts)
+    fields.append(StructField("start", LongType()))
+    if ordinal_col:
+        cols[ordinal_col] = pa.array(np.arange(rows.num_rows, dtype=np.int64))
+        fields.append(StructField(ordinal_col, LongType()))
+    offsets = df.sparkSession.createDataFrame(pa.table(cols), StructType(fields))
+    on = [df[c].eqNullSafe(offsets[k]) for k, c in keys.items()]
+    out = df.join(F.broadcast(offsets), on).drop(*keys)
+    total = int(csum[-1]) if rows.num_rows else 0
+    return out, (total, rows.num_rows)
 
 
 def pack_chunks(

@@ -929,15 +929,21 @@ def minhash_jaccard_estimate_error(spark: SparkSession, sf_dir: str):
         (F.length(F.trim(F.col("t_u"))) > 0)
         & (F.length(F.trim(F.col("t_v"))) > 0)
     )
-    # normalized texts staged as columns: shingles() reads its input once
-    # per shingle position
+    # normalized texts and their code points staged as columns: shingles()
+    # reads the code points once per shingle position
     normed = pair.select(
         "u", norm_ws(F.col("t_u")).alias("n_u"), norm_ws(F.col("t_v")).alias("n_v")
+    ).select(
+        "u",
+        "n_u",
+        "n_v",
+        F.split("n_u", "").alias("c_u"),
+        F.split("n_v", "").alias("c_v"),
     )
     staged = normed.select(
         "u",
-        shingles(F.col("n_u")).alias("sh_u"),
-        shingles(F.col("n_v")).alias("sh_v"),
+        shingles(F.col("n_u"), F.col("c_u")).alias("sh_u"),
+        shingles(F.col("n_v"), F.col("c_v")).alias("sh_v"),
     ).transform(cut_lineage, eager=False)
     sig_udf = make_signature_udf()
     est = staged.select(

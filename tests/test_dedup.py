@@ -114,6 +114,79 @@ def test_minhash_dedup_keeps_canonical(spark):
     assert kept_ids & {5, 7} == {7}
 
 
+def _bucket_case_signatures(spark):
+    """8-value signatures (two 4-row bands) with planted buckets, for
+    bucket_cap=3: docs 1-3 fill a band-0 bucket at exactly the cap; 10-13
+    share a band-0 bucket one over it (dropped), and only 10-11 meet again
+    in band 1; 20/21 tie on (ts, length); 30 has a NULL ts; 40/41 are the
+    empty and null texts, signed by add_minhash to the shared zero
+    signature; 50 is in no bucket; 60-62 chain over both bands."""
+
+    def sig(doc, b0=None, b1=None):
+        b0 = doc * 1000 if b0 is None else b0
+        b1 = doc * 1000 + 1 if b1 is None else b1
+        return [b0] * 4 + [b1] * 4
+
+    planted = [
+        (1, 1, 10, sig(1, b0=100)),
+        (2, 1, 20, sig(2, b0=100)),
+        (3, 1, 30, sig(3, b0=100)),
+        (10, 1, 10, sig(10, b0=200, b1=201)),
+        (11, 1, 10, sig(11, b0=200, b1=201)),
+        (12, 1, 10, sig(12, b0=200)),
+        (13, 1, 10, sig(13, b0=200)),
+        (20, 7, 50, sig(20, b0=300)),
+        (21, 7, 50, sig(21, b0=300)),
+        (30, None, 100, sig(30, b0=400)),
+        (31, 5, 1, sig(31, b0=400)),
+        (50, 1, 10, sig(50)),
+        (60, 3, 5, sig(60, b0=500)),
+        (61, 2, 5, sig(61, b0=500, b1=501)),
+        (62, 1, 5, sig(62, b1=501)),
+    ]
+    schema = "doc_id long, ts long, length int, signature array<long>"
+    empty = add_minhash(
+        spark.createDataFrame([(40, 1, ""), (41, 1, None)], "doc_id long, ts long, text string"),
+        k=8,
+    ).select("doc_id", "ts", "length", "signature")
+    return spark.createDataFrame(planted, schema).unionByName(empty)
+
+
+def test_minhash_dedup_driver_matches_distributed(spark, monkeypatch):
+    """minhash_dedup's driver path (one bounded band-row collect, Arrow
+    cap, union-find, keep rule) and its distributed twin give the same
+    kept ids, components and removed_count, with and without ``ts``."""
+    from llm_data_pipeline_spark.operators import lsh
+
+    sig = _bucket_case_signatures(spark)
+    frames = {"ts": sig, "no_ts": sig.drop("ts")}
+
+    def run(frame):
+        stats: dict = {}
+        kept, comps = minhash_dedup(
+            frame, rows_per_band=4, bucket_cap=3, stats=stats
+        )
+        return (
+            sorted(r.doc_id for r in kept.select("doc_id").collect()),
+            sorted(map(tuple, comps.collect())),
+            stats["removed_count"],
+        )
+
+    driver = {name: run(f) for name, f in frames.items()}
+    monkeypatch.setattr(lsh, "DRIVER_MAX_ROWS", 0)
+    distributed = {name: run(f) for name, f in frames.items()}
+    assert driver == distributed
+    kept, comps, removed = driver["ts"]
+    assert kept == [3, 11, 12, 13, 21, 31, 41, 50, 60]
+    assert removed == 8
+    assert dict(comps) == {
+        1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 30: 30, 31: 30,
+        40: 40, 41: 40, 60: 60, 61: 60, 62: 60,
+    }
+    # without ts, length decides: the NULL-ts doc 30 is now the longest
+    assert {30, 62} <= set(driver["no_ts"][0])
+
+
 def test_ngram_jaccard(spark):
     pairs = {
         (r.u, r.v): r.jaccard
@@ -198,8 +271,8 @@ def test_ngram_jaccard_positional_filter_lossless(spark):
 # input below, one digest per hash family. Any change to normalization,
 # shingling, hashing, the permutations or the empty-text rule moves them.
 GOLDEN_SIGNATURE_SHA1 = {
-    "xxhash64": "f0030ab3e80fa5128f4b3195e222e49136d96190",
-    "portable_hash60": "bb10e24fb30c247af2cd4764b840e11846cb6843",
+    "xxhash64": "c05f7b0dff1d55a0ed7c311522995e55b930158f",
+    "portable_hash60": "5fcc4952ebd3fbc451f43589bba0e7bcba39576b",
 }
 
 
@@ -207,8 +280,9 @@ GOLDEN_SIGNATURE_SHA1 = {
 def test_minhash_golden_signatures(spark, sf_dir, family):
     """(doc_id, length, signature) of the first 100 documents plus edge
     texts — empty, blank, null, sub-ngram, tab/newline-only (not empty:
-    it signs the single shingle "") and ragged whitespace — are pinned
-    bit for bit for both hash families."""
+    it signs the single shingle ""), ragged whitespace, non-BMP, CJK,
+    combining marks and exactly-ngram — are pinned bit for bit for both
+    hash families."""
     import hashlib
 
     from llm_data_pipeline_spark.functions.hashing import portable_hash60
@@ -230,6 +304,13 @@ def test_minhash_golden_signatures(spark, sf_dir, family):
             Row(doc_id=900005, text="abcd"),
             Row(doc_id=900006, text="\t\n"),
             Row(doc_id=900007, text="  A  b C "),
+            # non-BMP: the emoji is one code point (two UTF-16 units)
+            Row(doc_id=900008, text="a\U0001F600b\U0001F600c\U0001F600d"),
+            Row(doc_id=900009, text="\u6570\u636e\u7ba1\u9053\u53bb\u91cd"),
+            # combining marks stay separate code points
+            Row(doc_id=900010, text="cafe\u0301 nai\u0308ve re\u0301sume\u0301"),
+            # exactly ngram (5) code points: one shingle, not the short rule
+            Row(doc_id=900011, text="xy\U0001F600z\u4e2d"),
         ],
         "doc_id bigint, text string",
     )
@@ -238,7 +319,7 @@ def test_minhash_golden_signatures(spark, sf_dir, family):
     rows = sorted(
         (r.doc_id, r.length, tuple(r.signature)) for r in signed.collect()
     )
-    assert len(rows) == 107
+    assert len(rows) == 111
     h = hashlib.sha1()
     for doc_id, length, sig in rows:
         h.update(f"{doc_id}\t{length}\t{','.join(map(str, sig))}\n".encode())

@@ -157,6 +157,35 @@ def test_prefix_sum_strategies_agree(spark):
     assert a[0] == (0, 0)
 
 
+def test_global_offsets_driver_matches_range(spark, monkeypatch):
+    """add_global_offsets' driver path (one bounded collect, driver cumsum,
+    broadcast join) gives the range path's rows and totals, NULL key
+    first; a duplicate key falls back to the range path."""
+    from llm_data_pipeline_spark.operators import lsh, packing
+
+    df = spark.createDataFrame(
+        [(None if i == 7 else i, (i * 37) % 11 + 1, f"p{i}") for i in range(300)],
+        "k: long, n: long, payload: string",
+    )
+    dup = df.unionByName(df.where("k = 3"))
+    assert packing._driver_offsets(df, "n", ["k"], "ord") is not None
+    assert packing._driver_offsets(dup, "n", ["k"], "ord") is None
+
+    def run(frame):
+        out, totals = add_global_offsets(
+            frame, "n", ["k"], ordinal_col="ord", return_totals=True
+        )
+        return out.columns, sorted(map(tuple, out.collect()), key=repr), totals
+
+    driver = [run(df), run(dup)]
+    monkeypatch.setattr(lsh, "DRIVER_MAX_ROWS", 0)
+    assert packing._driver_offsets(df, "n", ["k"], "ord") is None
+    assert driver == [run(df), run(dup)]
+    rows = {r[0]: r for r in driver[0][1]}
+    assert rows[None][3:] == (0, 0)  # NULL sorts first, as in Spark
+    assert rows[0][3:] == (rows[None][1], 1)
+
+
 def test_encode_join_and_udf_agree(spark):
     texts = [
         (0, "the cat sat on the mat, the mat!"),

@@ -7,18 +7,30 @@ pipeline_stats.json, and a final.bin; resume-from must continue from disk.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
+import sys
+import uuid
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame
 
 from llm_data_pipeline_spark.core import ALL_STEPS, PipelineConfig, run_pipeline
 from llm_data_pipeline_spark.core.config import step_output_dir
+from llm_data_pipeline_spark.core.stage import Stage
 
 
 @pytest.fixture(scope="module")
-def pipeline_run(spark, sf_dir, tmp_path_factory):
+def step_jobs():
+    """Filled by pipeline_run: per step, the Spark jobs it launched and
+    whether Stage.run itself called count() on its input."""
+    return {"jobs": {}, "counted": set()}
+
+
+@pytest.fixture(scope="module")
+def pipeline_run(spark, sf_dir, tmp_path_factory, step_jobs):
     base = str(tmp_path_factory.mktemp("pipe"))
     config = PipelineConfig(
         output_base=base,
@@ -33,7 +45,32 @@ def pipeline_run(spark, sf_dir, tmp_path_factory):
         # confidence is low, so drop the gate to keep the DAG non-degenerate
         lang_threshold=0.0,
     )
-    stats = run_pipeline(spark, config)
+    sc = spark.sparkContext
+    run_id = uuid.uuid4().hex
+    real_run, real_count = Stage.run, DataFrame.count
+
+    def run(self, spark_, config_, explicit_input=None):
+        # one job group per step, so the status tracker credits each job
+        group = f"{run_id}-{self.name}"
+        sc.setJobGroup(group, self.name)
+        try:
+            return real_run(self, spark_, config_, explicit_input)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            step_jobs["jobs"][self.name] = len(
+                sc.statusTracker().getJobIdsForGroup(group)
+            )
+
+    def count(df):
+        caller = sys._getframe(1)
+        if caller.f_code is real_run.__code__:
+            step_jobs["counted"].add(caller.f_locals["self"].name)
+        return real_count(df)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(Stage, "run", run)
+        mp.setattr(DataFrame, "count", count)
+        stats = run_pipeline(spark, config)
     return base, config, stats
 
 
@@ -104,8 +141,47 @@ def test_stats_json_and_resume(pipeline_run, spark):
 
 def test_input_count_recorded(pipeline_run):
     base, config, stats = pipeline_run
-    assert stats["clean"]["input_count"] == stats["ingest"]["output_count"]
-    assert stats["quality"]["input_count"] == stats["clean"]["output_count"]
+    for stage in ALL_STEPS:
+        if stage.input_step is not None:
+            want = stats[stage.input_step]["output_count"]
+            assert stats[stage.name]["input_count"] == want, stage.name
+
+
+def test_runner_carries_producer_output(pipeline_run, step_jobs):
+    """Within one run_pipeline call no step counts an input its producer
+    wrote, and clustering's driver path stays a handful of jobs (23 with
+    the distributed chain)."""
+    base, config, stats = pipeline_run
+    jobs = step_jobs["jobs"]
+    assert set(jobs) == {s.name for s in ALL_STEPS}
+    assert step_jobs["counted"] == set()
+    assert jobs["clustering"] <= 6, jobs
+
+
+def test_limit_and_resume_input_counts(spark, pipeline_run, tmp_path):
+    """A resume_from slice counts its first step's input from disk; later
+    steps take min(limit, producer's output_count)."""
+    base, config, stats = pipeline_run
+    limit = 10
+    new = str(tmp_path / "resume")
+    # a 7-row clustering output on disk (taken from the larger pii output),
+    # which no stats file of this output base knows about
+    spark.read.parquet(step_output_dir(base, "pii")).orderBy("doc_id").limit(
+        7
+    ).write.parquet(step_output_dir(new, "clustering"))
+    spark.read.parquet(step_output_dir(base, "train_tokenizer")).write.parquet(
+        step_output_dir(new, "train_tokenizer")
+    )
+    cfg = dataclasses.replace(config, output_base=new, limit=limit, seq_len=8)
+    st = run_pipeline(spark, cfg, resume_from="tokenize")
+    assert stats["pii"]["output_count"] > 7
+    assert st["tokenize"]["input_count"] == 7
+    assert st["token_packing"]["input_count"] == min(
+        limit, st["tokenize"]["output_count"]
+    )
+    # the limit binds: packing writes more chunks than export may read
+    assert st["token_packing"]["output_count"] > limit
+    assert st["export"]["input_count"] == limit
 
 
 @pytest.mark.full  # gauntlet-length; default profile skips (pytest.ini)

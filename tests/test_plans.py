@@ -95,6 +95,10 @@ def test_minhash_normalizes_outside_shingle_lambda(spark, sf_dir, family):
     assert any("lambdafunction" in ln for ln in lines)
     bad = [ln for ln in lines if "lambdafunction" in ln and "regexp_replace" in ln]
     assert not bad, bad
+    # the code points are staged the same way: a split inside the lambda
+    # would re-split the whole document once per shingle position
+    resplit = [ln for ln in lines if "lambdafunction" in ln and "split(" in ln]
+    assert not resplit, resplit
 
 
 def test_fuzzy_dedup_kept_shape(q):
