@@ -21,7 +21,7 @@ only. Differences from the reference worth knowing:
   (the "model"), `tokenize` broadcast-joins against it;
 - quality LID is the deterministic heuristic scorer (fastText is optional);
 - clustering is size-gated (SURVEY.md §4.2(1,3)): when the signatures
-  have at most ``operators.lsh.DRIVER_MAX_ROWS`` band rows, one bounded
+  have at most ``functions.localframe.DRIVER_MAX_ROWS`` band rows, one bounded
   collect feeds the bucket cap, union-find and keep rule on the driver and
   the removals leave through a broadcast anti-join; past the bound, LSH
   banding, pairing, components and the keep set run distributed;

@@ -1,4 +1,4 @@
-"""Single-slice local DataFrames.
+"""Single-slice local DataFrames, and the driver size gate.
 
 ``SparkSession.createDataFrame(local_rows)`` parallelizes the rows over
 ``defaultParallelism`` Python-RDD partitions. Every later evaluation of the
@@ -12,11 +12,25 @@ probe fixtures) are small by construction, so slice them to
 trip per evaluation, and a single-partition frame also broadcasts and
 coalesces for free. On a cluster nothing changes — local literals are
 driver-bound either way; this only removes per-partition Python overhead.
+
+The driver paths that collect data-sized rows (operators.lsh's dedup and
+component paths, operators.packing's offsets) share one bounded collect
+shape, :func:`bounded_rows`, and lsh's paths one row bound,
+DRIVER_MAX_ROWS (packing has its own, measured for its path). The gates
+read their bound at call time, so tests force the distributed side by
+patching it.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+# Row bound of the driver-side dedup paths: minhash_dedup's band rows,
+# connected_components' edge collect and the indexed screen's two probes.
+DRIVER_MAX_ROWS = 1_000_000
 
 
 def local_df(
@@ -37,3 +51,28 @@ def local_df(
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, n), schema
     )
+
+
+def bounded_rows(df: DataFrame, max_rows: int) -> DataFrame:
+    """``df`` cut to ``max_rows + 1`` rows, every row carrying the cut's row
+    count ``_bound_n``. Past the bound only one row is left, so a large
+    frame collects one row, not ``max_rows + 1`` (:func:`fits_driver`
+    reads the collected count).
+
+    The upstream of ``df`` stays parallel: each input partition stops after
+    ``max_rows + 1`` rows, and only those rows of ``df``'s own columns
+    shuffle into the one partition that takes the limit and the count."""
+    return (
+        df.limit(max_rows + 1)
+        .withColumn("_bound_n", F.count("*").over(Window.partitionBy()))
+        .where(
+            (F.col("_bound_n") <= max_rows)
+            | (F.monotonically_increasing_id() == 0)
+        )
+    )
+
+
+def fits_driver(rows: pa.Table, max_rows: int) -> bool:
+    """Whether a collected :func:`bounded_rows` frame is within
+    ``max_rows``."""
+    return rows.num_rows == 0 or rows.column("_bound_n")[0].as_py() <= max_rows

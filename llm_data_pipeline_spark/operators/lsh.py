@@ -16,7 +16,7 @@ are distributed DataFrame ops, so the whole dedup scales with the cluster:
   keep        : left-anti / left-outer join against the removal set
 
 The driver sees data only behind a size gate with a distributed fallback,
-each bounded by DRIVER_MAX_ROWS rows:
+each bounded by ``functions.localframe.DRIVER_MAX_ROWS`` rows:
 
 - minhash_dedup's keyed band rows: at most DRIVER_MAX_ROWS of them are
   collected once, and the bucket cap, union-find and keep rule run on the
@@ -24,13 +24,13 @@ each bounded by DRIVER_MAX_ROWS rows:
 - connected_components' edge collect;
 - minhash_incremental_dedup_indexed's two probes of the persisted band
   index (the increment's band rows, then the base rows of the buckets
-  they touch);
-- operators.packing.add_global_offsets' (order key, count) rows.
+  they touch).
 
 Both dedup paths share one driver keep rule (:func:`_driver_keep`), and
-every band-row collect has the one bounded shape of :func:`bounded_rows`.
-The gates read DRIVER_MAX_ROWS at call time, so tests force the
-distributed side by patching it.
+every band-row collect has the one bounded shape of
+``localframe.bounded_rows``. The gates read DRIVER_MAX_ROWS at call time,
+so tests force the distributed side by patching it in
+``functions.localframe``.
 """
 
 from __future__ import annotations
@@ -43,14 +43,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 from llm_data_pipeline_spark.functions.checkpoint import cut_lineage
-from llm_data_pipeline_spark.functions.localframe import local_df
+from llm_data_pipeline_spark.functions import localframe
+from llm_data_pipeline_spark.functions.localframe import (
+    bounded_rows,
+    fits_driver,
+    local_df,
+)
 
 DEFAULT_ROWS_PER_BAND = 4
 DEFAULT_BUCKET_CAP = 500
-# Row bound of every driver-side path: minhash_dedup's band rows,
-# connected_components' edge collect, the indexed screen's two probes and
-# packing's offset keys.
-DRIVER_MAX_ROWS = 1_000_000
 
 
 def band_rows(
@@ -262,7 +263,7 @@ def connected_components(
     # lineage so every later action plans a trivial RDD scan. Blocks are
     # freed by the ContextCleaner once the frame is garbage collected.
     edges = edges.transform(cut_lineage, eager=True)
-    if edges.count() <= DRIVER_MAX_ROWS:
+    if edges.count() <= localframe.DRIVER_MAX_ROWS:
         return _driver_dsu_components(edges)
     return _propagation_components(edges, max_iterations)
 
@@ -462,31 +463,6 @@ def _keyed_band_rows(
     )
 
 
-def bounded_rows(df: DataFrame) -> DataFrame:
-    """``df`` cut to DRIVER_MAX_ROWS + 1 rows in one partition, every row
-    carrying the cut's row count ``_bound_n``. Past the bound only the
-    first row is left, so a large frame collects one row, not
-    DRIVER_MAX_ROWS + 1 (:func:`fits_driver` reads the collected count).
-    One partition lets the limit take its rows in one task."""
-    return (
-        df.coalesce(1)
-        .limit(DRIVER_MAX_ROWS + 1)
-        .withColumn("_bound_n", F.count("*").over(Window.partitionBy()))
-        .where(
-            (F.col("_bound_n") <= DRIVER_MAX_ROWS)
-            | (F.monotonically_increasing_id() == 0)
-        )
-    )
-
-
-def fits_driver(rows: pa.Table) -> bool:
-    """Whether a collected :func:`bounded_rows` frame is within the bound."""
-    return (
-        rows.num_rows == 0
-        or rows.column("_bound_n")[0].as_py() <= DRIVER_MAX_ROWS
-    )
-
-
 def _driver_keep(
     rows: pa.Table, base_bhs: list | tuple = (), base_docs: list | tuple = ()
 ) -> tuple[dict, list]:
@@ -650,11 +626,12 @@ def minhash_incremental_dedup_indexed(
     # the counts side of the join stays parallel. The lazy lineage cut is
     # materialized by Q1's own job, and Q2's probe reads it instead of
     # broadcasting the counts table again.
-    probed = bounded_rows(bn).join(counts, "bh", "left").transform(
+    bound = localframe.DRIVER_MAX_ROWS
+    probed = bounded_rows(bn, bound).join(counts, "bh", "left").transform(
         cut_lineage, eager=False
     )
     inc = probed.toArrow()
-    if fits_driver(inc):
+    if fits_driver(inc, bound):
         out = _driver_screen(index_bands, new_sig, probed, inc, bucket_cap, id_col)
         if out is not None:
             return out
@@ -716,7 +693,7 @@ def _driver_screen(
     base_bhs, base_docs = [], []
     if pc.sum(rows["base_n"]).as_py():
         q2_rows = pc.sum(base_n.filter(pc.less_equal(base_n, bucket_cap)))
-        if q2_rows.as_py() > DRIVER_MAX_ROWS:
+        if q2_rows.as_py() > localframe.DRIVER_MAX_ROWS:
             return None
         probe = probed.where(F.col("base_n") <= bucket_cap).select("bh")
         # hinted: the checkpointed probe has no size estimate, and a
@@ -820,7 +797,7 @@ def minhash_dedup(
 
     Size gate. When ``df_sig`` has at most DRIVER_MAX_ROWS band rows, they
     are collected once (the keyed md5 rows of the band index, bounded by
-    :func:`bounded_rows`), and the driver applies the cap
+    ``localframe.bounded_rows``), and the driver applies the cap
     2 <= n <= ``bucket_cap`` in Arrow, then :func:`_driver_keep` (the daily
     screen's union-find and keep rule, with no base rows). The removals
     leave ``df_sig`` through a broadcast left-anti join with one Arrow
@@ -835,8 +812,10 @@ def minhash_dedup(
     left-anti join against the removal set, which is counted in one job
     when ``stats`` is given.
     """
-    rows = bounded_rows(_keyed_band_rows(df_sig, rows_per_band, id_col)).toArrow()
-    if fits_driver(rows):
+    bound = localframe.DRIVER_MAX_ROWS
+    keyed = _keyed_band_rows(df_sig, rows_per_band, id_col)
+    rows = bounded_rows(keyed, bound).toArrow()
+    if fits_driver(rows, bound):
         sizes = rows.group_by("bh").aggregate([("bh", "count")])
         n = sizes["bh_count"]
         in_cap = sizes.filter(
@@ -854,12 +833,13 @@ def minhash_dedup(
             schema=f"doc_id {id_type}, component {id_type}",
         )
         # one partition, as AQE leaves the distributed path's shuffle join
-        # at this size: a map-side join writes one file per input split
+        # at this size: a map-side join writes one file per input split.
+        # A shuffle, not coalesce(1), so the scan and join stay parallel.
         kept = df_sig.join(
             F.broadcast(_removal_frame(df_sig, removed, id_col)),
             F.col(id_col) == F.col("_rm_doc_id"),
             "left_anti",
-        ).coalesce(1)
+        ).repartition(1)
         return kept, comps
 
     # Stage the band rows: candidate_pairs consumes them twice (the

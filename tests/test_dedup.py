@@ -80,7 +80,7 @@ def test_connected_components_paths_agree(spark, monkeypatch):
     """The size-gated driver-DSU path and the distributed label-propagation
     path must label identically (chain, triangle-with-tail, singletons,
     cross-links arriving in adverse order)."""
-    from llm_data_pipeline_spark.operators import lsh
+    from llm_data_pipeline_spark.functions import localframe
 
     edges = spark.createDataFrame(
         [
@@ -93,7 +93,7 @@ def test_connected_components_paths_agree(spark, monkeypatch):
         r.doc_id: r.component
         for r in connected_components(edges).collect()
     }
-    monkeypatch.setattr(lsh, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(localframe, "DRIVER_MAX_ROWS", 0)
     dist = {
         r.doc_id: r.component for r in connected_components(edges).collect()
     }
@@ -156,7 +156,7 @@ def test_minhash_dedup_driver_matches_distributed(spark, monkeypatch):
     """minhash_dedup's driver path (one bounded band-row collect, Arrow
     cap, union-find, keep rule) and its distributed twin give the same
     kept ids, components and removed_count, with and without ``ts``."""
-    from llm_data_pipeline_spark.operators import lsh
+    from llm_data_pipeline_spark.functions import localframe
 
     sig = _bucket_case_signatures(spark)
     frames = {"ts": sig, "no_ts": sig.drop("ts")}
@@ -173,7 +173,7 @@ def test_minhash_dedup_driver_matches_distributed(spark, monkeypatch):
         )
 
     driver = {name: run(f) for name, f in frames.items()}
-    monkeypatch.setattr(lsh, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(localframe, "DRIVER_MAX_ROWS", 0)
     distributed = {name: run(f) for name, f in frames.items()}
     assert driver == distributed
     kept, comps, removed = driver["ts"]
@@ -439,6 +439,7 @@ def test_indexed_screen_driver_path_matches_distributed(spark, monkeypatch):
     chosen by hand; bucket_cap=3."""
     from pyspark.sql import functions as F
 
+    from llm_data_pipeline_spark.functions import localframe
     from llm_data_pipeline_spark.operators import lsh
     from llm_data_pipeline_spark.plans import inspect as I
 
@@ -487,7 +488,7 @@ def test_indexed_screen_driver_path_matches_distributed(spark, monkeypatch):
     driver = [screen(inc) for inc in increments]
     # at a bound of 0 every non-empty increment overflows Q1; the empty
     # one has 0 band rows and takes the driver path on both sides
-    monkeypatch.setattr(lsh, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(localframe, "DRIVER_MAX_ROWS", 0)
     distributed = [screen(inc) for inc in increments]
 
     for (d_out, d_kept), (x_out, x_kept) in zip(driver, distributed):

@@ -161,7 +161,7 @@ def test_global_offsets_driver_matches_range(spark, monkeypatch):
     """add_global_offsets' driver path (one bounded collect, driver cumsum,
     broadcast join) gives the range path's rows and totals, NULL key
     first; a duplicate key falls back to the range path."""
-    from llm_data_pipeline_spark.operators import lsh, packing
+    from llm_data_pipeline_spark.operators import packing
 
     df = spark.createDataFrame(
         [(None if i == 7 else i, (i * 37) % 11 + 1, f"p{i}") for i in range(300)],
@@ -178,7 +178,7 @@ def test_global_offsets_driver_matches_range(spark, monkeypatch):
         return out.columns, sorted(map(tuple, out.collect()), key=repr), totals
 
     driver = [run(df), run(dup)]
-    monkeypatch.setattr(lsh, "DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(packing, "OFFSETS_DRIVER_MAX_ROWS", 0)
     assert packing._driver_offsets(df, "n", ["k"], "ord") is None
     assert driver == [run(df), run(dup)]
     rows = {r[0]: r for r in driver[0][1]}
