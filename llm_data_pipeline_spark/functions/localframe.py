@@ -61,7 +61,9 @@ def bounded_rows(df: DataFrame, max_rows: int) -> DataFrame:
 
     The upstream of ``df`` stays parallel: each input partition stops after
     ``max_rows + 1`` rows, and only those rows of ``df``'s own columns
-    shuffle into the one partition that takes the limit and the count."""
+    shuffle into the one partition that takes the limit and the count. A
+    one-partition ``df`` plans no shuffle, and its one task stops reading
+    after ``max_rows + 1`` rows."""
     return (
         df.limit(max_rows + 1)
         .withColumn("_bound_n", F.count("*").over(Window.partitionBy()))

@@ -625,10 +625,14 @@ def minhash_incremental_dedup_indexed(
     # Q1. The increment side is bounded before the join (bounded_rows), so
     # the counts side of the join stays parallel. The lazy lineage cut is
     # materialized by Q1's own job, and Q2's probe reads it instead of
-    # broadcasting the counts table again.
+    # broadcasting the counts table again. new_sig is materialized, so one
+    # partition reads it cheaply and spares the limit's shuffle stage (one
+    # Spark job per increment).
     bound = localframe.DRIVER_MAX_ROWS
-    probed = bounded_rows(bn, bound).join(counts, "bh", "left").transform(
-        cut_lineage, eager=False
+    probed = (
+        bounded_rows(bn.coalesce(1), bound)
+        .join(counts, "bh", "left")
+        .transform(cut_lineage, eager=False)
     )
     inc = probed.toArrow()
     if fits_driver(inc, bound):

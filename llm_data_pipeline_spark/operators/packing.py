@@ -90,8 +90,9 @@ def add_global_offsets(
 
     strategy='window': single global-order running-sum window (correct at
     any size, bottlenecked by the one-partition window at extreme scale).
-    strategy='partitioned': identical output, no single-partition stage
-    past the driver gate.
+    strategy='partitioned': identical output, no data-sized
+    single-partition stage (the bounded collect's one-partition limit sees
+    at most ``OFFSETS_DRIVER_MAX_ROWS + 1`` rows).
 
     - At most ``OFFSETS_DRIVER_MAX_ROWS`` rows: the (order key, count)
       rows are collected once as Arrow (bounded by
@@ -107,10 +108,10 @@ def add_global_offsets(
       lineage cut (11 Spark jobs for the pipeline's token_packing step on
       perfbench's 80-doc corpus). The bound is the measured crossover:
       with 2-32 tokens per document, local[4], the offsets (pack_chunks)
-      took 0.25 (0.51) s on the driver path against 0.58 (0.77) s on the
-      range path at 10k documents, 0.88 (1.59) against 0.95 (1.60) s at
-      100k, 1.77 (3.42) against 1.51 (2.06) s at 300k and 6.18 (9.50)
-      against 3.14 (5.13) s at 1M.
+      took 0.56 (0.92) s on the driver path against 0.73 (1.25) s on the
+      range path at 30k documents, 0.78 (1.55) against 0.82 (1.52) s at
+      100k, 1.59 (2.46) against 1.15 (2.07) s at 300k and 3.61 (5.48)
+      against 3.17 (4.80) s at 1M.
     - Otherwise a distributed two-pass prefix sum: range partition on the
       order key, cumsum within partitions, add broadcast per-partition
       bases.
